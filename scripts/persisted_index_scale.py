@@ -40,8 +40,9 @@ SF01 = "/root/testdata/sf0.1"
 def index_dir_for(sf_dir: str, nlist: int) -> str:
     import tempfile
 
-    st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-    fp = f"{st.st_mtime_ns:x}_{st.st_size:x}"
+    from yet_another_map_reduce_spark.caching import data_version
+
+    fp = data_version(os.path.join(sf_dir, "embeddings.parquet"))
     key = sf_dir.strip("/").replace("/", "_")
     return os.path.join(
         tempfile.gettempdir(), f"ivfpq_index_{key}_{fp}_nl{nlist}"

@@ -123,15 +123,15 @@ def test_fingerprint_tracks_module_constants():
 
     # runtime caches are session state, not behavior: populating one
     # must NOT drift the fingerprint of queries that read it
-    from yet_another_map_reduce_spark import queries as qmod
+    from yet_another_map_reduce_spark import caching
 
     bpe_q = "text_bpe_tokenize"
     clean = fp.query_fingerprint(bpe_q, QUERIES, ORACLES)
-    qmod._BPE_MERGES_CACHE[("sentinel",)] = [("a", "b")]
+    caching._MEMO[("sentinel",)] = [("a", "b")]
     try:
         assert fp.query_fingerprint(bpe_q, QUERIES, ORACLES) == clean
     finally:
-        qmod._BPE_MERGES_CACHE.pop(("sentinel",))
+        caching._MEMO.pop(("sentinel",))
 
     # data-table constants appear in the transitive closure by value
     srcs = fp._transitive_sources(text.synthetic_word_counts)
@@ -335,3 +335,53 @@ def test_shared_only_drift_does_not_outrank_direct_rewrite(tmp_path):
     # the shared-only invalidation still precedes unchanged green rows
     unchanged = greens[3]
     assert ordered.index(shared_only) < ordered.index(unchanged)
+
+
+def test_trained_models_retrain_when_source_data_changes(spark, sf_dir, tmp_path):
+    """Models memoized by ``caching.trained`` are keyed on the data
+    version of their source file: an unchanged file is a memo hit, and
+    the same file with a new mtime (data regenerated at the same path)
+    retrains instead of serving stale PQ codebooks or BPE merges."""
+    import os
+    import shutil
+
+    from yet_another_map_reduce_spark.queries import _bpe_merges, _pq_books
+    from yet_another_map_reduce_spark.sources.readers import read_table
+
+    d = str(tmp_path)
+    for table, model in (("embeddings", _pq_books), ("documents", _bpe_merges)):
+        path = os.path.join(d, f"{table}.parquet")
+        shutil.copyfile(os.path.join(sf_dir, f"{table}.parquet"), path)
+        first = model(read_table(spark, d, table), d)
+        assert model(read_table(spark, d, table), d) is first
+        st = os.stat(path)
+        os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns + 10**9))
+        again = model(read_table(spark, d, table), d)
+        assert again is not first, f"{model.__name__} served a stale model"
+        assert again == first  # same bytes, deterministic training
+
+
+def test_data_identity_decided_in_one_place():
+    """The file-identity check (``st_mtime_ns``) lives only in
+    ``caching.data_version``, and the package keeps exactly one model
+    memo, so the staleness decision cannot fork into per-caller copies
+    again."""
+    import pathlib
+    import re
+
+    root = pathlib.Path(__file__).resolve().parents[1]
+    sources = {
+        p.relative_to(root).as_posix(): p.read_text(encoding="utf-8")
+        for sub in ("yet_another_map_reduce_spark", "scripts")
+        for p in (root / sub).rglob("*.py")
+    }
+    assert [p for p, src in sources.items() if "st_mtime_ns" in src] == [
+        "yet_another_map_reduce_spark/caching.py"
+    ]
+    memos = [
+        (p, m)
+        for p, src in sources.items()
+        if p.startswith("yet_another_map_reduce_spark/")
+        for m in re.findall(r"^(\w*_MEMO)\s*[:=]", src, re.M)
+    ]
+    assert memos == [("yet_another_map_reduce_spark/caching.py", "_MEMO")]

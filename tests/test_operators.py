@@ -1998,6 +1998,30 @@ def test_banded_hamming_pairs_shared_helper(spark):
         banded_hamming_pairs(df, "h", "id", bits=58, bands=2, max_hamming=3)
 
 
+
+def test_banded_hamming_single_band_uncapped_matches_capped(spark):
+    """bands=1 (exact-duplicate hashes, max_hamming=0): the uncapped
+    path has no earlier band to test, so it must build no first-band
+    filter (greatest() over a single argument is rejected) and return
+    the same pairs as the capped ``.distinct()`` path."""
+    from yet_another_map_reduce_spark.operators.dedup import banded_hamming_pairs
+
+    rows = [(1, 7), (2, 7), (3, 7), (4, 9), (5, 9), (6, 12)]
+    df = spark.createDataFrame(rows, "id long, h long")
+
+    def pairs(cap):
+        return sorted(
+            tuple(r)
+            for r in banded_hamming_pairs(
+                df, hash_col="h", id_col="id", bits=8, bands=1,
+                max_hamming=0, max_bucket_size=cap,
+            ).collect()
+        )
+
+    got = pairs(None)
+    assert got == pairs(1000)
+    assert got == [(1, 2, 0), (1, 3, 0), (2, 3, 0), (4, 5, 0)]
+
 def test_banded_hamming_capped_buckets_names_the_drops(spark):
     """The exclusion report is exactly the complement of the capped
     pairs call: with cap 1 every >=2 bucket is suppressed, and the
@@ -2611,6 +2635,25 @@ def test_local_relation_matches_plain_createdataframe(spark):
     d = local_relation(spark, [{"k": "v1"}, {"k": "v2"}], "k string")
     assert sorted(r["k"] for r in d.collect()) == ["v1", "v2"]
 
+
+
+def test_local_relation_propagates_non_conversion_errors(spark, monkeypatch):
+    """Only Arrow CONVERSION failures take the pickled fallback; any
+    other error on the Arrow path is a defect and must surface instead
+    of being hidden behind a silently slower plan."""
+    import pyarrow as pa
+    import pytest
+
+    from yet_another_map_reduce_spark.localrel import local_relation
+
+    class BrokenTable:
+        @staticmethod
+        def from_arrays(*args, **kwargs):
+            raise RuntimeError("arrow path defect")
+
+    monkeypatch.setattr(pa, "Table", BrokenTable)
+    with pytest.raises(RuntimeError, match="arrow path defect"):
+        local_relation(spark, [(1,)], "a long")
 
 def test_dlit_non_finite_literals(spark):
     """r15 ADVICE: repr-based double literals produced 'nanD'/'infD'

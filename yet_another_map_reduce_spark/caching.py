@@ -26,17 +26,28 @@ session) references until released; release drops every entry,
 including those from already-stopped SparkSessions (unpersist on a
 stopped session is a no-op here, and the entry is discarded either
 way, so dead sessions cannot leak through the tracker).
+
+``trained`` is the one memo for driver-side models (BPE merges, PQ
+codebooks, corpus row counts): trained once per DATA VERSION of the
+files they were learned from, then shared by every query in the
+process.  The key is each source file's ``data_version`` (mtime_ns and
+size), so data regenerated at the same path retrains instead of
+silently reusing a stale model.  The memo holds plain Python values,
+never relations, and is independent of the relation tracker above.
 """
 
 from __future__ import annotations
 
+import os
 import threading
+from collections.abc import Callable, Iterable
 
 from pyspark.sql import DataFrame
 from pyspark.storagelevel import StorageLevel
 
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []
+_MEMO: dict[tuple, object] = {}
 
 
 def tracked_cache(
@@ -69,3 +80,28 @@ def release_operator_caches() -> int:
 def tracked_count() -> int:
     with _LOCK:
         return len(_TRACKED)
+
+
+def data_version(path: str) -> str:
+    """Identity of a data file as ``{mtime_ns:x}_{size:x}``, or
+    ``"nofp"`` when it cannot be stat'ed.  The one place the repo
+    decides whether a file changed: model memo keys and persisted-index
+    directory names both derive from it."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        return "nofp"
+    return f"{st.st_mtime_ns:x}_{st.st_size:x}"
+
+
+def trained(files: Iterable[str], params: tuple, fn: Callable[[], object]):
+    """``fn()``, memoized per (each file's absolute path and
+    ``data_version``, ``params``).  ``params`` names the model and its
+    hyperparameters; ``fn`` trains it from those files."""
+    key = (
+        tuple((os.path.abspath(f), data_version(f)) for f in files),
+        params,
+    )
+    if key not in _MEMO:
+        _MEMO[key] = fn()
+    return _MEMO[key]

@@ -381,15 +381,3 @@ def classify_rewritten(
         if any(spread.get(k, 0) < threshold for k in changed):
             direct.add(q)
     return rewritten, direct
-
-
-def rewritten_since_green(
-    root: str,
-    green_queries: list[str],
-    queries: dict | None = None,
-    oracles: dict | None = None,
-) -> set[str]:
-    """Subset of ``green_queries`` whose current fingerprint differs
-    from the recorded green-time fingerprint — including queries with
-    no record (conservative: unverified provenance == rewritten)."""
-    return classify_rewritten(root, green_queries, queries, oracles)[0]

@@ -13,15 +13,17 @@ driver transfers").
 ``local_relation`` is the shared constructor for every driver-built
 model/grid/probe relation (kmeans centroids, IVF-PQ sidecar models,
 classifier trajectories, threshold grids, heavy-hitter candidates).  It
-is semantics-preserving by construction: on ANY Arrow conversion
-failure (exotic types, overflow, ragged rows) it falls back to the
+is semantics-preserving by construction: on an Arrow conversion
+failure (exotic types, overflow, ragged rows — raised as ImportError,
+TypeError, ValueError or an ``ArrowException``) it falls back to the
 plain ``createDataFrame`` path, and doubles/longs/strings/arrays pass
 through Arrow bit-exactly (pinned by ``test_local_relation_matches_
-plain_createdataframe``).
+plain_createdataframe``).  Any other error is a defect and propagates.
 """
 
 from __future__ import annotations
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
@@ -33,7 +35,6 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
     path.  ``schema`` is a DDL string or ``StructType``."""
     data = rows if isinstance(rows, list) else list(rows)
     try:
-        import pyarrow as pa
         from pyspark.sql.pandas.types import to_arrow_schema
         from pyspark.sql.types import _parse_datatype_string
 
@@ -54,5 +55,5 @@ def local_relation(spark: SparkSession, rows, schema) -> DataFrame:
         ]
         tbl = pa.Table.from_arrays(arrays, schema=arrow_schema)
         return spark.createDataFrame(tbl, schema=st)
-    except Exception:
+    except (ImportError, TypeError, ValueError, pa.ArrowException):
         return spark.createDataFrame(data, schema)

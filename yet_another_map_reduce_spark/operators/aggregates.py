@@ -117,12 +117,13 @@ def percentile_exact_dist(
        property test against ``F.percentile`` itself).
 
     Contract / caveats (callers must hold these for exact equivalence):
-    values non-null and finite (a group with ONLY nulls is dropped
-    here, where ``percentile`` would emit NULL; NaN sorts before
-    everything via the null bucket where ``percentile`` sorts it last);
-    the value domain must be wide enough that ``floor`` buckets stay
-    small (true for 2-decimal prices; a domain inside [0,1) would put
-    every row in one bucket).
+    the helper is exact only for finite inputs.  Nulls are skipped (a
+    group with ONLY nulls is dropped here, where ``percentile`` would
+    emit NULL).  NaN is not skipped: Spark's ``floor(NaN)`` casts to
+    long 0, so NaN rows land in bucket 0 beside the values in [0, 1),
+    where ``percentile`` sorts NaN last.  The value domain must be wide
+    enough that ``floor`` buckets stay small (true for 2-decimal prices;
+    a domain inside [0,1) would put every row in one bucket).
     """
     v = F.col(col).cast("double")
     base = df.where(v.isNotNull()).select(

@@ -830,7 +830,9 @@ def banded_hamming_pairs(
                 col = col.bitwiseAND(F.lit((1 << width) - 1))
             return col == 0
 
-        first_band = ~F.greatest(
+        # bands == 1: every pair's only band is its first; greatest()
+        # needs at least two arguments, so there is no filter to build
+        first_band = F.lit(True) if bands == 1 else ~F.greatest(
             F.lit(False),
             *[
                 (F.lit(j) < F.col("band")) & _band_zero(xor, j)

@@ -1,9 +1,10 @@
 """Adaptive input-spread for expensive per-row kernels.
 
 Single-row-group bench parquet cannot be split, so at small scale a
-1-2 MB table feeds an entire Arrow-kernel or heavy-projection stage to
-ONE task while the other cores idle (profiled r16: 0.9-2.3 serial
-CPU-seconds per kernel stage), and the driver's 8-core/32-core scaling
+1-2 MB table feeds an entire Arrow-kernel scoring, synthesis or
+heavy-projection stage to ONE task while the other cores idle
+(profiled r16 at local[32]: 0.9-2.3 serial CPU-seconds per kernel stage
+with 31 cores idle), and the driver's 8-core/32-core scaling
 measurement reads flat.  ``spread_small`` hash-repartitions on the
 given key ONLY when the plan has fewer partitions than the session's
 default parallelism; at scale input splits exceed the core count and

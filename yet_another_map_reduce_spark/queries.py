@@ -43,8 +43,9 @@ from yet_another_map_reduce_spark.operators import (
     windows,
 )
 from yet_another_map_reduce_spark.sources.readers import read_table
-from yet_another_map_reduce_spark.caching import tracked_cache
+from yet_another_map_reduce_spark.caching import data_version, tracked_cache, trained
 from yet_another_map_reduce_spark.localrel import local_relation
+from yet_another_map_reduce_spark.partitioning import spread_small
 from yet_another_map_reduce_spark.streaming.windows import (
     session_windowed,
     sliding_windowed,
@@ -92,24 +93,6 @@ def _sql_word_grams(n: int, toks: str = "w") -> str:
         f"list_transform(generate_series(1, len({toks}) - {n - 1}), "
         f"i -> array_to_string({toks}[i:i+{n - 1}], ' '))"
     )
-
-
-def _spread_small(df: DataFrame, *cols: str) -> DataFrame:
-    """Adaptive parallelism for an expensive per-row kernel/projection
-    over a SMALL input (guide §2.5 input skew): single-row-group local
-    parquet cannot be split, so at bench scale a 1-2 MB table feeds the
-    whole scoring/synthesis stage to ONE task (profiled r16: 1.5-2.3
-    serial CPU-seconds while 31 cores idle) and the 8-core/32-core
-    scaling measurement reads flat.  When the plan has fewer partitions
-    than the session's default parallelism, hash-repartition on the
-    given key; when input splits already exceed the cores — every real
-    at-scale scan — this is a NO-OP, so no corpus-sized shuffle is ever
-    introduced (the guard is what makes this scale-safe rather than a
-    local[32] constant).  Canonical implementation:
-    :func:`yet_another_map_reduce_spark.partitioning.spread_small`."""
-    from yet_another_map_reduce_spark.partitioning import spread_small
-
-    return spread_small(df, *cols)
 
 
 def _plant_short_docs(d: DataFrame) -> DataFrame:
@@ -1284,52 +1267,27 @@ def q_text_chunking(spark: SparkSession, sf_dir: str) -> DataFrame:
     return text.chunk_documents(d, "text", "doc_id", chunk_tokens=32, stride=24)
 
 
-#: train-once memoized BPE merges per (sf_dir, params) — the _pq_books
-#: lifecycle: the tokenizer is data, trained once per corpus version,
-#: injected into every query that tokenizes
-_BPE_MERGES_CACHE: dict = {}
-
-
 def _bpe_merges(
     docs: DataFrame, sf_dir: str, num_merges: int = 16, max_vocab: int = 4096
 ) -> list:
-    import os
-
-    # corpus fingerprint (mtime+size), the same staleness guard the
-    # persisted IVF-PQ index uses: regenerated testdata at the same
-    # path retrains instead of silently reusing stale merges
-    try:
-        st = os.stat(os.path.join(sf_dir, "documents.parquet"))
-        fp = f"{st.st_mtime_ns:x}_{st.st_size:x}"
-    except OSError:
-        fp = "nofp"
-    key = (sf_dir, fp, num_merges, max_vocab)
-    if key not in _BPE_MERGES_CACHE:
-        _BPE_MERGES_CACHE[key] = text.bpe_learn(
+    """Train-once BPE merges per corpus version (``caching.trained``):
+    the tokenizer is data, injected into every query that tokenizes."""
+    return trained(
+        [os.path.join(sf_dir, "documents.parquet")],
+        ("bpe_merges", num_merges, max_vocab),
+        lambda: text.bpe_learn(
             docs, "text", num_merges=num_merges, max_vocab_words=max_vocab
-        )
-    return _BPE_MERGES_CACHE[key]
-
-
-_DOC_COUNT_CACHE: dict[tuple, int] = {}
+        ),
+    )
 
 
 def _table_count(df: DataFrame, sf_dir: str, table: str) -> int:
     """Corpus row count for size-gated tier dispatch (BPE tiers, index
     nlist sizing) — a parquet-metadata count (column-pruned scan, no
-    data read), memoized per (dir, table, file fingerprint) like
-    _bpe_merges."""
-    import os
-
-    try:
-        st = os.stat(os.path.join(sf_dir, f"{table}.parquet"))
-        fp = f"{st.st_mtime_ns:x}_{st.st_size:x}"
-    except OSError:
-        fp = "nofp"
-    key = (sf_dir, table, fp)
-    if key not in _DOC_COUNT_CACHE:
-        _DOC_COUNT_CACHE[key] = df.count()
-    return _DOC_COUNT_CACHE[key]
+    data read), memoized per table version like _bpe_merges."""
+    return trained(
+        [os.path.join(sf_dir, f"{table}.parquet")], ("count",), df.count
+    )
 
 
 def _doc_count(docs: DataFrame, sf_dir: str) -> int:
@@ -1413,18 +1371,18 @@ def _bpe_realistic_merges(num_merges: int = 8192, n_words: int = 20000) -> list:
     non-default arguments train in-process (pure function of the
     arguments, so any engine regenerates the identical table — the
     frozen file's provenance is test-pinned against a retrain)."""
-    key = ("synthetic", n_words, num_merges)
-    if key not in _BPE_MERGES_CACHE:
+
+    def train() -> list:
         if (n_words, num_merges) == (20000, 8192):
             import json
 
             with open(_BPE_8K_FROZEN) as fh:
-                _BPE_MERGES_CACHE[key] = [tuple(p) for p in json.load(fh)["merges"]]
-        else:
-            _BPE_MERGES_CACHE[key] = text.bpe_train_merges(
-                text.synthetic_word_counts(n_words), num_merges
-            )
-    return _BPE_MERGES_CACHE[key]
+                return [tuple(p) for p in json.load(fh)["merges"]]
+        return text.bpe_train_merges(
+            text.synthetic_word_counts(n_words), num_merges
+        )
+
+    return trained([_BPE_8K_FROZEN], ("bpe_synthetic", n_words, num_merges), train)
 
 
 def q_text_bpe_tokenize_8k(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -1475,7 +1433,7 @@ def q_text_bpe_token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     words = F.regexp_extract_all(
         F.lower(F.col("text")), F.lit(text.BPE_WORD_RE), F.lit(0)
     )
-    return _spread_small(d, "doc_id").select(
+    return spread_small(d, "doc_id").select(
         "doc_id",
         F.size(words).cast("bigint").alias("n_words"),
         text.bpe_token_count("text", merges, n_docs=_doc_count(d, sf_dir))
@@ -1997,7 +1955,7 @@ def q_pipeline_training_data(spark: SparkSession, sf_dir: str) -> DataFrame:
     id per fingerprint) → token + chunk accounting.  One scan, one
     window shuffle on the fixed-width fingerprint — the composition a
     100 TB corpus-prep job runs nightly."""
-    d = _spread_small(read_table(spark, sf_dir, "documents"), "doc_id")
+    d = spread_small(read_table(spark, sf_dir, "documents"), "doc_id")
     scored = d.select(
         "doc_id",
         text.lang_id("text").alias("lang"),
@@ -2139,25 +2097,23 @@ def q_ann_quantized_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_PQ_BOOKS_CACHE: dict[tuple, list] = {}
-
-
 def _pq_books(
     emb: DataFrame, sf_dir: str, m: int = 4, k: int = 8, iterations: int = 2
 ) -> list:
-    """Train-once PQ codebooks, memoized per (sf_dir, params) for the
-    life of the process: training is deterministic (6-rounded Lloyd's
-    fixpoints), so every query that needs this model — pq_topk,
-    pq_recall, ivfpq, the persisted index — shares ONE training pass
-    instead of each rescanning the corpus twice for an identical
-    result.  The FAISS lifecycle: the model is data, trained once per
-    corpus version, injected into every search."""
-    key = (sf_dir, m, k, iterations)
-    if key not in _PQ_BOOKS_CACHE:
-        _PQ_BOOKS_CACHE[key] = similarity.train_pq_codebooks(
+    """Train-once PQ codebooks, memoized per corpus version
+    (``caching.trained``) for the life of the process: training is
+    deterministic (6-rounded Lloyd's fixpoints), so every query that
+    needs this model — pq_topk, pq_recall, ivfpq, the persisted index —
+    shares ONE training pass instead of each rescanning the corpus
+    twice for an identical result.  The FAISS lifecycle: the model is
+    data, trained once per corpus version, injected into every search."""
+    return trained(
+        [os.path.join(sf_dir, "embeddings.parquet")],
+        ("pq_books", m, k, iterations),
+        lambda: similarity.train_pq_codebooks(
             emb, "vec_id", "embedding", m=m, k=k, iterations=iterations
-        )
-    return _PQ_BOOKS_CACHE[key]
+        ),
+    )
 
 
 def q_ann_pq_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -2244,20 +2200,15 @@ def q_ann_ivfpq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     per query grows as sqrt(n), not n.  The oracle replays the SAME
     sizing from its own count() (subquery LIMIT on the centroid-seed
     CTE, the dedup_semantic pattern)."""
-    import os
     import tempfile
 
     emb = read_table(spark, sf_dir, "embeddings")
-    # cache key includes a corpus fingerprint (mtime+size of the source
-    # parquet): regenerated testdata at the same path gets a fresh
-    # index instead of a stale one, and the CURRENT-pointer commit in
-    # build_ivfpq_index makes concurrent rebuilds race-free (each
-    # writes its own versioned subdir; the pointer swap is atomic)
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        fp = f"{st.st_mtime_ns:x}_{st.st_size:x}"
-    except OSError:
-        fp = "nofp"
+    # cache key includes the corpus data_version: regenerated testdata
+    # at the same path gets a fresh index instead of a stale one, and
+    # the CURRENT-pointer commit in build_ivfpq_index makes concurrent
+    # rebuilds race-free (each writes its own versioned subdir; the
+    # pointer swap is atomic)
+    fp = data_version(os.path.join(sf_dir, "embeddings.parquet"))
     from yet_another_map_reduce_spark.operators.dedup import sized_nlist
 
     nlist = sized_nlist(_table_count(emb, sf_dir, "embeddings"))
@@ -2304,15 +2255,10 @@ def q_ann_ivfpq_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     the whole append lifecycle.  This is the nightly-ingest story at
     100 TB: refresh cost is proportional to the new batch, not the
     corpus."""
-    import os
     import tempfile
 
     emb = read_table(spark, sf_dir, "embeddings")
-    try:
-        st = os.stat(os.path.join(sf_dir, "embeddings.parquet"))
-        fp = f"{st.st_mtime_ns:x}_{st.st_size:x}"
-    except OSError:
-        fp = "nofp"
+    fp = data_version(os.path.join(sf_dir, "embeddings.parquet"))
     key = sf_dir.strip("/").replace("/", "_")
     index_dir = os.path.join(
         tempfile.gettempdir(), f"ivfpq_append_{key}_{fp}"
@@ -2652,7 +2598,7 @@ def q_multimodal_video_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     from yet_another_map_reduce_spark.functions import md5_hash64
     from yet_another_map_reduce_spark.operators import multimodal
 
-    d = _spread_small(
+    d = spread_small(
         read_table(spark, sf_dir, "documents").where(F.col("doc_id") < 400),
         "doc_id",
     )
@@ -3089,7 +3035,7 @@ def q_pack_sequences_bpe(spark: SparkSession, sf_dir: str) -> DataFrame:
     # guarded spread: the BPE-count projection is ~1.1 serial CPU-s
     # over the unsplittable bench file (r16 profile); packing itself is
     # layout-invariant by contract, so the spread cannot change rows
-    dd = _spread_small(d, "doc_id").select(
+    dd = spread_small(d, "doc_id").select(
         "doc_id",
         text.bpe_token_count("text", merges, n_docs=_doc_count(d, sf_dir))
         .cast("bigint")

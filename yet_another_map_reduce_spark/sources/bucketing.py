@@ -36,14 +36,6 @@ def write_bucketed(
     writer.saveAsTable(table)
 
 
-def read_bucketed_table(spark: SparkSession, table: str) -> DataFrame:
-    """Catalog-table read (renamed from ``read_table``, which shadowed
-    ``readers.read_table`` with an incompatible (spark, table) vs
-    (spark, sf_dir, name) signature — a wrong-import away from treating
-    a table name as a path)."""
-    return spark.table(table)
-
-
 def cobucketed_join(
     spark: SparkSession,
     left_table: str,

@@ -47,15 +47,13 @@ def socket_stream(
 ) -> DataFrame:
     """TCP line source (Spark's built-in ``socket`` connector):
     newline-delimited UTF-8 lines as a ``value string`` stream —
-    the one NETWORK connector this container can execute end to end
-    (loopback; pinned by ``test_socket_stream_reads_loopback_lines``),
-    which is why it exists here next to the plan-only Kafka wrappers.
+    a network source that runs end to end against loopback (pinned by
+    ``test_socket_stream_reads_loopback_lines``).
 
     At-most-once by design (no offsets, no replay — a reconnect loses
     the gap), so its production role is demos and integration tests;
-    durable network ingest is Kafka's job
-    (``sources.connectors.read_kafka_stream``), which carries the same
-    ``value``-column contract downstream.
+    durable network ingest needs a replayable source such as Spark's
+    built-in Kafka connector, which delivers the same ``value`` column.
     """
     return (
         spark.readStream.format("socket")
