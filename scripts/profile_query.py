@@ -5,6 +5,9 @@ enabled, then aggregates the log into a per-stage table: wall time,
 task time, shuffle read/write bytes, input bytes, and the first line of
 the stage's callsite — enough to see which operator inside a composed
 query owns the time, without the UI (disabled in this container).
+Under each table: the generated classes the profiled runs compiled and
+their compile milliseconds (``plans.codegen_compiles``; a warm run that
+compiles nothing reuses every class it generated).
 
 Usage:
     python scripts/profile_query.py <query> [query ...]
@@ -21,6 +24,7 @@ import time
 
 sys.path.insert(0, ".")
 
+from yet_another_map_reduce_spark.plans import codegen_compiles  # noqa: E402
 from yet_another_map_reduce_spark.queries import QUERIES  # noqa: E402
 from yet_another_map_reduce_spark.session import build_session  # noqa: E402
 
@@ -40,18 +44,20 @@ def profile(names: list[str], sf_dir: str, runs: int = 1) -> None:
         },
     )
     sc = spark.sparkContext
-    marks: list[tuple[str, float, float]] = []
+    compiles: dict[str, tuple[int, float]] = {}
     for name in names:
         fn = QUERIES[name]
         # warm-up: plan compile + JIT, outside the profiled window
         fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         sc.setJobDescription(f"PROFILE:{name}")
+        n0, ms0 = codegen_compiles(spark)
         t0 = time.perf_counter()
         for _ in range(runs):
             fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
         t1 = time.perf_counter()
+        n1, ms1 = codegen_compiles(spark)
         sc.setJobDescription(None)
-        marks.append((name, t0, t1))
+        compiles[name] = (n1 - n0, ms1 - ms0)
         print(f"{name}: {(t1 - t0) / runs:.3f}s/run ({runs} runs)")
     spark.stop()
 
@@ -139,6 +145,8 @@ def profile(names: list[str], sf_dir: str, runs: int = 1) -> None:
             )
         njobs = len({jid for jid, _, _ in rows})
         print(f"  stage-wall total {tot:.2f}s across {njobs} jobs, {len(rows)} stages")
+        n, ms = compiles[qname]
+        print(f"  codegen: {n} classes compiled, {ms:.0f} ms")
 
 
 if __name__ == "__main__":

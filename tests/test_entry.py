@@ -22,6 +22,27 @@ def test_registry_consistency():
     assert "flagship_max_price" in o
 
 
+def test_rerun_plans_reuse_generated_code(spark, sf_dir):
+    """A session that re-runs its plans reuses their compiled code: the
+    three benchmark curation queries generate more classes than Spark's
+    default 100-entry codegen cache holds, so without the session's
+    codegen settings the second round recompiles most of them.  Defined
+    before ``test_all_queries_run_at_smoke_sf`` so its first round
+    starts cold: classes compiled by an earlier test are cache hits."""
+    from yet_another_map_reduce_spark.plans import codegen_compiles
+    from yet_another_map_reduce_spark.queries import QUERIES
+
+    names = ["quality_classifier_train_avg", "text_bpe_tokenize_8k", "pipeline_curation_v2"]
+    compiled = []
+    for _round in range(2):
+        before, _ = codegen_compiles(spark)
+        for name in names:
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        compiled.append(codegen_compiles(spark)[0] - before)
+    assert compiled[0] > 0
+    assert compiled[1] <= compiled[0] / 4, compiled
+
+
 def test_all_queries_run_at_smoke_sf(spark, sf_dir):
     """Every registered query must at least plan+execute at sf0.001."""
     for name, fn in entry_mod.queries().items():

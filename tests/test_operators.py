@@ -1714,11 +1714,13 @@ def test_perceptron_matches_pure_python_reference(spark):
     from yet_another_map_reduce_spark.operators import classify
 
     rng = random.Random(42)
-    for _trial in range(3):
+    # the last trial plants one row whose feature pushes a weight out of
+    # INT range, past 2^31 (its margins stay within int64)
+    for big in (False, False, False, True):
         rows = [
             (rng.choice([1, -1]), rng.randint(-9, 9), rng.randint(-9, 9))
             for _ in range(60)
-        ]
+        ] + ([(1, 2**31 + 1000, 1)] if big else [])
         w = [0, 0, 0]
         expect = []
         for it in range(1, 4):
@@ -1736,6 +1738,11 @@ def test_perceptron_matches_pure_python_reference(spark):
             for r in classify.perceptron_train(df, "y", ["a", "b"], 3).collect()
         ]
         assert got == expect
+        if big:
+            assert max(abs(v) for r in expect for v in r[2:]) > 2**31
+            # every weight is a BIGINT literal in the step's SQL
+            assert all(f"{wk}L * x{k}" in e for e in classify._step_sql(w)
+                       for k, wk in enumerate(w))
 
 
 def test_temperature_mixture_preserves_expected_corpus_size(spark):

@@ -256,6 +256,70 @@ def test_read_table_normalizes_events_ts_layouts(spark, sf_dir, tmp_path):
     assert a == b
 
 
+def test_footer_schema_equals_spark_inference(spark, sf_dir):
+    """read_table declares the schema it reads from the parquet footer;
+    it must be exactly the schema Spark would infer (TIMESTAMP_NTZ for
+    timezone-less timestamps, every field nullable) for every canonical
+    table of every scale factor."""
+    import glob
+    import os
+
+    from yet_another_map_reduce_spark.sources.readers import (
+        TABLES,
+        _events_ts_is_nanos,
+        _footer_schema,
+        _spark_schema,
+    )
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    # every scale factor beside the test one, plus the benchmark's copy
+    sf_dirs = glob.glob(os.path.join(os.path.dirname(sf_dir), "sf*")) + [
+        os.path.join(root, "perfbench", "data", "sf0.01")
+    ]
+    checked = 0
+    for d in sf_dirs:
+        for name in TABLES:
+            p = os.path.join(d, f"{name}.parquet")
+            if not os.path.exists(p):
+                continue
+            footer = _footer_schema(p)
+            if name == "events" and _events_ts_is_nanos(footer):
+                continue  # read through Spark's inference under nanosAsLong
+            assert _spark_schema(footer) == spark.read.parquet(p).schema, p
+            checked += 1
+    assert checked >= len(TABLES) - 1
+
+
+def test_read_table_launches_no_spark_job(spark, sf_dir):
+    """Building a table scan is pure planning: the schema comes from the
+    footer, so no schema-inference job runs (one job per call before)."""
+    import os
+
+    from yet_another_map_reduce_spark.sources.readers import (
+        TABLES,
+        _events_ts_is_nanos,
+        _footer_schema,
+        read_table,
+    )
+
+    sc = spark.sparkContext
+    group = "read_table_launches_no_spark_job"
+    names = [
+        n
+        for n in TABLES
+        if n != "events"
+        or not _events_ts_is_nanos(_footer_schema(os.path.join(sf_dir, "events.parquet")))
+    ]
+    sc.setJobGroup(group, group)
+    try:
+        frames = [read_table(spark, sf_dir, n) for n in names]
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    assert all(f.columns for f in frames)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
+
+
 def test_write_training_shards_is_deterministic_and_bounded(spark, sf_dir, tmp_path):
     import os
 
@@ -1119,6 +1183,7 @@ def test_read_table_nanos_generation_floor_division(spark, tmp_path):
 
     from yet_another_map_reduce_spark.sources.readers import (
         _events_ts_is_nanos,
+        _footer_schema,
         read_table,
     )
 
@@ -1131,7 +1196,7 @@ def test_read_table_nanos_generation_floor_division(spark, tmp_path):
         }
     )
     papq.write_table(tbl, str(sf / "events.parquet"), store_schema=False)
-    assert _events_ts_is_nanos(str(sf / "events.parquet"))
+    assert _events_ts_is_nanos(_footer_schema(str(sf / "events.parquet")))
     rows = {r["event_id"]: r["ts"] for r in read_table(spark, str(sf), "events").collect()}
     # -1 ns floors to -1 us (23:59:59.999999), NOT to epoch
     assert rows[1] == dt.datetime(1969, 12, 31, 23, 59, 59, 999999)

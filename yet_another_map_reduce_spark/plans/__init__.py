@@ -80,6 +80,18 @@ def whole_stage_codegen_ids(df: DataFrame) -> int:
     return int(m.group(1)) if m else 0
 
 
+def codegen_compiles(spark) -> tuple[int, float]:
+    """Generated classes compiled so far in this JVM, and their total
+    compile milliseconds: Spark's ``CodegenMetrics`` compilation count
+    and ``CodeGenerator.compileTime``.  Diff two readings around a
+    query.  Only codegen-cache misses compile, so a re-run plan whose
+    classes are all still cached adds 0."""
+    jvm = spark._jvm
+    n = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME().getCount()
+    ns = jvm.org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator.compileTime()
+    return n, ns / 1e6
+
+
 def observe_metrics(df: DataFrame, name: str, **metric_exprs):
     """Attach named aggregate metrics to a plan via ``Observation`` —
     counters computed *during* the action that consumes ``df``, with

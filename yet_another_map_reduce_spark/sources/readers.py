@@ -11,9 +11,17 @@ from __future__ import annotations
 
 import os
 
+import pyarrow as pa
+import pyarrow.parquet as papq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import StructType
+from pyspark.sql.pandas.types import from_arrow_schema
+from pyspark.sql.types import (
+    LongType,
+    StructField,
+    StructType,
+    TimestampNTZType,
+)
 
 #: Canonical test-table names (TESTDATA.md).
 TABLES = (
@@ -168,26 +176,57 @@ def read_xml(
 _NANOS_CONF_LOCK = __import__("threading").Lock()
 
 
-def _events_ts_is_nanos(path: str) -> bool:
-    """True iff the events parquet stores ``ts`` as TIMESTAMP(NANOS),
-    decided from one file footer via pyarrow — no Spark conf touched."""
-    import pyarrow.parquet as papq
-
+def _footer_schema(path: str) -> pa.Schema | None:
+    """Arrow schema from the parquet footer of ``path`` (a file, or the
+    first ``.parquet`` part of a directory) — the one footer read behind
+    both :func:`read_table`'s declared schema and the NANOS check.
+    ``None`` when there is no footer to read, so the caller can leave
+    the path (and its error) to Spark."""
     p = path
     if os.path.isdir(p):
         parts = sorted(f for f in os.listdir(p) if f.endswith(".parquet"))
         if not parts:
-            return False
+            return None
         p = os.path.join(p, parts[0])
     try:
-        field = papq.read_schema(p).field("ts")
-    except (KeyError, OSError):
-        return False
-    return str(field.type) == "timestamp[ns]"
+        return papq.read_schema(p)
+    except OSError:
+        return None
+
+
+def _events_ts_is_nanos(footer: pa.Schema) -> bool:
+    """True iff the footer stores ``ts`` as TIMESTAMP(NANOS)."""
+    i = footer.get_field_index("ts")
+    return i >= 0 and str(footer.field(i).type) == "timestamp[ns]"
+
+
+def _spark_schema(footer: pa.Schema) -> StructType:
+    """The schema Spark's parquet inference would give: timestamps
+    without a timezone are TIMESTAMP_NTZ (``prefer_timestamp_ntz``;
+    without it ``o_orderdate``/``l_shipdate`` come out as TIMESTAMP) and
+    every field is nullable, as Spark reads every parquet column."""
+    return StructType(
+        [
+            StructField(f.name, f.dataType, True, f.metadata)
+            for f in from_arrow_schema(footer, prefer_timestamp_ntz=True).fields
+        ]
+    )
 
 
 def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one canonical test table from a scale-factor directory.
+
+    The schema comes from the parquet footer via pyarrow and is passed
+    to ``spark.read.schema(...)``, so the read launches NO Spark job.
+    Inference (``spark.read.parquet`` without a schema) is one job per
+    call, and every query reads through here: in a traced perfbench
+    curation pass (sf0.01, local[4], 4 shared vCPUs) the three reads
+    took 0.27 s and 3 of the pass's 13 construction jobs, and with the
+    footer schema 0.04 s and none.  The footer schema equals Spark's
+    inferred one for every table of every test scale factor (pinned in
+    tests/test_sources.py).  The footer is read on every call,
+    deliberately uncached: a regenerated file is picked up without any
+    invalidation.
 
     ``events.parquet``'s ``ts`` physical type has varied across testdata
     generations (TIMESTAMP(NANOS), plain µs TIMESTAMP without timezone);
@@ -197,11 +236,11 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     disk.
     """
     path = os.path.join(sf_dir, f"{name}.parquet")
-    if name != "events":
+    footer = _footer_schema(path)
+    if footer is None:
         return spark.read.parquet(path)
-    # Detect the ts physical type from ONE parquet footer via pyarrow —
-    # no Spark session conf involved — and only flip the session-global
-    # nanosAsLong when the file genuinely is TIMESTAMP(NANOS).  The
+    # Only flip the session-global nanosAsLong when the file genuinely
+    # is TIMESTAMP(NANOS), and let Spark infer under the flip.  The
     # flip races concurrent parquet reads on the same session (another
     # thread's NANOS read in the window silently infers bigint), so:
     # (a) on the common µs-physical generation no flip ever happens and
@@ -212,7 +251,7 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     # dodge the race but pins every events-derived plan to the clone's
     # conf, silently ignoring the caller's runtime conf changes
     # (broadcast thresholds, AQE knobs) for those plans.
-    if _events_ts_is_nanos(path):
+    if name == "events" and _events_ts_is_nanos(footer):
         with _NANOS_CONF_LOCK:
             prev = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong", None)
             spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
@@ -224,9 +263,9 @@ def read_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
                 else:
                     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", prev)
     else:
-        df = spark.read.parquet(path)
-    from pyspark.sql.types import LongType, TimestampNTZType
-
+        df = spark.read.schema(_spark_schema(footer)).parquet(path)
+    if name != "events":
+        return df
     if isinstance(df.schema["ts"].dataType, LongType):
         # exact FLOOR division in bigint: `div` truncates toward zero,
         # which shifts every pre-1970 non-whole-microsecond nanosecond
