@@ -17,13 +17,15 @@ Verb-by-verb mapping to the reference:
   to the filename without extension, exactly the reference's key.
 - ``-r`` (``client.py:73``): the reference fans out chunk fetches,
   merges, SORTS the merged lines, prints them, and saves a local copy.
-  Here: catalog-resolved scan (F2), global sort, stdout print, optional
-  ``--out`` file.
+  Here: catalog-resolved scan (F2) collected through Arrow, sort, stdout
+  print, optional ``--out`` file.
 - ``-mr`` (``client.py:126``): the reference ships mapper.py/reducer.py
   to workers and runs map → hash shuffle → sort → reduce (F3-F6).
   Here: :func:`run_streaming_job` pipes the UNMODIFIED external
-  programs through the same dataflow, and writes reference-style text
-  part-files when ``--output`` is given.
+  programs through the same dataflow as Spark SQL script transformations
+  (the JVM feeds the programs directly; no Python worker, so workers need
+  no copy of this package), and writes reference-style text part-files
+  when ``--output`` is given.
 
 The catalog root defaults to ``./.yamr_catalog`` (override with
 ``--catalog``); ``-w`` stores data under ``<catalog>/data/<name>``.
@@ -65,6 +67,12 @@ def _build_parser() -> argparse.ArgumentParser:
     mr.add_argument("--reducers", type=int, default=3)
     mr.add_argument("--output", default=None, help="text part-file output dir")
     return p
+
+
+def _python_cmd(script: str) -> str:
+    # programs run in the executor's SparkFiles directory, not in the
+    # driver's working directory: name the script by its absolute path
+    return f"{shlex.quote(sys.executable)} {shlex.quote(os.path.abspath(script))}"
 
 
 def main(argv: list[str] | None = None, spark=None) -> int:
@@ -118,7 +126,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
                     file=sys.stderr,
                 )
                 return 2
-            lines = sorted(r[0] for r in df.collect())
+            # collected as one Arrow column: no per-row unpickling
+            lines = sorted(df.toArrow().column(0).to_pylist())
             data = "\n".join(lines)
             if args.out:
                 with open(args.out, "w") as fh:
@@ -136,8 +145,8 @@ def main(argv: list[str] | None = None, spark=None) -> int:
             run_streaming_job(
                 spark,
                 input_path=args.input,
-                mapper_cmd=f"{shlex.quote(sys.executable)} {shlex.quote(args.mapper)}",
-                reducer_cmd=f"{shlex.quote(sys.executable)} {shlex.quote(args.reducer)}",
+                mapper_cmd=_python_cmd(args.mapper),
+                reducer_cmd=_python_cmd(args.reducer),
                 num_reducers=args.reducers,
                 output_path=out_dir,
             )
