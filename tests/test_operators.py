@@ -8,7 +8,7 @@ from pyspark.sql import functions as F
 
 from yet_another_map_reduce_spark.operators import dedup, joins, setops, similarity, windows
 from yet_another_map_reduce_spark.operators.text import lang_id, quality_score
-from yet_another_map_reduce_spark.functions import md5_hash64, shingles
+from yet_another_map_reduce_spark.functions import md5_hash64, shingles, tokens
 
 
 def test_asof_join_backward(spark):
@@ -256,7 +256,7 @@ def test_lsh_bucket_is_stable(spark):
 
 def test_shingles_edge_short_doc(spark):
     df = spark.createDataFrame([("one two",)], "text string")
-    assert df.select(shingles("text", 3).alias("s")).collect()[0]["s"] == []
+    assert df.select(shingles(tokens("text"), 3).alias("s")).collect()[0]["s"] == []
 
 
 def test_md5_hash64_range(spark):
@@ -712,6 +712,49 @@ def test_decontaminate_flags_exact_ngram_overlap(spark):
     assert not out[2]["is_contaminated"] and out[2]["matched_ngrams"] == 0
     # total distinct 4-grams of an 8/9-token doc
     assert out[2]["total_ngrams"] == 5
+
+
+def test_decontaminate_runs_outside_repo_without_package_on_workers(tmp_path):
+    """decontaminate from another working directory, with the repo only
+    on the driver's sys.path (not PYTHONPATH): its grams are built-in
+    expressions, so no Python worker has to import the package."""
+    import json
+    import os
+    import subprocess
+    import sys
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    code = (
+        f"import json, sys; sys.path.insert(0, {repo!r})\n"
+        "from yet_another_map_reduce_spark.session import build_session\n"
+        "from yet_another_map_reduce_spark.operators.text import decontaminate\n"
+        "spark = build_session()\n"
+        "hold = spark.createDataFrame(\n"
+        "    [(100, 'the quick brown fox jumps over the lazy dog')],\n"
+        "    'doc_id long, text string')\n"
+        "train = spark.createDataFrame(\n"
+        "    [(1, 'she saw the quick brown fox jumps right past'),\n"
+        "     (2, 'too short'), (3, None)], 'doc_id long, text string')\n"
+        "rows = decontaminate(train, hold, n=4).orderBy('doc_id').collect()\n"
+        "print(json.dumps([[r[0], r[1], r[2]] for r in rows]))\n"
+    )
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env["SPARK_GRAFT_CPUS"] = "2"
+    proc = subprocess.run(
+        [sys.executable, "-c", code],
+        cwd=tmp_path,
+        env=env,
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert proc.returncode == 0, proc.stderr[-3000:]
+    # (doc_id, total_ngrams, matched_ngrams); short and NULL docs surface
+    assert json.loads(proc.stdout.strip().splitlines()[-1]) == [
+        [1, 6, 2],
+        [2, 0, 0],
+        [3, 0, 0],
+    ]
 
 
 def test_repetition_stats_catches_degenerate_doc(spark):
@@ -2472,68 +2515,113 @@ def test_profile_columns_approx_tier_and_odd_names(spark):
     assert approx["the id"] == 2  # HLL exact at tiny cardinality
 
 
+def _ref_tokens(text: str | None) -> list[str] | None:
+    """Pure-Python ``functions.tokens``: lowercase, collapse runs of
+    Java-regex ``\\s`` (ASCII whitespace) to one space, trim, split."""
+    import re
+
+    if text is None:
+        return None
+    return re.sub(r"[ \t\n\x0b\f\r]+", " ", text.lower()).strip(" ").split(" ")
+
+
+def _ref_grams(text: str | None, k: int) -> list[str]:
+    toks = _ref_tokens(text) or []
+    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]
+
+
+def _ref_chunk_dedup(rows, k: int) -> dict:
+    """Pure-Python ``dedup.chunk_dedup``: id → (n_chunks, n_kept,
+    dedup_text); NULL text is ''; the first (id, chunk_idx) wins."""
+    chunks = {}
+    for d, t in rows:
+        toks = _ref_tokens(t or "")
+        chunks[d] = [" ".join(toks[i : i + k]) for i in range(0, len(toks), k)]
+    first: dict = {}
+    for d in sorted(chunks):
+        for i, c in enumerate(chunks[d]):
+            first.setdefault(c, (d, i))
+    out = {}
+    for d, cs in chunks.items():
+        kept = [c for i, c in enumerate(cs) if first[c] == (d, i)]
+        out[d] = (len(cs), len(kept), " ".join(kept))
+    return out
+
+
 def test_gram_kernels_match_expression_path(spark):
-    """r15 kernel≡expression parity: the map-only Arrow gram kernels
-    (gram_hash_rows, shingle_sets, and the minhash-signature kernel)
-    must be bit-identical to the window/explode expression path they
-    replaced — same UTF-8 gram bytes, same md5, same affine minima.
-    Covers NULL text, short docs (markers), empty string, and repeats."""
-    from yet_another_map_reduce_spark.operators import dedup
+    """Every per-document gram path equals a pure-Python reference:
+    the gram_hash_rows counts kernel, decontaminate's built-in distinct
+    md5 keys (with and without empty-doc markers), the built-in
+    shingle_sets and chunk_dedup's chunking; the minhash kernel equals
+    its expression path over precomputed shingles.  Same UTF-8 gram
+    bytes, same md5, same affine minima.  Covers NULL text, '', short
+    docs, a doc of exactly k tokens, tabs and runs of spaces, unicode
+    and repeated grams."""
+    import hashlib
+    from collections import Counter
 
-    df = spark.createDataFrame(
-        [
-            (1, "the cat sat on the mat the cat sat"),
-            (2, "the  CAT   sat"),  # normalization collapses whitespace
-            (3, "too short"),
-            (4, None),
-            (5, ""),
-        ],
-        ["doc_id", "text"],
-    )
-    # expression twin of gram_hash_rows(counts=True, keep_empty_docs=True)
-    exploded = dedup.exploded_shingles(df, "text", "doc_id", 3, keep_empty_docs=True)
-    from pyspark.sql import functions as F
+    from yet_another_map_reduce_spark.operators import text
 
-    want = {
+    rows = [
+        (1, "the cat sat on the mat the cat sat"),
+        (2, "the  CAT   sat"),  # normalization collapses whitespace
+        (3, "too short"),
+        (4, None),
+        (5, ""),
+        (6, "tab\tseparated\t\twords  and   runs of  spaces"),
+        (7, "ÄÖ ü 漢字 ÄÖ ü 漢字 ÄÖ"),
+        (8, "exactly three tokens"),
+        (9, "a b c a b c a b c"),  # repeated grams
+    ]
+    df = spark.createDataFrame(rows, "doc_id long, text string")
+    ref = {d: _ref_grams(t, 3) for d, t in rows}
+
+    def md5(g: str) -> str:
+        return hashlib.md5(g.encode("utf-8")).hexdigest()
+
+    # gram_hash_rows: (id, md5, multiplicity); one (id, NULL, 0) marker
+    # per doc without a complete gram
+    want = Counter()
+    for d, gs in ref.items():
+        if not gs:
+            want[(d, None, 0)] += 1
+        for g, c in Counter(gs).items():
+            want[(d, md5(g), c)] += 1
+    got = Counter(
         (r["doc_id"], r["g"], r["c"])
-        for r in exploded.select(
-            "doc_id", F.md5("shingle").alias("g")
-        )
-        .groupBy("doc_id", "g")
-        .agg(
-            F.when(
-                F.max(F.col("g").isNotNull().cast("int")) == 1, F.count("g")
-            ).otherwise(F.lit(0)).alias("c")
-        )
-        .collect()
-    }
-    got = {
-        (r["doc_id"], r["g"], r["c"])
-        for r in dedup.gram_hash_rows(
-            df, "text", "doc_id", 3, counts=True, keep_empty_docs=True
-        ).collect()
-    }
-    assert got == want
-    # distinct (no counts, no markers) variant: rows are the distinct keys
-    got2 = {
-        (r["doc_id"], r["g"])
         for r in dedup.gram_hash_rows(df, "text", "doc_id", 3).collect()
-    }
-    assert got2 == {(d, g) for d, g, _ in want if g is not None}
+    )
+    assert got == want
 
-    # shingle_sets: per-doc distinct shingle strings == collect_set twin
-    want_sets = {
-        r["doc_id"]: set(r["s"])
-        for r in exploded.where(F.col("shingle").isNotNull())
-        .groupBy("doc_id")
-        .agg(F.collect_set("shingle").alias("s"))
-        .collect()
-    }
+    # decontaminate's distinct md5 keys, with one (id, NULL) marker per
+    # gram-less doc; without the markers they are the holdout side's keys
+    keys = text._gram_keys(df, "text", "doc_id", 3)
+    assert Counter((r["doc_id"], r["g"]) for r in keys.collect()) == Counter(
+        (d, g) for d, g, _ in want
+    )
+    assert Counter(
+        (r["doc_id"], r["g"]) for r in keys.where(F.col("g").isNotNull()).collect()
+    ) == Counter((d, g) for d, g, _ in want if g is not None)
+
+    # shingle_sets: distinct shingle strings, [] for short docs, NULL text NULL
     got_sets = {
-        r["doc_id"]: set(r["__set"])
+        r["doc_id"]: r["__set"]
         for r in dedup.shingle_sets(df, "text", "doc_id", 3).collect()
     }
-    assert got_sets == want_sets
+    assert got_sets.keys() == ref.keys()
+    assert got_sets.pop(4) is None
+    assert all(len(s) == len(set(s)) for s in got_sets.values())
+    assert {d: set(s) for d, s in got_sets.items()} == {
+        d: set(ref[d]) for d in got_sets
+    }
+
+    # chunk_dedup: chunking, first occurrence and reassembly
+    for k in (2, 3):
+        got_chunks = {
+            r["doc_id"]: (r["n_chunks"], r["n_kept"], r["dedup_text"])
+            for r in dedup.chunk_dedup(df, "text", "doc_id", chunk_tokens=k).collect()
+        }
+        assert got_chunks == _ref_chunk_dedup(rows, k)
 
     # minhash kernel == the expression path over precomputed shingles
     sig_kernel = {
@@ -2548,6 +2636,7 @@ def test_gram_kernels_match_expression_path(spark):
         ).collect()
     }
     assert sig_kernel == sig_expr
+    assert sig_kernel.keys() == {d for d, gs in ref.items() if gs}
 
 
 def test_percentile_exact_dist_bit_identical(spark):

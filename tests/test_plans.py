@@ -1303,3 +1303,28 @@ def test_remove_common_lines_plan_shape(spark, sf_dir):
     # the only aggregate is the key-frequency count (no collect_list)
     assert "SortMergeJoin" not in plan, plan
     assert "collect_list" not in plan, plan
+
+
+def test_word_window_plans(spark, sf_dir):
+    """Word k-grams are built-in array expressions over a token array
+    (``functions.shingles``), not per-document Arrow kernels:
+    decontaminate runs no Python worker at all; ngram_jaccard_pairs's
+    only kernel is MinHash (kept: its built-in forms measured slower),
+    planned once per branch of its candidate self-join; and chunk_dedup
+    builds its chunks map-side — 2 exchanges, where the posexplode →
+    groupBy(id, chunk_idx) token shuffle (planned once per branch of the
+    first-occurrence self-join) made it 4."""
+    import re
+
+    from yet_another_map_reduce_spark.operators import dedup, text
+
+    d = read_table(spark, sf_dir, "documents").select("doc_id", "text")
+    dec = text.decontaminate(
+        d.where(F.col("doc_id") % 10 != 0), d.where(F.col("doc_id") % 10 == 0)
+    )
+    assert "MapInPandas" not in plans.formatted_plan(dec)
+    jac = plans.formatted_plan(dedup.ngram_jaccard_pairs(d, "text", "doc_id"))
+    kernels = re.findall(r"^\(\d+\) MapInPandas$", jac, flags=re.MULTILINE)
+    assert len(kernels) == 2
+    assert len(re.findall(r", signature#\d+\], false$", jac, flags=re.MULTILINE)) == 2
+    assert plans.count_exchanges(dedup.chunk_dedup(d, "text", "doc_id")) == 2

@@ -71,18 +71,28 @@ def tokens(col: Column | str) -> Column:
     return F.split(normalize_text(col), " ")
 
 
-def shingles(col: Column | str, k: int = 3) -> Column:
-    """Word k-gram shingles → array<string> (empty if fewer than k words).
+def shingles(toks: Column | str, k: int = 3) -> Column:
+    """Word k-grams of a token-array column → array<string>, one
+    ``array_join(slice(toks, i, k), ' ')`` per complete window (empty
+    if fewer than k tokens; for a NULL array, NULL under ANSI mode, the
+    Spark 4 default, and empty otherwise, where ``size(NULL)`` is -1).
+    The word k-gram behind ``dedup.exploded_shingles``,
+    ``dedup.shingle_sets`` and ``text.decontaminate``.
 
-    Pure expression: transform over an index sequence + slice, no UDF,
-    so it runs inside whole-stage codegen at any scale.
+    Pass the tokens as a column of their own projection (``tokens(...)
+    .alias(...)`` selected first), not the ``tokens`` expression inline:
+    this expression reads the array twice (its size and the slice), so
+    Catalyst keeps that projection and tokenizes once per row.  An array
+    read only ONCE, inside a lambda, is inlined into it and re-evaluated
+    per element (MinHash over sf0.1: 2.8 s against 0.69 s when the
+    hash array had its own projection).
     """
-    toks = tokens(col)
-    n = F.size(toks)
+    t = F.col(toks) if isinstance(toks, str) else toks
+    n = F.size(t)
     return F.when(n < k, F.array().cast("array<string>")).otherwise(
         F.transform(
             F.sequence(F.lit(1), n - (k - 1)),
-            lambda i: F.concat_ws(" ", F.slice(toks, i, k)),
+            lambda i: F.array_join(F.slice(t, i, k), " "),
         )
     )
 

@@ -30,6 +30,7 @@ from yet_another_map_reduce_spark.operators.quantize import round_half_up
 from yet_another_map_reduce_spark.functions import (
     md5_hash64,
     normalize_text,
+    shingles,
     tokens,
 )
 
@@ -41,47 +42,25 @@ def exploded_shingles(
     k: int = 3,
     keep_empty_docs: bool = False,
 ) -> DataFrame:
-    """One row per word-k-gram shingle: (id, shingle).
+    """One row per word-k-gram shingle: (id, shingle) — ``explode`` of
+    :func:`~yet_another_map_reduce_spark.functions.shingles` over the
+    token array, built in its own projection (map-only, no exchange).
 
-    posexplode the token array once, then assemble shingles with
-    ``lead()`` over (id, position).  An array-side ``transform(sequence,
-    slice(tokens...))`` looks cheaper (no shuffle) but Catalyst's
-    project-collapsing re-evaluates the tokenizer *per element* —
-    measured ~10× slower — and the exploded shape feeds the downstream
-    groupBys without an extra exchange anyway.
+    Catalyst does not re-evaluate the tokenizer per element here
+    (Spark 4.1.2): CollapseProject inlines an array referenced ONCE
+    inside a lambda, but ``shingles`` reads the array twice, so the
+    tokenizer projection stays and runs once per row.
 
     ``keep_empty_docs=True`` keeps exactly ONE ``(id, NULL shingle)``
-    row for every doc with no complete k-gram (fewer than ``k``
-    tokens, or NULL text via ``posexplode_outer``): report-style
-    consumers (decontaminate, boilerplate stats) must surface short
-    docs with zero-count rows — silently omitting them means a
-    downstream keep-join drops the doc from the corpus entirely.  The
-    marker rides the SAME window pass (a second frame over the
-    existing (id, pos) sort, no extra exchange); aggregate with
-    ``count(shingle)`` so the NULL marker never counts.
+    row for every doc with no complete k-gram (fewer than ``k`` tokens,
+    or NULL text) via ``explode_outer``: report-style consumers must
+    surface short docs with zero-count rows — silently omitting them
+    means a downstream keep-join drops the doc from the corpus entirely.
+    Aggregate with ``count(shingle)`` so the NULL marker never counts.
     """
-    tok = df.select(
-        F.col(id_col), F.posexplode_outer(tokens(text_col)).alias("__pos", "__tok")
-    )
-    w = Window.partitionBy(id_col).orderBy("__pos")
-    parts = [F.col("__tok")] + [F.lead("__tok", j).over(w) for j in range(1, k)]
-    with_lead = tok.select(
-        F.col(id_col),
-        F.concat_ws(" ", *parts).alias("shingle"),
-        parts[-1].isNotNull().alias("__ok"),
-        F.col("__pos"),
-    )
-    if not keep_empty_docs:
-        return with_lead.where(F.col("__ok")).drop("__ok", "__pos")
-    any_ok = F.max(F.col("__ok").cast("int")).over(Window.partitionBy(id_col))
-    first_pos = F.col("__pos").isNull() | (F.col("__pos") == 0)
-    return (
-        with_lead.withColumn("__any", any_ok == 1)
-        .where(F.col("__ok") | (~F.col("__any") & first_pos))
-        .select(
-            F.col(id_col),
-            F.when(F.col("__ok"), F.col("shingle")).alias("shingle"),
-        )
+    explode = F.explode_outer if keep_empty_docs else F.explode
+    return df.select(F.col(id_col), tokens(text_col).alias("__toks")).select(
+        F.col(id_col), explode(shingles("__toks", k)).alias("shingle")
     )
 
 
@@ -142,37 +121,24 @@ def _tokenized(
     )
 
 
-def gram_hash_rows(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int,
-    *,
-    counts: bool = False,
-    keep_empty_docs: bool = False,
-) -> DataFrame:
-    """Per-document word-k-gram md5 rows via ONE map-only Arrow kernel:
-    ``(id, g)`` with ``g = md5(shingle)`` hex, DISTINCT per document —
-    plus the gram multiplicity ``c`` when ``counts=True``.
+def gram_hash_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFrame:
+    """Per-document word-k-gram multiplicities via ONE map-only Arrow
+    kernel: ``(id, g, c)`` with ``g = md5(shingle)`` hex, one row per
+    distinct gram of the document and ``c`` its count there.  A doc with
+    no complete k-gram (NULL text included) keeps one ``(id, NULL, 0)``
+    marker row, so ``sum(c)`` folds it to a zero-count row.
 
-    Replaces the ``exploded_shingles → md5 → distinct/groupBy`` chain
-    for report-style consumers (decontaminate, boilerplate stats): the
-    shingle window exchange + sort AND the per-doc distinct shuffle both
-    disappear — per-document gram work is local by definition (guide
-    §2.4: remove shuffles outright; §4.2: batch work in a vectorized
-    kernel).  Bit-identical keys: the kernel md5s the same UTF-8 bytes
-    the ``concat_ws(" ", ...)`` expression produced.
-
-    ``keep_empty_docs=True`` keeps the `(id, NULL g)` marker row for
-    docs with no complete k-gram (NULL text included) — ``c`` rides as
-    0 so ``sum(c)`` folds to the zero-count row the way ``count(g)``
-    does over the NULL marker.
+    Replaces the ``exploded_shingles → md5 → groupBy`` chain for
+    boilerplate stats: per-document gram work is local by definition,
+    so the per-doc count shuffle disappears (guide §2.4).  Bit-identical
+    keys: the kernel md5s the same UTF-8 bytes ``shingles`` joins.  The
+    kernel stays because no built-in counts per-array multiplicities in
+    linear time; distinct keys alone are the built-in
+    ``array_distinct(transform(shingles, md5))`` (``text.decontaminate``).
     """
     import pandas as pd
 
-    schema = f"__id {df.schema[id_col].dataType.simpleString()}, g string"
-    if counts:
-        schema += ", c bigint"
+    schema = f"__id {df.schema[id_col].dataType.simpleString()}, g string, c bigint"
 
     def gen(batches):
         import hashlib
@@ -182,28 +148,20 @@ def gram_hash_rows(
             for did, toks in zip(pdf["__id"], pdf["__toks"]):
                 grams = _doc_grams(toks, k) if toks is not None else []
                 if not grams:
-                    if keep_empty_docs:
-                        out_id.append(did)
-                        out_g.append(None)
-                        out_c.append(0)
+                    out_id.append(did)
+                    out_g.append(None)
+                    out_c.append(0)
                     continue
-                if counts:
-                    agg: dict[bytes, int] = {}
-                    for g in grams:
-                        agg[g] = agg.get(g, 0) + 1
-                    for g, c in agg.items():
-                        out_id.append(did)
-                        out_g.append(hashlib.md5(g).hexdigest())
-                        out_c.append(c)
-                else:
-                    for g in dict.fromkeys(grams):
-                        out_id.append(did)
-                        out_g.append(hashlib.md5(g).hexdigest())
-                        out_c.append(1)
-            cols = {"__id": out_id, "g": out_g}
-            if counts:
-                cols["c"] = pd.array(out_c, dtype="Int64")
-            yield pd.DataFrame(cols)
+                agg: dict[bytes, int] = {}
+                for g in grams:
+                    agg[g] = agg.get(g, 0) + 1
+                for g, c in agg.items():
+                    out_id.append(did)
+                    out_g.append(hashlib.md5(g).hexdigest())
+                    out_c.append(c)
+            yield pd.DataFrame(
+                {"__id": out_id, "g": out_g, "c": pd.array(out_c, dtype="Int64")}
+            )
 
     return (
         _tokenized(df, text_col, id_col)
@@ -216,41 +174,26 @@ def shingle_sets(
     df: DataFrame, text_col: str, id_col: str, k: int, spread: bool = True
 ) -> DataFrame:
     """(id, distinct shingle strings) per document — the per-doc shingle
-    SET as one array row, kernel-computed (no explode, no collect_set
-    shuffle).  Set membership is what downstream ``array_intersect`` /
-    ``array_union`` sizes consume, so element order is free."""
-    import pandas as pd
+    SET as one array row, ``array_distinct(shingles(toks, k))`` in
+    codegen (no explode, no collect_set shuffle, no Python worker).  Set
+    membership is what downstream ``array_intersect`` / ``array_union``
+    sizes consume, so element order is free.  One row per input row: the
+    set is empty for a doc with fewer than ``k`` tokens, and for NULL
+    text it is NULL under ANSI mode (the Spark 4 default), empty
+    otherwise (see ``functions.shingles``).  (Dropping those rows would
+    cost a second tokenization: Catalyst pushes a filter below the
+    tokenizer projection by inlining it.)
 
-    id_t = df.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        for pdf in batches:
-            out_id, out_s = [], []
-            for did, toks in zip(pdf["__id"], pdf["__toks"]):
-                if toks is None:
-                    continue
-                ts = list(toks)
-                if len(ts) < k:
-                    continue
-                out_id.append(did)
-                out_s.append(
-                    list(
-                        dict.fromkeys(
-                            " ".join(ts[i : i + k]) for i in range(len(ts) - k + 1)
-                        )
-                    )
-                )
-            # explicit object Series: pandas turns a list column whose
-            # cells all share one length into a 2D ndarray, which Arrow
-            # cannot convert to list<string>
-            yield pd.DataFrame(
-                {"__id": out_id, "__set": pd.Series(out_s, dtype=object)}
-            )
-
-    return (
-        _tokenized(df, text_col, id_col, spread=spread)
-        .mapInPandas(gen, f"__id {id_t}, __set array<string>")
-        .withColumnRenamed("__id", id_col)
+    A/B against the ``mapInPandas`` kernel this expression replaced
+    (that kernel emitted the same sets, and no row for a doc without a
+    k-gram; 10 interleaved pairs, sf0.1, local[4] on 4 shared
+    vCPUs, medians): ``dedup_ngram_jaccard`` 3.20 → 3.02 s and
+    ``dedup_threshold_sweep`` 3.64 → 3.48 s, each won 7/10 pairs and
+    within the kernel's own spread (IQR 0.47 s) — neutral.
+    """
+    return _tokenized(df, text_col, id_col, spread=spread).select(
+        F.col("__id").alias(id_col),
+        F.array_distinct(shingles("__toks", k)).alias("__set"),
     )
 
 
@@ -342,6 +285,15 @@ def minhash_signatures(
     row).  Values are bit-identical: same UTF-8 gram bytes, same md5,
     same h_a + i*h_b int64 arithmetic (see :func:`_md5_ha_hb`), checked
     by the kernel≡expression parity test.
+
+    Negative result, kernel kept: every built-in form over ``shingles``
+    gave identical signatures and ran slower (sf0.1 documents, local[4]
+    on 4 shared vCPUs, 8 interleaved rounds, medians): this kernel
+    0.63 s; one ``aggregate`` fold carrying all minima 0.69 s; per-seed
+    ``array_min`` over a materialised ``(h_a, h_b)`` array 0.80 s.  The
+    hash array referenced once inside the per-seed lambda took 2.8 s
+    (4 runs, timed apart): CollapseProject inlines a singly-referenced
+    array into the lambda, so md5 ran once per seed.
     """
     # One md5 per shingle; the i-th hash family is the affine combination
     # h_a + i*h_b (Kirsch-Mitzenmacher double hashing) — k families for
@@ -370,7 +322,9 @@ def minhash_signatures(
                 yield pd.DataFrame(
                     {
                         "__id": out_id,
-                        # object Series: see shingle_sets (2D-ndarray trap)
+                        # explicit object Series: pandas turns a list
+                        # column whose cells all share one length into a
+                        # 2D ndarray, which Arrow cannot convert to a list
                         "signature": pd.Series(out_sig, dtype=object),
                     }
                 )
@@ -1311,12 +1265,21 @@ def chunk_dedup(
     is the document with its duplicated chunks removed ('' if nothing
     survives, e.g. a doc that is entirely boilerplate seen earlier).
 
-    Scale shape: tokens are exploded once (the measured-faster shape —
-    see :func:`exploded_shingles` on why array-side ``transform(sequence,
-    slice(...))`` re-evaluates the tokenizer per element), then every
-    stage is a hash aggregation with map-side partials: chunks build on
-    ``(id, chunk_idx)``, first-occurrence is ``min(struct(id, chunk_idx))``
-    grouped by the fixed-width md5 chunk key — deliberately NOT a
+    Scale shape: chunks build per row, map-only —
+    ``posexplode(transform(sequence(0, (size-1) div k), c ->
+    array_join(slice(toks, c*k+1, k), ' ')))`` over the token array in
+    its own projection (referenced twice, so Catalyst keeps it and the
+    tokenizer runs once per row; see :func:`exploded_shingles`).  That
+    replaced a posexplode → ``groupBy(id, chunk_idx)`` → sorted
+    ``collect_list`` rebuild, an exchange over the whole token stream,
+    with identical rows.  A/B, 10 interleaved pairs, local[4] on 4
+    shared vCPUs, medians: ``dedup_chunks`` 0.91 → 0.70 s at sf0.1 (won
+    9/10); ``pipeline_curation_v2`` 1.71 → 1.42 s at sf0.1 (10/10) and
+    1.14 → 1.10 s at sf0.01 (7/10, within the parent's 0.08 s IQR).
+
+    Every later stage is a hash aggregation with map-side partials:
+    first-occurrence is ``min(struct(id, chunk_idx))`` grouped by the
+    fixed-width md5 chunk key — deliberately NOT a
     ``row_number`` window, so a boilerplate chunk repeated 10^9 times
     across 100 TB partially aggregates map-side instead of serializing
     through one sorted window partition — and the surviving chunks
@@ -1325,28 +1288,22 @@ def chunk_dedup(
 
     NULL text is treated as the empty string (one '' chunk), so the
     "one row per input document" contract holds for EVERY input row —
-    a plain posexplode would silently drop NULL-text docs from the
-    output, and a downstream keep-join would drop them from the corpus
-    (the exploded_shingles keep_empty_docs hazard).
+    a plain explode of NULL would silently drop NULL-text docs from the
+    output, and a downstream keep-join would drop them from the corpus.
     """
     k = chunk_tokens
-    tok = df.select(
+    toks = F.col("__toks")
+    chunks = df.select(
+        F.col(id_col), tokens(F.coalesce(F.col(text_col), F.lit(""))).alias("__toks")
+    ).select(
         F.col(id_col),
-        F.posexplode(tokens(F.coalesce(F.col(text_col), F.lit("")))).alias(
-            "__pos", "__tok"
-        ),
-    )
-    chunks = tok.groupBy(
-        F.col(id_col), F.floor(F.col("__pos") / k).cast("bigint").alias("chunk_idx")
-    ).agg(
-        F.array_join(
+        F.posexplode(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("__pos", "__tok"))),
-                lambda s: s["__tok"],
-            ),
-            " ",
-        ).alias("chunk")
-    )
+                F.sequence(F.lit(0), F.floor((F.size(toks) - 1) / k).cast("int")),
+                lambda c: F.array_join(F.slice(toks, c * k + 1, k), " "),
+            )
+        ).alias("chunk_idx", "chunk"),
+    ).withColumn("chunk_idx", F.col("chunk_idx").cast("bigint"))
     key = F.md5(F.col("chunk"))
     firsts = chunks.groupBy(key.alias("__k")).agg(
         F.min(F.struct(F.col(id_col), F.col("chunk_idx"))).alias("__first")
