@@ -160,8 +160,9 @@ def test_ngram_jaccard_class_verification_matches_per_id(spark):
         df, "text", "doc_id", num_hashes=12, bands=4
     ).collect()
     sets_: dict = {}
-    for r in dedup.exploded_shingles(df, "text", "doc_id").collect():
-        sets_.setdefault(r["doc_id"], set()).add(r["shingle"])
+    toks = df.select("doc_id", tokens("text").alias("toks"))
+    for r in toks.select("doc_id", shingles("toks", 3).alias("sh")).collect():
+        sets_[r["doc_id"]] = set(r["sh"])
     want = {}
     for r in cands:
         a, b = sets_[r["id_a"]], sets_[r["id_b"]]
@@ -1788,6 +1789,79 @@ def test_perceptron_matches_pure_python_reference(spark):
                        for k, wk in enumerate(w))
 
 
+def _jobs_launched(spark, group: str, fn):
+    """``fn()``'s result and the number of Spark jobs it launched,
+    counted with a job group and ``statusTracker``."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        for key in ("spark.jobGroup.id", "spark.job.description", "spark.job.interruptOnCancel"):
+            sc.setLocalProperty(key, None)
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def _ref_averaged_trajectory(rows, iterations: int) -> list[tuple]:
+    """Pure-Python ``perceptron_train_averaged`` over (y, x1..xn) rows:
+    per iteration n_mis before the update, weights after it, and their
+    running sums."""
+    n = len(rows[0]) - 1
+    w, s, out = [0] * (n + 1), [0] * (n + 1), []
+    for it in range(1, iterations + 1):
+        mis = [(r[0], (1, *r[1:])) for r in rows
+               if r[0] * sum(wk * xk for wk, xk in zip(w, (1, *r[1:]))) <= 0]
+        w = [w[k] + sum(y * x[k] for y, x in mis) for k in range(n + 1)]
+        s = [s[k] + w[k] for k in range(n + 1)]
+        out.append((it, len(mis), *w, *s))
+    return out
+
+
+def test_perceptron_runs_one_job_per_iteration(spark):
+    """Each training iteration is one single-stage Spark job: the
+    iteration's sums are an ``Observation`` on the features' checkpoint
+    job (iteration 1) or on a noop write of the checkpoint (the rest).
+    With an aggregate collected per iteration it was 2 jobs per
+    iteration under AQE."""
+    from yet_another_map_reduce_spark.operators import classify
+
+    rows = [(1 if i % 3 else -1, i % 7, (i * i) % 11, i % 5) for i in range(200)]
+    df = spark.createDataFrame(rows, "y long, a long, b long, c long")
+    for iterations in (1, 5):
+        out, n = _jobs_launched(
+            spark, f"perceptron_{iterations}",
+            lambda: classify.perceptron_train_averaged(df, "y", ["a", "b", "c"], iterations),
+        )
+        assert n == iterations
+        assert [tuple(r) for r in out.collect()] == _ref_averaged_trajectory(rows, iterations)
+
+
+def test_perceptron_on_empty_input_is_all_zero(spark):
+    """An empty corpus trains to an all-zero trajectory in one job per
+    iteration (6 for 3 iterations with a collected aggregate): each
+    iteration's observed sums arrive (NULL sums read as 0) instead of
+    ``Observation.get`` waiting for metrics that never come."""
+    import threading
+
+    from yet_another_map_reduce_spark.operators import classify
+
+    empty = spark.createDataFrame([], "y long, a long")
+    got: list = []
+    t = threading.Thread(
+        target=lambda: got.extend(_jobs_launched(
+            spark, "perceptron_empty",
+            lambda: classify.perceptron_train_averaged(empty, "y", ["a"], 3).collect(),
+        )),
+        daemon=True,
+    )
+    t.start()
+    t.join(120)
+    assert not t.is_alive(), "training on an empty input blocked"
+    out, n = got
+    assert n == 3
+    assert [tuple(r) for r in out] == [(it, 0, 0, 0, 0, 0) for it in (1, 2, 3)]
+
+
 def test_temperature_mixture_preserves_expected_corpus_size(spark):
     """The α-rule's defining identity: Σ r_l·n_l = N (expected corpus
     size preserved exactly), and rates order inversely to group size
@@ -1839,9 +1913,12 @@ def test_text_operators_survive_pathological_corpus(spark):
     assert classes[6] == 2 and 7 not in classes  # true dups collapse
     assert classes[2] == 2 and 3 not in classes  # ""-normalized class
 
-    # shingles: docs shorter than k produce no rows, not errors
-    sh = dedup.exploded_shingles(df, "text", "doc_id", k=3)
-    assert sh.where(F.col("doc_id").isin(2, 3, 4)).count() == 0
+    # shingles: docs shorter than k have no shingles, not errors
+    sh = {
+        r["doc_id"]: r["sh"]
+        for r in df.select("doc_id", shingles(tokens("text"), 3).alias("sh")).collect()
+    }
+    assert sh[2] == sh[3] == sh[4] == []
 
     # minhash pairs: only the true duplicate pair surfaces
     pairs = dedup.minhash_lsh_pairs(df, "text", "doc_id", num_hashes=12, bands=4)
@@ -2359,6 +2436,39 @@ def test_connected_components_raise_instead_of_wrong_labels(spark):
         dedup.connected_components_star(chain, max_iterations=1)
 
 
+def test_connected_components_convergence_probe_rides_on_checkpoint(spark):
+    """Each round's convergence probe is an ``Observation`` on the
+    round's checkpoint job, not a job of its own.  On the chain
+    1-2-3-4-5 (local[4], AQE on) propagation launches 40 jobs and the
+    star contraction 34; with count() probes after each round's
+    checkpoint they launched 50 and 46."""
+    chain = spark.createDataFrame([(i, i + 1) for i in range(1, 5)], "src long, dst long")
+    want = {(i, 1) for i in range(1, 6)}
+    for variant, jobs in (
+        (dedup.connected_components, 40),
+        (dedup.connected_components_star, 34),
+    ):
+        out, n = _jobs_launched(spark, f"cc_{variant.__name__}", lambda: variant(chain))
+        assert (variant.__name__, n) == (variant.__name__, jobs)
+        assert {(r["id"], r["component"]) for r in out.collect()} == want
+
+
+def test_connected_components_of_no_edges_is_empty(spark):
+    """An empty edge list converges in one round to no labels: the
+    observed probes of an empty checkpoint still deliver (0 changed
+    labels, 0 edges), with no probe job of their own: 2 jobs per
+    variant, where count() probes made it 3 (propagation) and 4 (star
+    contraction)."""
+    empty = spark.createDataFrame([], "src long, dst long")
+    for variant, jobs in (
+        (dedup.connected_components, 2),
+        (dedup.connected_components_star, 2),
+    ):
+        out, n = _jobs_launched(spark, f"cc0_{variant.__name__}", lambda: variant(empty))
+        assert (variant.__name__, n) == (variant.__name__, jobs)
+        assert out.collect() == []
+
+
 def test_embedding_near_dup_gram_matches_exact_on_nulls(spark):
     """The gram fast path's NULL contract matches the equi-join
     variant: NULL vectors and NULL block keys contribute no pairs
@@ -2393,17 +2503,16 @@ def test_embedding_near_dup_gram_matches_exact_on_nulls(spark):
 
 
 def test_minhash_signatures_excludes_null_shingle_markers(spark):
-    """A keep_empty_docs=True shingle input must not give short docs
-    all-NULL signatures (whose band keys collide universally through
-    concat_ws NULL-skipping): NULL-shingle marker rows are dropped, so
-    short docs are excluded as the docstring promises."""
+    """Short docs (under k tokens, '' and NULL text) must not get empty
+    or all-NULL signatures (whose band keys collide universally through
+    concat_ws NULL-skipping): they are excluded, as the docstring
+    promises."""
     from yet_another_map_reduce_spark.operators import dedup
 
     d = spark.createDataFrame(
-        [(1, "a b c d e"), (2, "x"), (3, "")], "doc_id long, text string"
+        [(1, "a b c d e"), (2, "x"), (3, ""), (4, None)], "doc_id long, text string"
     )
-    sh = dedup.exploded_shingles(d, "text", "doc_id", 3, keep_empty_docs=True)
-    sig = dedup.minhash_signatures(d, "text", "doc_id", shingles=sh).collect()
+    sig = dedup.minhash_signatures(d, "text", "doc_id").collect()
     ids = {r["doc_id"] for r in sig}
     assert ids == {1}  # short docs excluded, not all-NULL-signatured
     assert all(v is not None for r in sig for v in r["signature"])
@@ -2552,11 +2661,10 @@ def test_gram_kernels_match_expression_path(spark):
     """Every per-document gram path equals a pure-Python reference:
     the gram_hash_rows counts kernel, decontaminate's built-in distinct
     md5 keys (with and without empty-doc markers), the built-in
-    shingle_sets and chunk_dedup's chunking; the minhash kernel equals
-    its expression path over precomputed shingles.  Same UTF-8 gram
-    bytes, same md5, same affine minima.  Covers NULL text, '', short
-    docs, a doc of exactly k tokens, tabs and runs of spaces, unicode
-    and repeated grams."""
+    shingle_sets, chunk_dedup's chunking and the minhash kernel's
+    affine md5 minima.  Same UTF-8 gram bytes, same md5.  Covers NULL
+    text, '', short docs, a doc of exactly k tokens, tabs and runs of
+    spaces, unicode and repeated grams."""
     import hashlib
     from collections import Counter
 
@@ -2623,20 +2731,17 @@ def test_gram_kernels_match_expression_path(spark):
         }
         assert got_chunks == _ref_chunk_dedup(rows, k)
 
-    # minhash kernel == the expression path over precomputed shingles
+    # minhash kernel: per seed i, the min over grams of h_a + i*h_b, with
+    # h_a / h_b the first 15 / next 8 hex digits of the gram's md5
+    def ref_signature(grams: list[str]) -> list[int]:
+        hs = [(int(md5(g)[:15], 16), int(md5(g)[15:23], 16)) for g in grams]
+        return [min(ha + i * hb for ha, hb in hs) for i in range(12)]
+
     sig_kernel = {
         r["doc_id"]: list(r["signature"])
         for r in dedup.minhash_signatures(df, "text", "doc_id", 12, 3).collect()
     }
-    sig_expr = {
-        r["doc_id"]: list(r["signature"])
-        for r in dedup.minhash_signatures(
-            df, "text", "doc_id", 12, 3,
-            shingles=dedup.exploded_shingles(df, "text", "doc_id", 3),
-        ).collect()
-    }
-    assert sig_kernel == sig_expr
-    assert sig_kernel.keys() == {d for d, gs in ref.items() if gs}
+    assert sig_kernel == {d: ref_signature(gs) for d, gs in ref.items() if gs}
 
 
 def test_percentile_exact_dist_bit_identical(spark):

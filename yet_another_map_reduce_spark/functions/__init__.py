@@ -76,8 +76,8 @@ def shingles(toks: Column | str, k: int = 3) -> Column:
     ``array_join(slice(toks, i, k), ' ')`` per complete window (empty
     if fewer than k tokens; for a NULL array, NULL under ANSI mode, the
     Spark 4 default, and empty otherwise, where ``size(NULL)`` is -1).
-    The word k-gram behind ``dedup.exploded_shingles``,
-    ``dedup.shingle_sets`` and ``text.decontaminate``.
+    The word k-gram behind ``dedup.shingle_sets`` and
+    ``text.decontaminate``.
 
     Pass the tokens as a column of their own projection (``tokens(...)
     .alias(...)`` selected first), not the ``tokens`` expression inline:

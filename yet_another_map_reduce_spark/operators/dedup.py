@@ -27,41 +27,13 @@ from pyspark.sql import functions as F
 
 from yet_another_map_reduce_spark.caching import tracked_cache
 from yet_another_map_reduce_spark.operators.quantize import round_half_up
+from yet_another_map_reduce_spark.plans import observe_metrics
 from yet_another_map_reduce_spark.functions import (
     md5_hash64,
     normalize_text,
     shingles,
     tokens,
 )
-
-
-def exploded_shingles(
-    df: DataFrame,
-    text_col: str,
-    id_col: str,
-    k: int = 3,
-    keep_empty_docs: bool = False,
-) -> DataFrame:
-    """One row per word-k-gram shingle: (id, shingle) — ``explode`` of
-    :func:`~yet_another_map_reduce_spark.functions.shingles` over the
-    token array, built in its own projection (map-only, no exchange).
-
-    Catalyst does not re-evaluate the tokenizer per element here
-    (Spark 4.1.2): CollapseProject inlines an array referenced ONCE
-    inside a lambda, but ``shingles`` reads the array twice, so the
-    tokenizer projection stays and runs once per row.
-
-    ``keep_empty_docs=True`` keeps exactly ONE ``(id, NULL shingle)``
-    row for every doc with no complete k-gram (fewer than ``k`` tokens,
-    or NULL text) via ``explode_outer``: report-style consumers must
-    surface short docs with zero-count rows — silently omitting them
-    means a downstream keep-join drops the doc from the corpus entirely.
-    Aggregate with ``count(shingle)`` so the NULL marker never counts.
-    """
-    explode = F.explode_outer if keep_empty_docs else F.explode
-    return df.select(F.col(id_col), tokens(text_col).alias("__toks")).select(
-        F.col(id_col), explode(shingles("__toks", k)).alias("shingle")
-    )
 
 
 def _md5_ha_hb(grams: list[bytes]):
@@ -128,7 +100,7 @@ def gram_hash_rows(df: DataFrame, text_col: str, id_col: str, k: int) -> DataFra
     no complete k-gram (NULL text included) keeps one ``(id, NULL, 0)``
     marker row, so ``sum(c)`` folds it to a zero-count row.
 
-    Replaces the ``exploded_shingles → md5 → groupBy`` chain for
+    Replaces the ``explode(shingles) → md5 → groupBy`` chain for
     boilerplate stats: per-document gram work is local by definition,
     so the per-doc count shuffle disappears (guide §2.4).  Bit-identical
     keys: the kernel md5s the same UTF-8 bytes ``shingles`` joins.  The
@@ -266,25 +238,23 @@ def minhash_signatures(
     id_col: str,
     num_hashes: int = 12,
     shingle_k: int = 3,
-    shingles: DataFrame | None = None,
 ) -> DataFrame:
     """id → array of ``num_hashes`` min-hash values over word-shingles.
 
     Min-wise hashing per seed: min over shingles of md5(seed:shingle).
-    Documents with < shingle_k words get an empty signature and are
-    excluded (they can't be meaningfully near-dup'd by shingling).
-    ``shingles`` accepts a precomputed :func:`exploded_shingles` result
-    so multi-stage pipelines shingle the corpus once.
+    Documents with < shingle_k words (NULL text included) get no row:
+    they can't be meaningfully near-dup'd by shingling, and an empty or
+    NULL signature would give band keys that collide universally.
 
-    Default path (no precomputed ``shingles``): ONE map-only Arrow
-    kernel over the JVM-tokenized corpus — per document, md5 every
-    k-gram window and fold the ``num_hashes`` affine minima locally
-    (r15, guide §2.4/§4.2: a per-document aggregate needs NO exchange;
-    the previous posexplode → window(lead) → groupBy chain shuffled the
-    whole token stream twice to compute a value that never leaves its
-    row).  Values are bit-identical: same UTF-8 gram bytes, same md5,
+    ONE map-only Arrow kernel over the JVM-tokenized corpus — per
+    document, md5 every k-gram window and fold the ``num_hashes`` affine
+    minima locally (r15, guide §2.4/§4.2: a per-document aggregate needs
+    NO exchange; the previous posexplode → window(lead) → groupBy chain
+    shuffled the whole token stream twice to compute a value that never
+    leaves its row).  Values equal the SQL reading of the same digests
+    (``conv`` of md5 hex substrings): same UTF-8 gram bytes, same md5,
     same h_a + i*h_b int64 arithmetic (see :func:`_md5_ha_hb`), checked
-    by the kernel≡expression parity test.
+    against a pure-Python ``hashlib`` reference by the gram-kernel test.
 
     Negative result, kernel kept: every built-in form over ``shingles``
     gave identical signatures and ran slower (sf0.1 documents, local[4]
@@ -299,63 +269,39 @@ def minhash_signatures(
     # h_a + i*h_b (Kirsch-Mitzenmacher double hashing) — k families for
     # the price of one digest.  h_a uses 60 bits, h_b is folded to 32,
     # so h_a + 11*h_b < 2^61 never overflows int64 in any engine.
-    if shingles is None:
-        import numpy as np
-        import pandas as pd
+    import numpy as np
+    import pandas as pd
 
-        id_t = df.schema[id_col].dataType.simpleString()
-        seeds = np.arange(num_hashes, dtype=np.int64)[None, :]
+    id_t = df.schema[id_col].dataType.simpleString()
+    seeds = np.arange(num_hashes, dtype=np.int64)[None, :]
 
-        def gen(batches):
-            for pdf in batches:
-                out_id, out_sig = [], []
-                for did, toks in zip(pdf["__id"], pdf["__toks"]):
-                    if toks is None:
-                        continue
-                    grams = _doc_grams(toks, shingle_k)
-                    if not grams:
-                        continue
-                    ha, hb = _md5_ha_hb(grams)
-                    mins = (ha[:, None] + seeds * hb[:, None]).min(axis=0)
-                    out_id.append(did)
-                    out_sig.append(mins.tolist())
-                yield pd.DataFrame(
-                    {
-                        "__id": out_id,
-                        # explicit object Series: pandas turns a list
-                        # column whose cells all share one length into a
-                        # 2D ndarray, which Arrow cannot convert to a list
-                        "signature": pd.Series(out_sig, dtype=object),
-                    }
-                )
+    def gen(batches):
+        for pdf in batches:
+            out_id, out_sig = [], []
+            for did, toks in zip(pdf["__id"], pdf["__toks"]):
+                if toks is None:
+                    continue
+                grams = _doc_grams(toks, shingle_k)
+                if not grams:
+                    continue
+                ha, hb = _md5_ha_hb(grams)
+                mins = (ha[:, None] + seeds * hb[:, None]).min(axis=0)
+                out_id.append(did)
+                out_sig.append(mins.tolist())
+            yield pd.DataFrame(
+                {
+                    "__id": out_id,
+                    # explicit object Series: pandas turns a list
+                    # column whose cells all share one length into a
+                    # 2D ndarray, which Arrow cannot convert to a list
+                    "signature": pd.Series(out_sig, dtype=object),
+                }
+            )
 
-        return (
-            _tokenized(df, text_col, id_col)
-            .mapInPandas(gen, f"__id {id_t}, signature array<bigint>")
-            .withColumnRenamed("__id", id_col)
-        )
-    # defensively drop NULL-shingle marker rows (a keep_empty_docs=True
-    # input): md5(NULL)/conv(NULL) would make every min NULL, giving
-    # short docs all-NULL signatures whose band keys (concat_ws skips
-    # NULLs) COLLIDE UNIVERSALLY — every short doc would candidate-pair
-    # with every other instead of being excluded as documented
-    exploded = shingles.where(F.col("shingle").isNotNull()).select(
-        F.col(id_col), F.md5("shingle").alias("__hex")
-    )
-    hashed = exploded.select(
-        F.col(id_col),
-        F.conv(F.substring("__hex", 1, 15), 16, 10).cast("bigint").alias("__ha"),
-        F.conv(F.substring("__hex", 16, 8), 16, 10).cast("bigint").alias("__hb"),
-    )
-    mins = hashed.groupBy(id_col).agg(
-        *[
-            F.min(F.col("__ha") + F.lit(i) * F.col("__hb")).alias(f"__m{i}")
-            for i in range(num_hashes)
-        ]
-    )
-    return mins.select(
-        F.col(id_col),
-        F.array(*[F.col(f"__m{i}") for i in range(num_hashes)]).alias("signature"),
+    return (
+        _tokenized(df, text_col, id_col)
+        .mapInPandas(gen, f"__id {id_t}, signature array<bigint>")
+        .withColumnRenamed("__id", id_col)
     )
 
 
@@ -877,8 +823,15 @@ def connected_components(
     lineage so round N's plan doesn't replay rounds 1..N-1 — without it
     the DAG doubles every pass, which is fatal long before 100 TB.
 
-    The convergence probe is a count() per round — a scalar aggregate,
-    not a collect; driver memory stays O(1).
+    The convergence probe is the round's changed-label count, observed
+    (``plans.observe_metrics``) on the round's checkpoint job instead of
+    run as a ``count()`` job of its own; driver memory stays O(1).  The
+    ``observe`` sits at the top of the plan, in the result stage after
+    the round's last exchange, where each task's accumulator update
+    counts once.  A/B against the ``limit(1).count()`` probe on the
+    sf0.1 ``dedup_components`` edges (local[4] on 4 shared vCPUs, one
+    driver, 15 interleaved rounds, medians, identical labels): 19 → 15
+    jobs, 1.34 → 1.16 s (won 13/15, inside the parent's 0.44 s IQR).
 
     Exhausting ``max_iterations`` before the fixpoint RAISES instead of
     returning silently-wrong labels (no-silent-caps discipline): a
@@ -914,15 +867,15 @@ def connected_components(
                 F.col("component"), F.coalesce("nbr_component", "component")
             ).alias("new_component"),
         )
-        # checkpoint FIRST, then probe the materialized rows — probing the
-        # lazy plan would evaluate the join once for the count and again
-        # for the next round's lineage (2x the work per round)
+        # the probe rides on the checkpoint job: observed at the top of
+        # the plan, in the result stage, so each task counts once
+        merged, obs = observe_metrics(
+            merged, "cc_changed",
+            changed=F.count_if(F.col("new_component") < F.col("component")),
+        )
         merged = merged.localCheckpoint()
-        changed = merged.where(
-            F.col("new_component") < F.col("component")
-        ).limit(1).count()
         labels = merged.select("id", F.col("new_component").alias("component"))
-        if changed == 0:
+        if obs.get["changed"] == 0:
             return labels
     raise RuntimeError(
         f"connected_components did not converge in {max_iterations} "
@@ -956,14 +909,31 @@ def connected_components_star(
     Each half-round is one groupBy shuffle over the edge list;
     ``localCheckpoint`` truncates lineage per round.  Converges when the
     edge list is a star forest (edges = (root, node) pairs), detected by
-    an unchanged edge count under large-star — a scalar probe, no
-    driver collect.
+    an unchanged edge count and confirmed by an ``exceptAll`` of the two
+    edge sets.  Each round's edge count is observed
+    (``plans.observe_metrics``) on its checkpoint job, at the top of the
+    plan after the last exchange; the previous round's observed count
+    is the comparand, so no round runs a ``count()`` job.  A/B against
+    two ``count()`` jobs per round, on the same edges and setup as
+    :func:`connected_components`'s: 17 → 13 jobs, 1.60 → 1.63 s (won
+    6/15, parent IQR 0.41): fewer jobs, no time saved at this size;
+    identical labels.
     """
+
+    def checkpoint_counted(e: DataFrame) -> tuple[DataFrame, int]:
+        # the edge count rides on the checkpoint job: observed at the top
+        # of the plan, in the result stage, so each task counts once
+        e, obs = observe_metrics(e, "cc_star_edges", n=F.count(F.lit(1)))
+        e = e.localCheckpoint()
+        return e, obs.get["n"]
+
     # normalize: undirected edge list as (min, max), self-loops dropped
-    e = edges.select(
-        F.least(F.col(src), F.col(dst)).alias("u"),
-        F.greatest(F.col(src), F.col(dst)).alias("v"),
-    ).where(F.col("u") != F.col("v")).distinct().localCheckpoint()
+    e, n_e = checkpoint_counted(
+        edges.select(
+            F.least(F.col(src), F.col(dst)).alias("u"),
+            F.greatest(F.col(src), F.col(dst)).alias("v"),
+        ).where(F.col("u") != F.col("v")).distinct()
+    )
     nodes = (
         e.select(F.col("u").alias("id"))
         .union(e.select(F.col("v").alias("id")))
@@ -1005,19 +975,17 @@ def connected_components_star(
 
     converged = False
     for _ in range(max_iterations):
-        e_next = star_round(
-            star_round(e, small=False, dedupe=False), small=True
-        ).localCheckpoint()
+        e_next, n_next = checkpoint_counted(
+            star_round(star_round(e, small=False, dedupe=False), small=True)
+        )
         # fixpoint: the alternating contraction is idempotent exactly on
-        # star forests; compare edge sets via counts (cheap scalars on
-        # checkpointed data)
-        if e_next.count() == e.count():
-            changed = e_next.exceptAll(e).limit(1).count()
-            if changed == 0:
-                e = e_next
-                converged = True
-                break
-        e = e_next
+        # star forests; equal edge counts are confirmed by comparing the
+        # edge sets
+        if n_next == n_e and e_next.exceptAll(e).limit(1).count() == 0:
+            e = e_next
+            converged = True
+            break
+        e, n_e = e_next, n_next
     if not converged:
         # worse than the propagation variant's failure mode: a
         # non-star-forest edge set projects MULTIPLE (id, component)
@@ -1269,7 +1237,7 @@ def chunk_dedup(
     ``posexplode(transform(sequence(0, (size-1) div k), c ->
     array_join(slice(toks, c*k+1, k), ' ')))`` over the token array in
     its own projection (referenced twice, so Catalyst keeps it and the
-    tokenizer runs once per row; see :func:`exploded_shingles`).  That
+    tokenizer runs once per row; see ``functions.shingles``).  That
     replaced a posexplode → ``groupBy(id, chunk_idx)`` → sorted
     ``collect_list`` rebuild, an exchange over the whole token stream,
     with identical rows.  A/B, 10 interleaved pairs, local[4] on 4
