@@ -816,6 +816,125 @@ def test_kmeans_assign_recovers_planted_clusters(spark):
     assert all(cos > 0.9 for _, cos in got.values())
 
 
+def test_lloyd_trainers_run_two_jobs_per_iteration(spark):
+    """Both trainers launch ``1 + 2·iterations`` Spark jobs (local[4],
+    AQE on): the seed collect, then one aggregation per iteration, a
+    shuffle-map and a result job.  ``kmeans_assign`` launches no job of
+    its own beyond training.  With a two-aggregation IVF mean step
+    training took ``1 + 3·iterations``, and reading the centroids back
+    from a local relation cost ``kmeans_assign`` 3 more."""
+    df = _planted_clusters(spark)
+    for iterations in (1, 3):
+        want = 1 + 2 * iterations
+        for name, fn in (
+            ("ivf", lambda: similarity.train_ivf_centroids(df, "vec_id", "v", 3, iterations)),
+            ("pq", lambda: similarity.train_pq_codebooks(df, "vec_id", "v", 2, 3, iterations)),
+            ("assign", lambda: similarity.kmeans_assign(df, "vec_id", "v", 3, iterations)),
+        ):
+            _, n = _jobs_launched(spark, f"lloyd_{name}_{iterations}", fn)
+            assert (name, iterations, n) == (name, iterations, want)
+
+
+def _ref_argbest(scores, better) -> int:
+    # first best score wins: ties go to the lower id
+    best = 0
+    for j, x in enumerate(scores):
+        if better(x, scores[best]):
+            best = j
+    return best
+
+
+def _ref_means(cells, members):
+    """New cell vectors: each member cell's 6-rounded component-wise
+    mean; a cell with no member keeps its previous vector."""
+    from yet_another_map_reduce_spark.operators.quantize import round_half_up
+
+    out = list(cells)
+    for key in range(len(cells)):
+        vs = members.get(key)
+        if vs:
+            out[key] = [float(round_half_up(sum(x) / len(vs), 6)) for x in zip(*vs)]
+    return out
+
+
+def test_ivf_training_matches_python_lloyd(spark):
+    """``train_ivf_centroids`` and ``kmeans_assign`` against a pure-Python
+    spherical Lloyd's: lowest-id seeds, argmax of the 6-rounded dot with
+    the unit centroid (ties to the lower id), 6-rounded member means,
+    empty cells keep their centroid.  Seed 2 duplicates seed 0, so cell
+    2 is empty in round 1, and vector 3 ties all three cells."""
+    import math
+
+    from yet_another_map_reduce_spark.operators.quantize import round_half_up
+
+    rows = [
+        (0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, [1.0, 0.0]), (3, [1.0, 1.0]),
+        (4, [2.0, 0.5]), (5, [0.5, 3.0]), (6, [3.0, -1.0]), (7, [-1.0, 2.0]),
+    ]
+
+    def assign(cents, v):
+        units = [[x / (math.sqrt(sum(y * y for y in c)) or 1.0) for x in c] for c in cents]
+        scores = [float(round_half_up(sum(a * b for a, b in zip(v, u)), 6)) for u in units]
+        return _ref_argbest(scores, lambda a, b: a > b), scores
+
+    cents = [v for _, v in rows[:3]]
+    ties = empties = 0
+    for _ in range(3):
+        members: dict[int, list] = {}
+        for _, v in rows:
+            j, scores = assign(cents, v)
+            ties += scores.count(scores[j]) > 1
+            members.setdefault(j, []).append(v)
+        empties += len(cents) - len(members)
+        cents = _ref_means(cents, members)
+    assert ties and empties  # the planted tie and empty cell were hit
+
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    got = similarity.train_ivf_centroids(df, "vec_id", "v", nlist=3, iterations=3)
+    assert sorted((r["centroid_id"], list(r["__centv"])) for r in got.collect()) == list(
+        enumerate(cents)
+    )
+    out = similarity.kmeans_assign(df, "vec_id", "v", nlist=3, iterations=3)
+    assert {r["vec_id"]: r["cluster_id"] for r in out.collect()} == {
+        i: assign(cents, v)[0] for i, v in rows
+    }
+
+
+def test_pq_training_matches_python_lloyd(spark):
+    """``train_pq_codebooks`` against a pure-Python per-subspace Lloyd's:
+    the lowest-id vectors' subvectors seed each codebook, a subvector
+    takes the argmin of the 6-rounded squared L2 (ties to the lower
+    code), means are 6-rounded, empty cells keep their centroid.  Seed 2
+    duplicates seed 0, so code 2 is empty in round 1 of both subspaces,
+    and vector 3 ties codes 0 and 1 in both."""
+    from yet_another_map_reduce_spark.operators.quantize import round_half_up
+
+    m, k, sub = 2, 3, 2
+    rows = [
+        (0, [0.0, 0.0, 1.0, 1.0]), (1, [2.0, 0.0, 5.0, 5.0]), (2, [0.0, 0.0, 1.0, 1.0]),
+        (3, [1.0, 0.0, 3.0, 3.0]), (4, [2.5, 0.5, 0.0, 1.0]), (5, [-1.0, 0.5, 6.0, 4.0]),
+        (6, [0.5, -0.5, 2.0, 2.0]),
+    ]
+    books = [[v[s * sub:(s + 1) * sub] for _, v in rows[:k]] for s in range(m)]
+    ties = empties = 0
+    for _ in range(3):
+        for s in range(m):
+            members: dict[int, list] = {}
+            for _, v in rows:
+                sv = v[s * sub:(s + 1) * sub]
+                d = [float(round_half_up(sum((a - b) ** 2 for a, b in zip(sv, c)), 6))
+                     for c in books[s]]
+                j = _ref_argbest(d, lambda a, b: a < b)
+                ties += d.count(d[j]) > 1
+                members.setdefault(j, []).append(sv)
+            empties += k - len(members)
+            books[s] = _ref_means(books[s], members)
+    assert ties and empties  # the planted tie and empty cell were hit
+
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    assert similarity.train_pq_codebooks(df, "vec_id", "v", m=m, k=k, iterations=3) == books
+
+
 def test_recursive_hierarchy_depths_match_log2(spark, sf_dir):
     import math
 

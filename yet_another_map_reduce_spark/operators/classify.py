@@ -6,7 +6,7 @@ web-text samples).  The training loop here is the batch perceptron:
 per iteration, ONE corpus-wide aggregate computes the summed gradient
 of the misclassified set, and the model update happens driver-side on
 a feature-count-sized vector.  This is the same distributed-iterative
-shape as `similarity.kmeans_train` (reference semantics: the
+shape as `similarity.train_ivf_centroids` (reference semantics: the
 reference repo has no ML surface; this extends the engine's
 LLM-pipeline operators):
 
@@ -67,7 +67,7 @@ def perceptron_train(
     the full training trajectory, not just the final model.  EAGER:
     training runs ``iterations`` Spark jobs at call time, one
     single-stage job per iteration (the same documented contract as
-    ``similarity.cosine_topk`` and ``kmeans_train`` — the result is
+    ``similarity.cosine_topk`` and ``train_ivf_centroids`` — the result is
     derived from model-sized aggregates, not a lazy plan over the
     input).  Under AQE the aggregate each iteration collected before
     was two jobs, a shuffle-map job and a result job: 2× ``iterations``.

@@ -535,52 +535,46 @@ def lsh_topk(
     )
 
 
-def train_ivf_centroids(
-    corpus: DataFrame,
-    id_col: str,
-    vec_col: str,
-    nlist: int,
-    iterations: int = 5,
-    round_digits: int = 6,
-) -> DataFrame:
-    """Train IVF centroids with distributed Lloyd's k-means (the step
-    :func:`ivf_centroids` stubs with lowest-id seeding).
+# Both Lloyd's trainers round their fixpoints (assignment scores and
+# member means) to this many decimals: double accumulation-order drift
+# never reaches digit 6, so every run, layout and the DuckDB oracles'
+# CTE replays land on the same bits.
+_LLOYD_DIGITS = 6
 
-    Spherical flavor matching :func:`ivf_topk`'s cosine assignment: a
-    vector joins the centroid with the highest cosine; the new centroid
-    is the arithmetic mean of its members.  Deterministic end to end —
-    lowest-id seeds, fixed iteration count, per-iteration rounding to
-    ``round_digits`` (bit-stable fixpoint under double accumulation-
-    order differences), ties broken toward the lower centroid id.
 
-    Execution shape (the plan that survives 100 TB):
+def _member_means(
+    assigned: DataFrame, keys: list[str], vec_col: str
+) -> dict[tuple, list[float]]:
+    """The Lloyd's mean step of both trainers: per ``keys`` cell, the
+    component-wise mean of its member vectors, rounded to
+    ``_LLOYD_DIGITS``.
 
-    - assignment is MAP-ONLY whole-stage codegen: the centroids are
-      model parameters (``nlist x dim`` doubles, KB-scale), embedded as
-      literal arrays — the same "ship the model each round" pattern as
-      ``pyspark.ml``'s KMeans, which also collects centers per
-      iteration; no corpus shuffle, no Python;
-    - the mean update is ONE shuffle per iteration: ``posexplode`` to
-      (centroid, dim position, value) and ``groupBy(centroid, pos)``
-      gets map-side partial aggregation, so the exchange carries
-      ``nlist x dim x partitions`` partial rows, never the corpus;
-    - per-iteration driver state is the centroid matrix itself (what a
-      parameter server would hold), nothing proportional to the data.
-
-    Empty clusters keep their previous centroid.  Returns
-    ``(centroid_id, __centv)`` shaped for :func:`ivf_topk`'s
-    ``centroids`` parameter, with ``centroid_id`` densely renumbered
-    ``0..nlist-1``.
-    """
-    cv = _dcast(vec_col)
-    seeds = (
-        corpus.orderBy(F.col(id_col).asc())
-        .limit(nlist)
-        .select(cv.alias("v"))
+    ONE aggregation: ``posexplode`` to (keys, pos, x) and
+    ``groupBy(*keys, pos)`` gets map-side partial aggregation, so the
+    exchange carries ``cells x dim x partitions`` partial rows, never the
+    corpus; its collect is 2 Spark jobs under AQE (shuffle map, result).
+    The driver rebuilds each cell's vector by position.  A cell with no
+    member is absent, so the caller keeps its previous centroid."""
+    rows = (
+        assigned.select(*keys, F.posexplode(vec_col))
+        .groupBy(*keys, "pos")
+        .agg(F.round(F.sum("col") / F.count(F.lit(1)), _LLOYD_DIGITS).alias("m"))
         .collect()
     )
-    cents: list[list[float]] = [list(r["v"]) for r in seeds]
-    vecs = corpus.select(cv.alias("__v"))
+    cells: dict[tuple, dict[int, float]] = {}
+    for r in rows:
+        cells.setdefault(tuple(r[k] for k in keys), {})[r["pos"]] = r["m"]
+    return {key: [c[p] for p in sorted(c)] for key, c in cells.items()}
+
+
+def _ivf_lloyd(
+    corpus: DataFrame, id_col: str, vec_col: str, nlist: int, iterations: int
+) -> list[list[float]]:
+    """The Lloyd's loop of :func:`train_ivf_centroids` and
+    :func:`kmeans_assign`; entry ``i`` of the returned list is cell ``i``."""
+    seeds = ivf_centroids(corpus, id_col, vec_col, nlist).collect()
+    cents: list[list[float]] = [list(r["__centv"]) for r in seeds]
+    vecs = corpus.select(_dcast(vec_col).alias("__v"))
 
     def assign_in_pandas(cents: list[list[float]]):
         # argmax_i dot(v, c_i / |c_i|): norm(v) is a positive common
@@ -588,7 +582,7 @@ def train_ivf_centroids(
         # cosine argmax a plain dot-product argmax — ONE numpy matmul
         # per Arrow batch against the KB-scale unit-centroid matrix
         # (task-closure model shipping, map-only, no corpus shuffle).
-        # round_digits quantization before the argmax is what lets the
+        # _LLOYD_DIGITS quantization before the argmax is what lets the
         # oracle replay it despite accumulation-order differences;
         # np.argmax takes the FIRST max, i.e. ties to the lower cid.
         import numpy as np
@@ -606,7 +600,7 @@ def train_ivf_centroids(
                 V = np.stack(
                     [np.asarray(x, dtype=np.float64) for x in pdf["__v"]]
                 )
-                S = round_half_up(V @ U.T, round_digits)
+                S = round_half_up(V @ U.T, _LLOYD_DIGITS)
                 yield pd.DataFrame(
                     {
                         "__cid": S.argmax(axis=1).astype(np.int64),
@@ -620,30 +614,62 @@ def train_ivf_centroids(
         assigned = vecs.mapInPandas(
             assign_in_pandas(cents), "__cid long, __v array<double>"
         )
-        member_means = (
-            assigned.select("__cid", F.posexplode("__v"))
-            .groupBy("__cid", "pos")
-            .agg(F.sum("col").alias("s"), F.count(F.lit(1)).alias("n"))
-            .groupBy("__cid")
-            .agg(
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(F.struct("pos", F.round(F.expr("s / n"), round_digits).alias("m")))
-                    ),
-                    lambda x: x["m"],
-                ).alias("mean")
-            )
-            .collect()
-        )
-        new_cents = list(cents)  # empty clusters carry the old centroid
-        for r in member_means:
-            new_cents[r["__cid"]] = list(r["mean"])
-        cents = new_cents
+        for (cid,), mean in _member_means(assigned, ["__cid"], "__v").items():
+            cents[cid] = mean
+    return cents
 
-    spark = corpus.sparkSession
+
+def train_ivf_centroids(
+    corpus: DataFrame,
+    id_col: str,
+    vec_col: str,
+    nlist: int,
+    iterations: int = 5,
+) -> DataFrame:
+    """Train IVF centroids with distributed Lloyd's k-means (the step
+    :func:`ivf_centroids` stubs with lowest-id seeding).
+
+    Spherical flavor matching :func:`ivf_topk`'s cosine assignment: a
+    vector joins the centroid with the highest cosine; the new centroid
+    is the arithmetic mean of its members.  Deterministic end to end —
+    lowest-id seeds, fixed iteration count, per-iteration rounding to
+    ``_LLOYD_DIGITS`` (bit-stable fixpoint under double accumulation-
+    order differences), ties broken toward the lower centroid id.
+
+    Execution shape (the plan that survives 100 TB):
+
+    - assignment is MAP-ONLY: the centroids are model parameters
+      (``nlist x dim`` doubles, KB-scale) shipped in an Arrow kernel's
+      task closure — the "ship the model each round" pattern of
+      ``pyspark.ml``'s KMeans; no corpus shuffle.  The kernel, not a
+      literal-unrolled SQL argmax like :func:`kmeans_assign`'s final
+      pass, because its per-row cost is one BLAS matmul row, flat as
+      ``dedup.sized_nlist`` grows (16 cells at sf0.1, 159 at the 100x
+      replica), where the SQL form folds ``nlist`` interpreted dots;
+    - the mean update is ONE shuffle per iteration
+      (:func:`_member_means`, shared with :func:`train_pq_codebooks`);
+    - per-iteration driver state is the centroid matrix itself (what a
+      parameter server would hold), nothing proportional to the data.
+
+    Training launches ``1 + 2·iterations`` Spark jobs under AQE: the
+    seed collect, then a shuffle-map and a result job per iteration.
+    Against a two-aggregation mean step and a local-relation round trip
+    in :func:`kmeans_assign` (sf0.1, warm, local[4] on 4 shared vCPUs,
+    10 interleaved process pairs; construction jobs, median seconds,
+    pairs won, parent IQR): ``embedding_kmeans_clusters`` 10 → 5, 1.48 →
+    1.13 s, 10/10, 0.34; ``embedding_balanced_sample`` 10 → 5, 1.42 →
+    1.20 s, 8/10, 0.44; ``ann_ivf_trained`` 7 → 5, 1.34 → 1.30 s, 8/10,
+    0.43; ``dedup_semantic`` 9 → 7, 1.26 → 1.20 s, 8/10, 0.28.  Outputs
+    identical; execution seconds unchanged within the parent's IQR.
+
+    Empty clusters keep their previous centroid.  Returns
+    ``(centroid_id, __centv)`` shaped for :func:`ivf_topk`'s
+    ``centroids`` parameter, with ``centroid_id`` densely renumbered
+    ``0..nlist-1``.
+    """
     return local_relation(
-        spark,
-        [(i, c) for i, c in enumerate(cents)],
+        corpus.sparkSession,
+        list(enumerate(_ivf_lloyd(corpus, id_col, vec_col, nlist, iterations))),
         "centroid_id long, __centv array<double>",
     )
 
@@ -654,7 +680,6 @@ def kmeans_assign(
     vec_col: str,
     nlist: int = 8,
     iterations: int = 3,
-    centroids: DataFrame | None = None,
 ) -> DataFrame:
     """Semantic clustering for corpus curation: train spherical k-means
     (:func:`train_ivf_centroids`) and assign every vector to its nearest
@@ -666,38 +691,33 @@ def kmeans_assign(
     cosine being the similarity to the assigned centroid.
 
     Scale shape: training is map-only assignment + one tiny shuffle per
-    iteration (see :func:`train_ivf_centroids`); the final assignment
-    embeds the unit-normalized centroids as literal arrays (KB-scale
-    model parameters) and picks the argmax dot per row inside
-    whole-stage codegen — zero shuffles, zero Python, the corpus is
-    read exactly once.  Deterministic end to end, so cluster ids are
-    stable across runs and cluster layouts.
+    iteration (see :func:`train_ivf_centroids`), and its centroid list
+    feeds the final assignment directly — ``1 + 2·iterations`` Spark
+    jobs in all, the training's own.  The final assignment embeds the
+    unit-normalized centroids as literal arrays (KB-scale model
+    parameters) and picks the argmax dot per row inside whole-stage
+    codegen — zero shuffles, zero Python, the corpus is read exactly
+    once.  Deterministic end to end, so cluster ids are stable across
+    runs and cluster layouts.
     """
     import math
 
-    cent = (
-        centroids
-        if centroids is not None
-        else train_ivf_centroids(corpus, id_col, vec_col, nlist, iterations)
-    )
-    # driver-side model fetch: nlist x dim doubles, the same "collect
-    # the centers, ship them with the closure" pattern pyspark.ml uses
+    # the model is the driver-side centroid list (nlist x dim doubles)
     units: list[tuple[int, list[float]]] = []
-    for r in cent.orderBy("centroid_id").collect():
-        c = list(r["__centv"])
+    for cid, c in enumerate(_ivf_lloyd(corpus, id_col, vec_col, nlist, iterations)):
         n = math.sqrt(sum(x * x for x in c)) or 1.0
-        units.append((int(r["centroid_id"]), [x / n for x in c]))
+        units.append((cid, [x / n for x in c]))
 
     # ONE SQL string (r15, same rationale as _pq_codes_expr): the
     # Column-API form made a py4j round trip per centroid component —
     # nlist × dim literals per plan construction.  Same expressions:
-    # dot against unit centroids, 6-digit round, lower-id tiebreak via
-    # max of (d, -cid) structs.
+    # dot against unit centroids, _LLOYD_DIGITS round, lower-id tiebreak
+    # via max of (d, -cid) structs.
     v = f"transform(`{vec_col}`, x -> cast(x as double))"
     cands = ",".join(
         "named_struct('d', round("
         f"aggregate(zip_with({v}, array({','.join(_dlit(x) for x in unit)}), "
-        f"(a, b) -> a * b), 0.0D, (acc, x) -> acc + x), 6), 'ni', {-cid})"
+        f"(a, b) -> a * b), 0.0D, (acc, x) -> acc + x), {_LLOYD_DIGITS}), 'ni', {-cid})"
         for cid, unit in units
     )
     best = f"array_max(array({cands}))"
@@ -887,7 +907,10 @@ def train_pq_codebooks(
     of ``dim/m`` floats) — KB-scale model parameters fetched driver-side,
     the pyspark.ml pattern.  Training cost: one corpus scan + one tiny
     (m*k*subdim rows) shuffle per iteration; all subspaces train in the
-    SAME pass via an exploded (s, code, component) relation.
+    SAME pass, assigned by :func:`_pq_codes_expr` and averaged by
+    :func:`_member_means` keyed on (subspace, code).  ``1 +
+    2·iterations`` Spark jobs under AQE: the seed collect, then a
+    shuffle-map and a result job per iteration.
     """
     rows = corpus.orderBy(F.col(id_col).asc()).limit(k).select(vec_col).collect()
     vecs = [[float(x) for x in r[vec_col]] for r in rows if r[vec_col] is not None]
@@ -913,44 +936,15 @@ def train_pq_codebooks(
         for s in range(m)
     ]
 
-    # struct-min argmin as ONE SQL string per subspace (r15, same
-    # rationale as _pq_codes_expr: no py4j call per literal)
-    def _code_sql(subv_sql: str, book) -> str:
-        cands = ",".join(
-            f"named_struct('d', round({_sq_l2_sql(subv_sql, cent)}, 6), 'j', {j})"
-            for j, cent in enumerate(book)
-        )
-        return f"array_min(array({cands})).j"
-
-    v = f"transform(`{vec_col}`, x -> cast(x as double))"
     for _ in range(iterations):
-        per_s = [
-            F.expr(
-                f"named_struct('s', {s}, "
-                f"'code', {_code_sql(f'slice({v}, {s * sub + 1}, {sub})', books[s])}, "
-                f"'sv', slice({v}, {s * sub + 1}, {sub}))"
-            )
-            for s in range(m)
-        ]
-        exploded = (
-            corpus.select(F.explode(F.array(*per_s)).alias("e"))
-            .select("e.s", "e.code", F.posexplode("e.sv").alias("sd", "x"))
-        )
-        means = (
-            exploded.groupBy("s", "code", "sd")
-            .agg(F.round(F.sum("x") / F.count(F.lit(1)), 6).alias("val"))
-            .collect()
-        )
-        got: dict[tuple[int, int], dict[int, float]] = {}
-        for r in means:
-            got.setdefault((int(r["s"]), int(r["code"])), {})[int(r["sd"])] = float(
-                r["val"]
-            )
-        for s in range(m):
-            for j in range(k):
-                cell = got.get((s, j))
-                if cell is not None:
-                    books[s][j] = [cell[d] for d in range(sub)]
+        # (s, code) per subspace from the same expression pq_encode runs,
+        # then each row's subvector s
+        assigned = corpus.select(
+            F.posexplode(_pq_codes_expr(vec_col, books)).alias("s", "code"),
+            _dcast(vec_col).alias("__v"),
+        ).select("s", "code", F.expr(f"slice(__v, s * {sub} + 1, {sub})").alias("sv"))
+        for (s, j), mean in _member_means(assigned, ["s", "code"], "sv").items():
+            books[s][j] = mean
     return books
 
 
@@ -1020,7 +1014,7 @@ def _pq_codes_expr(vec_col: str, books: list[list[list[float]]]) -> Column:
     def _code(s: int, book: list[list[float]]) -> str:
         subv = f"slice({v}, {s * sub + 1}, {sub})"
         cands = ",".join(
-            f"named_struct('d', round({_sq_l2_sql(subv, cent)}, 6), 'j', {j})"
+            f"named_struct('d', round({_sq_l2_sql(subv, cent)}, {_LLOYD_DIGITS}), 'j', {j})"
             for j, cent in enumerate(book)
         )
         return f"array_min(array({cands})).j"

@@ -2418,11 +2418,12 @@ def q_embedding_balanced_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF search over k-means-TRAINED centroids (similarity.
     train_ivf_centroids — distributed Lloyd's, map-only assignment +
-    one partial-agged shuffle per iteration) instead of the lowest-id
-    seeding.  Hash-verified end to end: the oracle replays the
-    training loop (rounded fixpoints) AND the probe/top-k, so a green
-    hash certifies training + search together.  Planted-cluster
-    recovery and determinism stay pinned by tests."""
+    one partial-agged shuffle per iteration: 5 construction jobs under
+    AQE, training's 1 + 2·iterations) instead of the lowest-id seeding.
+    Hash-verified end to end: the oracle replays the training loop
+    (rounded fixpoints) AND the probe/top-k, so a green hash certifies
+    training + search together.  Planted-cluster recovery and
+    determinism stay pinned by tests."""
     emb = read_table(spark, sf_dir, "embeddings")
     # 2 training iterations keep the demo inside the suite's time
     # budget; multi-iteration convergence is pinned by the planted-
