@@ -16,9 +16,9 @@ import sys
 import tempfile
 import zlib
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+import _measure  # noqa: F401  (repo root on sys.path)
 
-from yet_another_map_reduce_spark.sources import avro_format  # noqa: E402
+from yet_another_map_reduce_spark.sources import avro_format
 
 ALLOWED = (ValueError, IndexError, KeyError, UnicodeDecodeError,
            AttributeError, TypeError, OverflowError, zlib.error)

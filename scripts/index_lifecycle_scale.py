@@ -27,8 +27,9 @@ import sys
 import tempfile
 import time
 
+from _measure import warn_if_loaded
+
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-sys.path.insert(0, ".")
 
 SF01 = "/root/testdata/sf0.1"
 
@@ -123,9 +124,7 @@ def main() -> None:
     from yet_another_map_reduce_spark.session import build_session
 
     spark = build_session(app_name="index-lifecycle-scale")
-    load = os.getloadavg()[0]
-    if load > 4.0:
-        print(f"WARNING: loadavg {load:.1f} — treat timings as upper bounds")
+    warn_if_loaded()
     for sf in (SF01, replica):
         lifecycle(spark, sf)
 

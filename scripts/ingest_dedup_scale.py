@@ -24,18 +24,16 @@ from __future__ import annotations
 
 import os
 import shutil
-import statistics
 import sys
-import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _measure import median_s, warn_if_loaded
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-from yet_another_map_reduce_spark.operators import dedup  # noqa: E402
-from yet_another_map_reduce_spark.session import build_session  # noqa: E402
-from yet_another_map_reduce_spark.sources.readers import read_table  # noqa: E402
-from yet_another_map_reduce_spark.streaming.ingest import (  # noqa: E402
+from yet_another_map_reduce_spark.operators import dedup
+from yet_another_map_reduce_spark.session import build_session
+from yet_another_map_reduce_spark.sources.readers import read_table
+from yet_another_map_reduce_spark.streaming.ingest import (
     compact_seen,
     read_seen_pruned,
     seen_probe_paths,
@@ -67,9 +65,7 @@ def _ensure_relation(spark, path: str, scale: int, base: str) -> None:
 
 def main() -> None:
     max_scale = int(sys.argv[1]) if len(sys.argv) > 1 else 100
-    load = os.getloadavg()[0]
-    if load > 4.0:
-        print(f"WARNING: loadavg {load:.1f} — readings may be contaminated")
+    warn_if_loaded()
     spark = build_session(app_name="ingest-dedup-scale")
     docs = read_table(spark, "/root/testdata/sf0.1", "documents")
     batch = docs.where(F.col("doc_id") < 500)
@@ -91,30 +87,25 @@ def main() -> None:
         paths, selected, skipped = seen_probe_paths(seen_dir, keys)
         n = spark.read.parquet(gen).count()
 
-        def run(seen):
-            t0 = time.perf_counter()
-            dedup.incremental_dedup(
-                batch, seen, "text", "doc_id", seen_fp_col="fp"
-            ).write.format("noop").mode("overwrite").save()
-            return time.perf_counter() - t0
-
         for mode in ("full", "pruned"):
-            def seen_frame():
-                if mode == "full":
-                    return spark.read.parquet(gen)
-                return read_seen_pruned(spark, seen_dir, keys)
+            def run():
+                seen = (
+                    spark.read.parquet(gen)
+                    if mode == "full"
+                    else read_seen_pruned(spark, seen_dir, keys)
+                )
+                dedup.incremental_dedup(
+                    batch, seen, "text", "doc_id", seen_fp_col="fp"
+                ).write.format("noop").mode("overwrite").save()
 
-            run(seen_frame())  # warm
-            ts = [run(seen_frame()) for _ in range(5)]
             extra = (
                 f" files={selected}/{selected + skipped}"
                 if mode == "pruned"
                 else ""
             )
             print(
-                f"seen={scale}x rows={n:,} {mode}: median "
-                f"{statistics.median(ts):.3f}s "
-                f"(runs {[round(t, 3) for t in ts]}){extra}"
+                f"seen={scale}x rows={n:,} {mode}: median of 5 "
+                f"{median_s(run, runs=5):.3f}s{extra}"
             )
     spark.stop()
 

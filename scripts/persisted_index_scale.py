@@ -26,13 +26,13 @@ Usage:
 from __future__ import annotations
 
 import os
-import statistics
 import subprocess
 import sys
 import time
 
+from _measure import median_s
+
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-sys.path.insert(0, ".")
 
 SF01 = "/root/testdata/sf0.1"
 
@@ -104,7 +104,7 @@ def search_only(sf_dir: str, idx: str) -> None:
         return time.perf_counter() - t0
 
     cold = run()
-    warm = statistics.median(run() for _ in range(3))
+    warm = median_s(run)
     print(f"search {sf_dir}: cold {cold:6.2f}s  warm-median {warm:6.2f}s")
 
 

@@ -10,13 +10,12 @@ diffs, not just in wall-clock.
 from __future__ import annotations
 
 import re
-import sys
 
-sys.path.insert(0, ".")
+import _measure  # noqa: F401  (repo root on sys.path)
 
-from yet_another_map_reduce_spark import plans  # noqa: E402
-from yet_another_map_reduce_spark.queries import QUERIES  # noqa: E402
-from yet_another_map_reduce_spark.session import build_session  # noqa: E402
+from yet_another_map_reduce_spark import plans
+from yet_another_map_reduce_spark.queries import QUERIES
+from yet_another_map_reduce_spark.session import build_session
 
 
 def audit(sf_dir: str) -> str:

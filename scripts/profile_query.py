@@ -1,10 +1,11 @@
 """Per-stage profile of one or more registered queries (guide §1).
 
 Runs each named query through the noop sink with the Spark event log
-enabled, then aggregates the log into a per-stage table: wall time,
-task time, shuffle read/write bytes, input bytes, and the first line of
-the stage's callsite — enough to see which operator inside a composed
-query owns the time, without the UI (disabled in this container).
+enabled, then reads the log through ``perfbench.eventlog`` into a
+per-stage table of the jobs described ``PROFILE:<query>``: wall time,
+executor run and CPU time, task count, input and shuffle read/write MB
+— enough to see which stage inside a composed query owns the time,
+without the Spark UI.
 Under each table: the generated classes the profiled runs compiled and
 their compile milliseconds (``plans.codegen_compiles``; a warm run that
 compiles nothing reuses every class it generated).
@@ -16,22 +17,23 @@ Usage:
 
 from __future__ import annotations
 
-import json
 import os
 import shutil
 import sys
 import time
 
-sys.path.insert(0, ".")
+import _measure  # noqa: F401  (repo root on sys.path)
 
-from yet_another_map_reduce_spark.plans import codegen_compiles  # noqa: E402
-from yet_another_map_reduce_spark.queries import QUERIES  # noqa: E402
-from yet_another_map_reduce_spark.session import build_session  # noqa: E402
+from perfbench.eventlog import read_dir
 
 EVDIR = "/tmp/spark-events-profile"
 
 
 def profile(names: list[str], sf_dir: str, runs: int = 1) -> None:
+    from yet_another_map_reduce_spark.plans import codegen_compiles
+    from yet_another_map_reduce_spark.queries import QUERIES
+    from yet_another_map_reduce_spark.session import build_session
+
     shutil.rmtree(EVDIR, ignore_errors=True)
     os.makedirs(EVDIR, exist_ok=True)
     spark = build_session(
@@ -60,91 +62,51 @@ def profile(names: list[str], sf_dir: str, runs: int = 1) -> None:
         compiles[name] = (n1 - n0, ms1 - ms0)
         print(f"{name}: {(t1 - t0) / runs:.3f}s/run ({runs} runs)")
     spark.stop()
+    report(read_dir(EVDIR), compiles)
 
-    # --- parse the event log ---
-    ev_files = []
-    for root, _dirs, files in os.walk(EVDIR):
-        ev_files += [
-            os.path.join(root, f) for f in files if not f.startswith("appstatus")
-        ]
-    jobs: dict[int, dict] = {}
-    stages: dict[tuple[int, int], dict] = {}
-    for path in ev_files:
-        with open(path) as fh:
-            for line in fh:
-                try:
-                    e = json.loads(line)
-                except json.JSONDecodeError:
+
+def stage_rows(logs) -> dict[str, list[tuple]]:
+    """Per profiled query, one row per stage its ``PROFILE:`` jobs ran, in
+    job order: ``(job, stage, wall_s, run_s, cpu_s, tasks, in_mb,
+    shuffle_read_mb, shuffle_write_mb)``.  First attempts only; skipped
+    stages never complete and are left out."""
+    per_q: dict[str, list[tuple]] = {}
+    for log in logs:
+        for jid, job in sorted(log.jobs.items()):
+            desc = job.properties.get("spark.job.description") or ""
+            if not desc.startswith("PROFILE:"):
+                continue
+            for sid in job.stage_ids:
+                st = log.stages.get((sid, 0))
+                if st is None or st.complete is None:
                     continue
-                et = e.get("Event")
-                if et == "SparkListenerJobStart":
-                    props = e.get("Properties") or {}
-                    jobs[e["Job ID"]] = {
-                        "desc": props.get("spark.job.description", ""),
-                        "stages": [s["Stage ID"] for s in e.get("Stage Infos", [])],
-                        "t0": e.get("Submission Time", 0) / 1000.0,
-                    }
-                elif et == "SparkListenerJobEnd":
-                    if e["Job ID"] in jobs:
-                        jobs[e["Job ID"]]["t1"] = e.get("Completion Time", 0) / 1000.0
-                elif et == "SparkListenerStageCompleted":
-                    si = e["Stage Info"]
-                    key = (si["Stage ID"], si["Stage Attempt ID"])
-                    sub = si.get("Submission Time")
-                    com = si.get("Completion Time")
-                    acc = {
-                        a.get("Name"): a.get("Value")
-                        for a in si.get("Accumulables", [])
-                    }
+                m = st.metrics
+                wall = st.complete - st.submit if st.submit is not None else 0.0
+                per_q.setdefault(desc.split(":", 1)[1], []).append((
+                    jid, sid, wall, m["executor_run_s"], m["executor_cpu_s"],
+                    st.tasks, m["input_mb"], m["shuffle_read_mb"],
+                    m["shuffle_write_mb"],
+                ))
+    return per_q
 
-                    def _n(label: str) -> float:
-                        v = acc.get(label, 0)
-                        try:
-                            return float(v)
-                        except (TypeError, ValueError):
-                            return 0.0
 
-                    stages[key] = {
-                        "name": si.get("Stage Name", ""),
-                        "ntasks": si.get("Number of Tasks", 0),
-                        "wall": ((com - sub) / 1000.0) if sub and com else 0.0,
-                        "exec_ms": _n("internal.metrics.executorRunTime"),
-                        "cpu_ms": _n("internal.metrics.executorCpuTime") / 1e6,
-                        "sh_read": _n("internal.metrics.shuffle.read.remoteBytesRead")
-                        + _n("internal.metrics.shuffle.read.localBytesRead"),
-                        "sh_write": _n("internal.metrics.shuffle.write.bytesWritten"),
-                        "input": _n("internal.metrics.input.bytesRead"),
-                    }
-
-    # group stages by job description
-    per_q: dict[str, list] = {}
-    for jid, j in sorted(jobs.items()):
-        desc = j.get("desc", "")
-        if not desc.startswith("PROFILE:"):
-            continue
-        qname = desc.split(":", 1)[1]
-        for sid in j["stages"]:
-            st = stages.get((sid, 0))
-            if st:
-                per_q.setdefault(qname, []).append((jid, sid, st))
-
-    for qname, rows in per_q.items():
+def report(logs, compiles: dict[str, tuple[int, float]]) -> None:
+    for qname, rows in stage_rows(logs).items():
         print(f"\n=== {qname} ===")
         print(
             f"{'job':>4} {'stage':>5} {'wall_s':>7} {'task_s':>7} {'cpu_s':>7} "
-            f"{'tasks':>5} {'in_MB':>7} {'shR_MB':>7} {'shW_MB':>7}  name"
+            f"{'tasks':>5} {'in_MB':>7} {'shR_MB':>7} {'shW_MB':>7}"
         )
-        tot = 0.0
-        for jid, sid, st in rows:
-            tot += st["wall"]
+        for jid, sid, wall, run, cpu, tasks, inp, shr, shw in rows:
             print(
-                f"{jid:>4} {sid:>5} {st['wall']:>7.2f} {st['exec_ms'] / 1000:>7.2f} "
-                f"{st['cpu_ms'] / 1000:>7.2f} {st['ntasks']:>5} "
-                f"{st['input'] / 1e6:>7.1f} {st['sh_read'] / 1e6:>7.1f} "
-                f"{st['sh_write'] / 1e6:>7.1f}  {st['name'][:60]}"
+                f"{jid:>4} {sid:>5} {wall:>7.2f} {run:>7.2f} {cpu:>7.2f} "
+                f"{tasks:>5} {inp:>7.1f} {shr:>7.1f} {shw:>7.1f}"
             )
-        njobs = len({jid for jid, _, _ in rows})
-        print(f"  stage-wall total {tot:.2f}s across {njobs} jobs, {len(rows)} stages")
+        njobs = len({r[0] for r in rows})
+        print(
+            f"  stage-wall total {sum(r[2] for r in rows):.2f}s across "
+            f"{njobs} jobs, {len(rows)} stages"
+        )
         n, ms = compiles[qname]
         print(f"  codegen: {n} classes compiled, {ms:.0f} ms")
 

@@ -27,18 +27,16 @@ from __future__ import annotations
 import argparse
 import json
 import os
-import sys
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+from _measure import ROOT
 
-from yet_another_map_reduce_spark.fingerprints import (  # noqa: E402
+from yet_another_map_reduce_spark.fingerprints import (
     FINGERPRINTS_FILE,
     correctness_history,
     load_recorded,
     query_components,
 )
-from yet_another_map_reduce_spark.queries import ORACLES, QUERIES  # noqa: E402
+from yet_another_map_reduce_spark.queries import ORACLES, QUERIES
 
 
 def main() -> None:

@@ -12,14 +12,12 @@ Usage: python scripts/scale_check.py [replica_dir] [query ...]
 from __future__ import annotations
 
 import os
-import statistics
 import sys
-import time
+
+from _measure import median_s, warn_if_loaded
 
 # 10x data needs a real heap in local mode (the suite default 1g OOMs)
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-
-sys.path.insert(0, ".")
 
 from yet_another_map_reduce_spark.queries import QUERIES  # noqa: E402
 from yet_another_map_reduce_spark.session import build_session  # noqa: E402
@@ -42,46 +40,20 @@ DEFAULT = [
 ]
 
 
-def median_time(q, spark, sf_dir, runs=3) -> float:
-    def force():
-        QUERIES[q](spark, sf_dir).write.format("noop").mode("overwrite").save()
-
-    force()  # warmup (includes any train-once model build for this sf)
-    ts = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        force()
-        ts.append(time.perf_counter() - t0)
-    return statistics.median(ts)
-
-
-def warn_if_loaded(threshold: float = 4.0) -> None:
-    """Co-tenant guard: a loaded box inflates readings 3-30x (every
-    round has had one contaminated row - r6 text_chunking 43x, r7's
-    wholesale drift, r9 curation_v2/fuzzy_match).  Warn loudly so the
-    reading is treated as an upper bound, not frozen or 'fixed'."""
-    import os
-
-    load = os.getloadavg()[0]
-    if load > threshold:
-        print(
-            f"WARNING: loadavg {load:.1f} > {threshold} - another process"
-            " is sharing this box; treat these timings as upper bounds"
-            " and re-measure idle before freezing/diagnosing.",
-            flush=True,
-        )
-
-
 def main() -> None:
     replica = sys.argv[1] if len(sys.argv) > 1 else "/tmp/sf1_replica"
     names = sys.argv[2:] or DEFAULT
     spark = build_session(app_name="scale-check")
     warn_if_loaded()
+
+    def force(q, sf_dir):
+        return lambda: QUERIES[q](spark, sf_dir).write.format("noop").mode("overwrite").save()
+
     print(f"{'query':34s} {'sf0.1':>8s} {'10x':>8s} {'ratio':>6s}", flush=True)
     for q in names:
-        a = median_time(q, spark, SF01)
+        a = median_s(force(q, SF01))
         print(f"{q:34s} {a:8.2f}", end="", flush=True)
-        b = median_time(q, spark, replica)
+        b = median_s(force(q, replica))
         print(f" {b:8.2f} {b / a:6.2f}", flush=True)
 
 

@@ -23,9 +23,9 @@ import sys
 import threading
 import time
 
-os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
+from _measure import warn_if_loaded
 
-sys.path.insert(0, ".")
+os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
 
 from yet_another_map_reduce_spark.queries import QUERIES  # noqa: E402
 from yet_another_map_reduce_spark.session import build_session  # noqa: E402
@@ -56,23 +56,6 @@ def timed(spark, name, sf_dir, budget_s) -> float | None:
         th.join(30)
         return None
     return out.get("t")
-
-
-def warn_if_loaded(threshold: float = 4.0) -> None:
-    """Co-tenant guard: a loaded box inflates readings 3-30x (every
-    round has had one contaminated row - r6 text_chunking 43x, r7's
-    wholesale drift, r9 curation_v2/fuzzy_match).  Warn loudly so the
-    reading is treated as an upper bound, not frozen or 'fixed'."""
-    import os
-
-    load = os.getloadavg()[0]
-    if load > threshold:
-        print(
-            f"WARNING: loadavg {load:.1f} > {threshold} - another process"
-            " is sharing this box; treat these timings as upper bounds"
-            " and re-measure idle before freezing/diagnosing.",
-            flush=True,
-        )
 
 
 def main() -> None:

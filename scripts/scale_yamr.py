@@ -23,13 +23,13 @@ from __future__ import annotations
 
 import os
 import shutil
-import statistics
 import sys
 import tempfile
 import time
 
+from _measure import median_s
+
 os.environ.setdefault("SPARK_GRAFT_DRIVER_MEM", "48g")
-sys.path.insert(0, ".")
 
 from pyspark.sql import functions as F  # noqa: E402
 
@@ -38,15 +38,6 @@ from yet_another_map_reduce_spark.sources import yamr_format  # noqa: E402
 from yet_another_map_reduce_spark.sources.readers import read_table  # noqa: E402
 
 SF01 = "/root/testdata/sf0.1"
-
-
-def med(fn, runs=3):
-    ts = []
-    for _ in range(runs):
-        t0 = time.perf_counter()
-        fn()
-        ts.append(time.perf_counter() - t0)
-    return statistics.median(ts)
 
 
 def run_scale(spark, sf_dir: str, tag: str) -> dict:
@@ -67,19 +58,16 @@ def run_scale(spark, sf_dir: str, tag: str) -> dict:
             "path", out
         ).option("name", "tx").mode("overwrite").save()
 
-    # warmup absorbs Python-worker spin-up + range-sampler JIT so the
-    # 1x row isn't charged for session startup
-    vals.limit(1000).write.format("yamr").option("path", out).option(
-        "name", "warm"
-    ).mode("overwrite").save()
-    t = med(write_once, runs=1)
+    # median_s's warm-up write absorbs Python-worker spin-up and
+    # range-sampler JIT so the 1x row isn't charged for session startup
+    t = median_s(write_once, runs=1)
     res["write_s"] = t
     res["write_rows_per_s"] = n / t
 
     reader = lambda: spark.read.format("yamr").option("path", out).option(  # noqa: E731
         "name", "tx"
     ).load()
-    res["full_read_s"] = med(lambda: reader().agg(F.count("*")).collect())
+    res["full_read_s"] = median_s(lambda: reader().agg(F.count("*")).collect())
 
     # narrow range ~ 1/32 of the keyspace; selectivity from the sidecar
     lo, hi = "000000050000", "000000054999"
@@ -92,7 +80,7 @@ def run_scale(spark, sf_dir: str, tag: str) -> dict:
     )
     res["chunks_total"] = len(manifest)
     res["chunks_opened"] = opened
-    res["pruned_read_s"] = med(
+    res["pruned_read_s"] = median_s(
         lambda: reader()
         .where((F.col("value") >= lo) & (F.col("value") < hi))
         .agg(F.count("*"))

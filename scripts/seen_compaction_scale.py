@@ -24,19 +24,18 @@ from __future__ import annotations
 
 import os
 import shutil
-import statistics
 import subprocess
 import sys
 import time
 
-sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+from _measure import median_s, warn_if_loaded
 
-from pyspark.sql import functions as F  # noqa: E402
+from pyspark.sql import functions as F
 
-from yet_another_map_reduce_spark.operators import dedup  # noqa: E402
-from yet_another_map_reduce_spark.session import build_session  # noqa: E402
-from yet_another_map_reduce_spark.sources.readers import read_table  # noqa: E402
-from yet_another_map_reduce_spark.streaming.ingest import (  # noqa: E402
+from yet_another_map_reduce_spark.operators import dedup
+from yet_another_map_reduce_spark.session import build_session
+from yet_another_map_reduce_spark.sources.readers import read_table
+from yet_another_map_reduce_spark.streaming.ingest import (
     compact_seen,
     read_seen_pruned,
     seen_probe_paths,
@@ -48,9 +47,7 @@ SCRATCH = "/tmp/seen_lsm_scratch"
 def main() -> None:
     scale = int(sys.argv[1]) if len(sys.argv) > 1 else 10000
     base = f"/tmp/ingest_seen_sorted_{scale}x/batch=-2"
-    load = os.getloadavg()[0]
-    if load > 4.0:
-        print(f"WARNING: loadavg {load:.1f} — readings may be contaminated")
+    warn_if_loaded()
     if not os.path.isdir(base):
         sys.exit(f"run scripts/ingest_dedup_scale.py {scale} only first (builds the relation)")
 
@@ -79,20 +76,16 @@ def main() -> None:
     print(f"minor compaction: {t_minor:.2f}s folded {n_minor:,} fps -> levels {levels}")
 
     def probe():
-        t0 = time.perf_counter()
         dedup.incremental_dedup(
             batch, read_seen_pruned(spark, SCRATCH, keys), "text", "doc_id",
             seen_fp_col="fp",
         ).write.format("noop").mode("overwrite").save()
-        return time.perf_counter() - t0
 
-    probe()
-    ts = [probe() for _ in range(5)]
+    t_probe = median_s(probe, runs=5)
     paths, selected, skipped = seen_probe_paths(SCRATCH, keys)
     print(
-        f"pruned probe across {len(levels)} levels: median "
-        f"{statistics.median(ts):.3f}s (runs {[round(t, 3) for t in ts]}) "
-        f"files={selected}/{selected + skipped}"
+        f"pruned probe across {len(levels)} levels: median of 5 "
+        f"{t_probe:.3f}s files={selected}/{selected + skipped}"
     )
 
     t0 = time.perf_counter()

@@ -14,11 +14,10 @@ from __future__ import annotations
 
 import pathlib
 import re
-import sys
 
-sys.path.insert(0, ".")
+import _measure  # noqa: F401  (repo root on sys.path)
 
-from yet_another_map_reduce_spark.queries import QUERIES  # noqa: E402
+from yet_another_map_reduce_spark.queries import QUERIES
 
 N = len(QUERIES)
 REPO = pathlib.Path(__file__).resolve().parent.parent

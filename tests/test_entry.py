@@ -233,7 +233,7 @@ def test_no_zero_coverage_operator_functions():
     """Every public operator function is referenced by the registry or
     by at least one test — the r11 audit invariant (it caught a registry
     row inlining its own logic and five wrapper functions with no
-    coverage anywhere).  Mirrors scripts/audit_registry_refs.py.
+    coverage anywhere).
     References match on identifier boundaries, not substrings: a name
     that prefixes another identifier (hash_embed vs hash_embed_dense)
     must not read as covered (r11 ADVICE)."""
@@ -268,7 +268,7 @@ def test_no_zero_coverage_operator_functions():
                 uncovered.append(f"{mod[:-3]}.{node.name}")
     assert uncovered == [], (
         f"operator functions with no registry or test reference: {uncovered} "
-        "— cover them or delete them (see scripts/audit_registry_refs.py)"
+        "— cover them or delete them"
     )
 
 
@@ -406,3 +406,106 @@ def test_data_identity_decided_in_one_place():
         for m in re.findall(r"^(\w*_MEMO)\s*[:=]", src, re.M)
     ]
     assert memos == [("yet_another_map_reduce_spark/caching.py", "_MEMO")]
+
+
+def test_scripts_compile_and_docs_cite_only_existing_scripts(tmp_path):
+    """Every ``scripts/*.py`` compiles and none puts the working
+    directory on ``sys.path`` (``scripts/_measure.py`` finds the repo
+    root from its own file, so a script runs from any directory).
+    ``check_parity.py`` is the one exception: the benchmark loads it by
+    file path and keeps it byte-stable.  Every ``scripts/<name>.py`` the
+    package, the tests or the living docs cite must exist; the history
+    files (BASELINE.md, CHANGES.md, VERDICT.md, ROADMAP.md,
+    OPTIMIZATION_*) record scripts since removed and are not checked."""
+    import pathlib
+    import py_compile
+    import re
+
+    root = pathlib.Path(__file__).resolve().parent.parent
+    scripts = sorted((root / "scripts").glob("*.py"))
+    for p in scripts:
+        py_compile.compile(str(p), cfile=str(tmp_path / f"{p.stem}.pyc"), doraise=True)
+    cwd_path = [
+        p.name for p in scripts if 'sys.path.insert(0, ".")' in p.read_text(encoding="utf-8")
+    ]
+    assert cwd_path == ["check_parity.py"]
+
+    cited = [
+        *(root / "yet_another_map_reduce_spark").rglob("*.py"),
+        *(root / "tests").rglob("*.py"),
+        *(root / d for d in ("README.md", "COVERAGE.md", "SCALING.md", "PLANS.md")),
+        root / ".claude" / "skills" / "verify" / "SKILL.md",
+    ]
+    missing = sorted(
+        f"{p.relative_to(root)}: scripts/{name}.py"
+        for p in cited
+        if p.exists()
+        for name in re.findall(r"scripts/(\w+)\.py", p.read_text(encoding="utf-8"))
+        if not (root / "scripts" / f"{name}.py").exists()
+    )
+    assert missing == []
+
+
+def test_profile_query_table_reads_only_profiled_jobs(tmp_path, monkeypatch, capsys):
+    """``scripts/profile_query.py``'s per-stage table from a synthetic
+    event log: two ``PROFILE:`` jobs and one unrelated job.  Each profiled
+    stage that ran gives one row of (job, stage, wall s, run s, CPU s,
+    tasks, input MB, shuffle read MB, shuffle write MB); the skipped stage
+    and the unrelated job are left out."""
+    import importlib.util
+    import json
+    import pathlib
+
+    import pytest
+
+    def job(jid, desc, stages, t):
+        return [
+            {"Event": "SparkListenerJobStart", "Job ID": jid, "Submission Time": t,
+             "Stage IDs": stages, "Properties": {"spark.job.description": desc}},
+            {"Event": "SparkListenerJobEnd", "Job ID": jid, "Completion Time": t + 5000},
+        ]
+
+    def stage(sid, t0, t1, tasks, acc):
+        return [
+            {"Event": "SparkListenerTaskEnd", "Stage ID": sid, "Stage Attempt ID": 0,
+             "Task End Reason": {"Reason": "Success"}}
+        ] * tasks + [
+            {"Event": "SparkListenerStageCompleted", "Stage Info": {
+                "Stage ID": sid, "Stage Attempt ID": 0, "Submission Time": t0,
+                "Completion Time": t1,
+                "Accumulables": [{"Name": f"internal.metrics.{k}", "Value": v}
+                                 for k, v in acc.items()]}}
+        ]
+
+    events = [
+        *job(0, "PROFILE:q1", [0, 1], 1000),  # stage 1 is skipped
+        *stage(0, 1000, 3500, 2, {"executorRunTime": 2000, "executorCpuTime": 1.5e9,
+                                  "input.bytesRead": 4e6,
+                                  "shuffle.write.bytesWritten": 2e6}),
+        *job(1, "unrelated", [2], 7000),
+        *stage(2, 7000, 9000, 1, {"executorRunTime": 900}),
+        *job(2, "PROFILE:q2", [3], 10000),
+        *stage(3, 10000, 10500, 3, {"executorRunTime": 1200, "executorCpuTime": 4e8,
+                                    "shuffle.read.localBytesRead": 1e6,
+                                    "shuffle.read.remoteBytesRead": 5e5}),
+    ]
+    (tmp_path / "app-1").write_text("".join(json.dumps(e) + "\n" for e in events))
+
+    scripts = pathlib.Path(__file__).resolve().parent.parent / "scripts"
+    monkeypatch.syspath_prepend(str(scripts))
+    spec = importlib.util.spec_from_file_location("profile_query", scripts / "profile_query.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    logs = mod.read_dir(str(tmp_path))
+    rows = mod.stage_rows(logs)
+    assert rows == {
+        "q1": [pytest.approx((0, 0, 2.5, 2.0, 1.5, 2, 4.0, 0.0, 2.0))],
+        "q2": [pytest.approx((2, 3, 0.5, 1.2, 0.4, 3, 0.0, 1.5, 0.0))],
+    }
+    mod.report(logs, {"q1": (3, 12.0), "q2": (0, 0.0)})
+    out = capsys.readouterr().out
+    assert "   0     0    2.50    2.00    1.50     2     4.0     0.0     2.0\n" in out
+    assert "   2     3    0.50    1.20    0.40     3     0.0     1.5     0.0\n" in out
+    assert out.count("=== ") == 2 and "unrelated" not in out
+    assert "codegen: 3 classes compiled, 12 ms" in out

@@ -900,6 +900,31 @@ def test_ivf_training_matches_python_lloyd(spark):
     }
 
 
+def test_ivf_training_skips_null_vectors(spark):
+    """A NULL vector takes no part in IVF training: the centroids, and
+    ``kmeans_assign``'s clusters of the non-NULL rows, equal those of the
+    same corpus with the NULL rows removed.  Id 2 is NULL, so it sits
+    among the ``nlist`` lowest ids the trainer seeds from."""
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    clean = df.where(F.col("v").isNotNull())
+    for nlist in (1, 2):
+        got, want = (
+            sorted(map(tuple, similarity.train_ivf_centroids(d, "vec_id", "v", nlist, 2).collect()))
+            for d in (df, clean)
+        )
+        assert got == want and len(got) == nlist
+        got, want = (
+            {
+                r["vec_id"]: (r["cluster_id"], r["cos"])
+                for r in similarity.kmeans_assign(d, "vec_id", "v", nlist, 2).collect()
+                if r["vec_id"] != 2
+            }
+            for d in (df, clean)
+        )
+        assert got == want and len(got) == 3
+
+
 def test_pq_training_matches_python_lloyd(spark):
     """``train_pq_codebooks`` against a pure-Python per-subspace Lloyd's:
     the lowest-id vectors' subvectors seed each codebook, a subvector

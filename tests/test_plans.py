@@ -1068,6 +1068,31 @@ def test_ivfpq_vacuum_collects_orphans_keeps_reachable(spark, sf_dir, tmp_path):
     assert results() == before
 
 
+def _planted_anisotropic(spark, n_clusters: int, per: int, dim: int, seed: int = 7):
+    """Overlapping ANISOTROPIC clusters, the geometry where IVF recall
+    slopes with the probed fraction: centers drawn with sigma comparable
+    to the within-cluster spread (N(0, 0.4)) and per-axis scales
+    U(0.05, 1), so a vector's true cosine neighborhood straddles several
+    IVF cells.  The same seeded geometry produced BASELINE.md's
+    probe-fraction recall rows.
+
+    Returns ``(vec_id long, embedding array<double>)`` with values
+    6-rounded for cross-engine replayability."""
+    import numpy as np
+
+    rng = np.random.default_rng(seed)
+    centers = rng.normal(0.0, 0.4, (n_clusters, dim))
+    scales = rng.uniform(0.05, 1.0, (n_clusters, dim))
+    rows = []
+    vid = 0
+    for c in range(n_clusters):
+        pts = centers[c] + rng.normal(0.0, 1.0, (per, dim)) * scales[c]
+        for p in pts:
+            rows.append((vid, [round(float(x), 6) for x in p]))
+            vid += 1
+    return spark.createDataFrame(rows, "vec_id long, embedding array<double>")
+
+
 def test_probe_fraction_slopes_recall_on_overlapping_clusters(spark, tmp_path):
     """The probe_fraction knob's reason to exist (r10 verdict item 4):
     on ANISOTROPIC, OVERLAPPING clusters — centers drawn with sigma
@@ -1087,10 +1112,8 @@ def test_probe_fraction_slopes_recall_on_overlapping_clusters(spark, tmp_path):
 
     from yet_another_map_reduce_spark.operators import similarity
 
-    from yet_another_map_reduce_spark.fixtures import planted_anisotropic
-
     n_clusters, per, dim = 24, 100, 16
-    df = planted_anisotropic(spark, n_clusters, per, dim)
+    df = _planted_anisotropic(spark, n_clusters, per, dim)
     q = df.where(F.col("vec_id") % 300 == 0)  # 8 queries
 
     cent = similarity.ivf_centroids(df, "vec_id", "embedding", nlist=n_clusters)

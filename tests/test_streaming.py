@@ -1037,29 +1037,38 @@ def test_maintain_ingest_is_noop_when_already_compacted(spark, sf_dir, tmp_path)
     assert stats2["index_version"] == live_before
 
 
-def test_featurize_text_col_threading_and_mismatch_rejection(spark):
-    """r11 ADVICE: a featurizer that accepts a column argument gets
-    text_col threaded through; a single-argument featurizer (closure
-    hardcoding its column) is rejected loudly for any non-default
-    text_col instead of silently gating on the wrong column."""
+def test_featurize_text_col_threading_and_mismatch_rejection(spark, tmp_path):
+    """``ingest_batch`` calls the gate featurizer with its own
+    ``text_col``, so a non-default text column is gated on the same
+    column that dedup and embedding read; a featurizer that takes no
+    column argument fails loudly at the call."""
     import pytest
 
     from yet_another_map_reduce_spark.queries import with_classifier_features
-    from yet_another_map_reduce_spark.streaming.ingest import _featurized
+    from yet_another_map_reduce_spark.streaming.ingest import ingest_batch
+
+    class Stop(Exception):
+        pass
+
+    calls = []
+
+    def featurize(d, text_col):
+        calls.append((text_col, with_classifier_features(d, text_col)))
+        raise Stop  # the gate's input is all this test needs
 
     df = spark.createDataFrame([(1, "a b c")], "doc_id long, body string")
-    out = _featurized(with_classifier_features, df, "body")
+    kw = dict(
+        index_dir=str(tmp_path / "idx"), seen_dir=str(tmp_path / "seen"),
+        weights=[0], feature_cols=[], text_col="body",
+    )
+    with pytest.raises(Stop):
+        ingest_batch(df, 0, featurize=featurize, **kw)
+    [(text_col, out)] = calls
+    assert text_col == "body"
     assert out.where(F.col("f_tokens") == 3).count() == 1
 
-    def one_arg(d):
-        return d.withColumn("f_tokens", F.lit(0))
-
-    with pytest.raises(ValueError, match="text_col"):
-        _featurized(one_arg, df, "body")
-    # default column: the 1-arg form stays accepted (back-compat)
-    assert _featurized(
-        one_arg, df.withColumnRenamed("body", "text"), "text"
-    ).columns[-1] == "f_tokens"
+    with pytest.raises(TypeError):
+        ingest_batch(df, 0, featurize=lambda d: d, **kw)
 
 
 def test_compact_seen_range_layout_and_probe_pruning(spark, sf_dir, tmp_path):

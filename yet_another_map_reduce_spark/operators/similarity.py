@@ -571,7 +571,10 @@ def _ivf_lloyd(
     corpus: DataFrame, id_col: str, vec_col: str, nlist: int, iterations: int
 ) -> list[list[float]]:
     """The Lloyd's loop of :func:`train_ivf_centroids` and
-    :func:`kmeans_assign`; entry ``i`` of the returned list is cell ``i``."""
+    :func:`kmeans_assign`; entry ``i`` of the returned list is cell ``i``.
+    NULL vectors take no part in seeding or assignment, as in
+    :func:`train_pq_codebooks`."""
+    corpus = corpus.where(F.col(vec_col).isNotNull())
     seeds = ivf_centroids(corpus, id_col, vec_col, nlist).collect()
     cents: list[list[float]] = [list(r["__centv"]) for r in seeds]
     vecs = corpus.select(_dcast(vec_col).alias("__v"))

@@ -705,7 +705,8 @@ def _compile_block_decoder(plans):
     ``_read_value`` call per field — identical semantics, and every
     corrupt-length/overlong-varint guard is emitted into the generated
     source verbatim (the corruption fuzz test runs through this path).
-    Measured ~2.5× on a 200k-row container (scripts/avro_scale.py)."""
+    Measured ~2.5× on a 200k-row container (BASELINE.md, "codegen'd avro
+    block decoder")."""
     varint = """
         acc = 0
         shift = 0
@@ -1141,8 +1142,8 @@ def _read_arrow_batches(partition, read_schema, arrow_schema):
     tuples — the per-row decode is identical to the tuple path (same
     ``_read_value``, same by-name resolution), but handing Spark
     columnar batches skips the per-row pickle round-trip.  Measured a
-    modest ~1.25× on a 600k-row single-split scan (scripts/
-    avro_scale.py): the pure-Python field decode dominates, so the real
+    modest ~1.25× on a 600k-row single-split scan (BASELINE.md, "pyavro
+    at table scale"): the pure-Python field decode dominates, so the real
     scan lever is SPLIT parallelism (sync-boundary splits fan one
     container across cores), and the right 100 TB posture is landing
     avro → parquet once, not serving analytics from avro."""

@@ -62,7 +62,7 @@ def ingest_batch(
     seen_dir: str,
     weights: list[int],
     feature_cols: list[str],
-    featurize: Callable[[DataFrame], DataFrame],
+    featurize: Callable[[DataFrame, str], DataFrame],
     threshold: int = 0,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -95,17 +95,10 @@ def ingest_batch(
         ).select(id_col)
     fresh = batch_df.join(fresh_ids, id_col)
 
-    # 2. stateless quality gate with the frozen model.  featurize gets
-    # text_col threaded through when it accepts a column argument (the
-    # shipped default, queries.with_classifier_features, does); a
-    # single-argument featurizer hardcodes its column, so a mismatched
-    # text_col would dedup/embed one column while gating on another —
-    # reject that loudly instead of silently mis-gating (r11 ADVICE)
+    # 2. stateless quality gate with the frozen model, featurized on the
+    # same text_col that dedup and embedding read
     gated = classify.quality_gate(
-        _featurized(featurize, fresh, text_col),
-        weights,
-        feature_cols,
-        threshold=threshold,
+        featurize(fresh, text_col), weights, feature_cols, threshold=threshold
     )
 
     # 3. embed + exactly-once index append (batch_id is the txn token).
@@ -131,43 +124,6 @@ def ingest_batch(
         ).parquet(os.path.join(seen_dir, f"batch={batch_id}"))
     finally:
         vecs.unpersist()
-
-
-def _featurized(
-    featurize: Callable, df: DataFrame, text_col: str
-) -> DataFrame:
-    """Apply the gate featurizer with ``text_col`` threaded through.
-    A featurizer that only takes the frame (a closure hardcoding its
-    column) is accepted ONLY for the default ``text_col='text'`` —
-    otherwise dedup/embedding would run on ``text_col`` while the gate
-    scores whatever column the closure baked in (r11 ADVICE: silent
-    mis-gating at worst, AnalysisException at best)."""
-    import inspect
-
-    try:
-        params = list(inspect.signature(featurize).parameters.values())
-    except (TypeError, ValueError):
-        params = []
-    takes_col = any(p.kind == p.VAR_POSITIONAL for p in params) or (
-        len(
-            [
-                p
-                for p in params
-                if p.kind in (p.POSITIONAL_ONLY, p.POSITIONAL_OR_KEYWORD)
-            ]
-        )
-        >= 2
-    )
-    if takes_col:
-        return featurize(df, text_col)
-    if text_col != "text":
-        raise ValueError(
-            f"featurize takes no text-column argument but text_col="
-            f"{text_col!r}: the gate would score a different column "
-            "than the one being deduped/embedded; use a featurizer "
-            "accepting (df, text_col)"
-        )
-    return featurize(df)
 
 
 def _seen_exists(seen_dir: str) -> bool:
@@ -453,7 +409,7 @@ def streaming_ingest_pipeline(
     checkpoint_dir: str,
     weights: list[int],
     feature_cols: list[str],
-    featurize: Callable[[DataFrame], DataFrame],
+    featurize: Callable[[DataFrame, str], DataFrame],
     threshold: int = 0,
     id_col: str = "doc_id",
     text_col: str = "text",
