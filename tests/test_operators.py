@@ -925,6 +925,21 @@ def test_ivf_training_skips_null_vectors(spark):
         assert got == want and len(got) == 3
 
 
+def test_kmeans_assign_gives_null_vectors_no_cluster(spark):
+    """A NULL vector has no nearest centroid, so ``kmeans_assign`` gives
+    it a NULL ``cluster_id`` and ``cos``.  Every dot product of a NULL
+    vector is NULL, and the argmax over (d, -cid) structs would still
+    pick cluster 0."""
+    rows = [(0, [1.0, 0.0]), (1, [0.0, 1.0]), (2, None), (3, [1.0, 1.0])]
+    df = spark.createDataFrame(rows, "vec_id long, v array<double>")
+    out = {
+        r["vec_id"]: (r["cluster_id"], r["cos"])
+        for r in similarity.kmeans_assign(df, "vec_id", "v", 2, 2).collect()
+    }
+    assert out[2] == (None, None)
+    assert all(out[i][0] in (0, 1) and out[i][1] is not None for i in (0, 1, 3))
+
+
 def test_pq_training_matches_python_lloyd(spark):
     """``train_pq_codebooks`` against a pure-Python per-subspace Lloyd's:
     the lowest-id vectors' subvectors seed each codebook, a subvector
@@ -1111,6 +1126,33 @@ def test_global_ranked_equals_unpartitioned_window(spark):
         ).collect()
     }
     assert got == want
+
+
+def test_global_ranked_total_equals_window_count(spark):
+    """The distributed rank with a total, on a 13-partition input, equals
+    ``row_number()`` and ``count()`` over an unpartitioned window.  The
+    total is a whole-frame sum in the offsets window, so the whole rank
+    is 6 jobs (local[4]); a separate total aggregate plus a broadcast
+    cross join made it 9."""
+    from pyspark.sql import Window
+
+    from yet_another_map_reduce_spark.operators import sorts
+
+    rows = [(i, float((i * 37) % 19)) for i in range(500)]
+    df = spark.createDataFrame(rows, "id long, v double").repartition(13)
+    order = [F.col("v").desc(), F.col("id").asc()]
+    got, jobs = _jobs_launched(
+        spark, "ranked-total",
+        lambda: sorts.global_ranked(df, order, "rank", total_col="n").collect(),
+    )
+    want = df.select(
+        "id", "v",
+        F.row_number().over(Window.orderBy(*order)).cast("bigint").alias("rank"),
+        F.count(F.lit(1)).over(Window.partitionBy()).alias("n"),
+    ).collect()
+    assert sorted(map(tuple, got)) == sorted(map(tuple, want))
+    assert list(got[0].asDict()) == ["id", "v", "rank", "n"]
+    assert jobs <= 6, jobs
 
 
 def test_histogram_equidepth_ntile_formula_matches_builtin(spark):
@@ -1374,6 +1416,46 @@ def test_bigram_lm_score_hand_computed_and_bucketed(spark):
     assert (out[1]["lm_bucket"], out[3]["lm_bucket"], out[2]["lm_bucket"]) == (
         "head", "middle", "tail")
     assert out[1]["n_bigrams"] == 5
+
+
+def test_bigram_lm_score_edges(spark):
+    """Zero rows in, zero rows out; docs with fewer than 2 tokens give
+    ``n_bigrams`` 0 and a NULL bucket; a lone scored doc is ``head``
+    (percent_rank 0); a small corpus ranks in one single-task window,
+    with no range exchange in the plan."""
+    from yet_another_map_reduce_spark.operators import text
+
+    def score(rows):
+        df = spark.createDataFrame(rows, "doc_id long, text string")
+        return text.bigram_lm_score(df, "text", "doc_id")
+
+    assert score([]).collect() == []
+    short = score([(1, "a"), (2, ""), (3, None)]).collect()
+    assert sorted((r["doc_id"], r["n_bigrams"], r["lm_bucket"]) for r in short) == [
+        (1, 0, None), (2, 0, None), (3, 0, None)]
+    one = score([(1, "a b c"), (2, "z")])
+    assert {r["doc_id"]: (r["n_bigrams"], r["lm_bucket"]) for r in one.collect()} == {
+        1: (2, "head"), 2: (0, None)}
+    plan = one._jdf.queryExecution().executedPlan().toString().lower()
+    assert "rangepartitioning" not in plan
+
+
+def test_bigram_lm_queries_warm_job_counts(spark, sf_dir):
+    """Warm Spark jobs (construction + ``toPandas``, second run in one
+    session) at the smoke sf.  The bigram-LM rank runs in one
+    single-task window; construction counts the cached per-doc summary
+    (1 job).  The range-partitioned rank ran warm 14 jobs for
+    ``text_bigram_lm`` and 24 for ``pipeline_curation_v2``, none at
+    construction; this form runs 3 and 13."""
+    from yet_another_map_reduce_spark.queries import QUERIES
+
+    for name, most in (("text_bigram_lm", 3), ("pipeline_curation_v2", 13)):
+        def run():
+            return QUERIES[name](spark, sf_dir).toPandas()
+
+        run()
+        _, jobs = _jobs_launched(spark, f"warm-{name}", run)
+        assert jobs <= most, (name, jobs)
 
 
 def test_build_vocab_rank_and_tiebreak(spark):

@@ -691,7 +691,9 @@ def kmeans_assign(
     cluster-level quality triage in training-data pipelines.
 
     Returns ``(id, cluster_id, cos)`` — one row per input vector, the
-    cosine being the similarity to the assigned centroid.
+    cosine being the similarity to the assigned centroid.  A NULL vector
+    has no nearest centroid: its ``cluster_id`` and ``cos`` are NULL
+    (training skips it too).
 
     Scale shape: training is map-only assignment + one tiny shuffle per
     iteration (see :func:`train_ivf_centroids`), and its centroid list
@@ -724,9 +726,13 @@ def kmeans_assign(
         for cid, unit in units
     )
     best = f"array_max(array({cands}))"
+    # every d of a NULL vector is NULL, and array_max would still pick
+    # the struct with the lowest id
     return corpus.select(
         F.col(id_col),
-        F.expr(f"cast(-(({best}).ni) as bigint)").alias("cluster_id"),
+        F.expr(
+            f"if(`{vec_col}` is null, null, cast(-(({best}).ni) as bigint))"
+        ).alias("cluster_id"),
         F.expr(
             f"round(try_divide(({best}).d, "
             f"sqrt(aggregate({v}, 0.0D, (acc, x) -> acc + x * x))), 6)"

@@ -993,16 +993,30 @@ def bigram_lm_score(
     Zero-bigram docs never enter the tercile ranking, so buckets over
     the scored docs are unchanged.
 
-    Scale shape: the per-doc bigram aggregate is MATERIALIZED once —
-    corpus bigram counts, unigram context counts, and the scoring join
-    all fold from that cached summary relation, so the corpus is read
-    exactly twice (once into the aggregate, once for the vocabulary
-    size V, which needs the tokens a bigram-only relation loses for
-    single-token documents); V rides along as a broadcast 1-row
-    aggregate (no driver-side scalar collect).  The tercile window runs over one 3-column row per
-    document — orders of magnitude smaller than the token stream; past
-    ~10^8 documents swap it for approx-percentile thresholds at the
-    cost of hash-exactness.
+    Scale shape: the per-doc bigram rows are MATERIALIZED once —
+    corpus bigram counts, unigram context counts, the vocabulary size
+    V and the scoring join all fold from that cached relation, so the
+    corpus is tokenized once (plus an id-only column-pruned scan for
+    the zero-bigram docs); V rides along as a broadcast 1-row aggregate
+    (no driver-side scalar collect).  The scored per-doc summary (one
+    3-column row per document) is cached too, and construction counts
+    it: that count is the query's one construction job, and it only
+    materializes earlier a relation the execution reads anyway.  The
+    count gates the tercile rank (``sorts.global_ranked_adaptive``):
+    up to 2M scored docs the rank is one single-task window; past that
+    the range-partitioned ``global_ranked``, so no unpartitioned window
+    ever holds a corpus-sized relation.  Past ~10^8 documents swap the
+    rank for approx-percentile thresholds at the cost of
+    hash-exactness.
+
+    Measured (sf0.01, local[4] on 4 shared vCPUs; 5 interleaved
+    process pairs, each the median of 3 warm runs of construction +
+    ``toPandas``), the always-distributed rank → the gated rank (the
+    second arm also ran with ``build_session``'s DataFrame debugging
+    off):
+    ``text_bigram_lm`` 14 → 3 Spark jobs, median 0.68 → 0.41 s;
+    ``pipeline_curation_v2`` 24 → 13 jobs, 0.92 → 0.76 s.  Every pair
+    was faster for both.
     """
     # ONE map-only Arrow kernel pass (r15): per-document bigram counts
     # (a local dict fold — the former posexplode → lead-window exchange
@@ -1111,25 +1125,28 @@ def bigram_lm_score(
             ),
         )
     )
-    # materialized: the 3-column per-doc summary feeds both the rank
-    # branch and the per-partition counts inside global_ranked — without
-    # the cache each branch re-runs the scoring join tree from docbig
+    # materialized: the 3-column per-doc summary feeds the rank, the
+    # empties' anti-join and (above the gate) the per-partition counts
+    # inside global_ranked — without the cache each re-runs the scoring
+    # join tree from docbig
     doc = term.groupBy(id_col).agg(
         F.sum("__m").cast("bigint").alias("n_bigrams"),
         F.round(F.sum("__lp") / F.sum("__m"), 6).alias("avg_logprob"),
     ).transform(tracked_cache)
-    # percent_rank over ALL docs — but NOT via an unpartitioned window
-    # (single-task at scale; Spark's WindowExec warns at runtime).
-    # global_ranked range-partitions the per-doc summary; with the
-    # unique id tiebreaker rank == row_number == percent_rank's RANK,
-    # so pr = (rank-1)/(n-1) reproduces percent_rank() bit-for-bit.
-    from yet_another_map_reduce_spark.operators.sorts import global_ranked
+    # percent_rank over ALL scored docs, size-gated on the summary's
+    # count (docstring, "Scale shape").  With the unique id tiebreaker
+    # rank == row_number == percent_rank's RANK, so pr = (rank-1)/(n-1)
+    # reproduces percent_rank() bit-for-bit.
+    from yet_another_map_reduce_spark.operators.sorts import (
+        global_ranked_adaptive,
+    )
 
-    ranked = global_ranked(
+    ranked = global_ranked_adaptive(
         doc,
         [F.col("avg_logprob").desc(), F.col(id_col).asc()],
         "__r",
         total_col="__n",
+        n=doc.count(),
     )
     pr = F.when(
         F.col("__n") > 1, (F.col("__r") - 1) / (F.col("__n") - 1)
