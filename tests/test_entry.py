@@ -416,7 +416,11 @@ def test_scripts_compile_and_docs_cite_only_existing_scripts(tmp_path):
     file path and keeps it byte-stable.  Every ``scripts/<name>.py`` the
     package, the tests or the living docs cite must exist; the history
     files (BASELINE.md, CHANGES.md, VERDICT.md, ROADMAP.md,
-    OPTIMIZATION_*) record scripts since removed and are not checked."""
+    OPTIMIZATION_*) record scripts since removed and are not checked.
+    Every ``module.function`` a README.md or COVERAGE.md table row cites
+    must exist in a package module of that name, so a row cannot outlive
+    the function it names."""
+    import ast
     import pathlib
     import py_compile
     import re
@@ -444,6 +448,29 @@ def test_scripts_compile_and_docs_cite_only_existing_scripts(tmp_path):
         if not (root / "scripts" / f"{name}.py").exists()
     )
     assert missing == []
+
+    # every `module.function` a README/COVERAGE table row cites is bound
+    # at the top level of a package module of that name (`name.py` is a
+    # file, not a function)
+    bound: dict[str, set[str]] = {}
+    for p in (root / "yet_another_map_reduce_spark").rglob("*.py"):
+        names = bound.setdefault(p.parent.name if p.stem == "__init__" else p.stem, set())
+        for node in ast.parse(p.read_text(encoding="utf-8")).body:
+            if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                names.add(node.name)
+            elif isinstance(node, ast.Assign):
+                names.update(t.id for t in node.targets if isinstance(t, ast.Name))
+            elif isinstance(node, (ast.Import, ast.ImportFrom)):
+                names.update((a.asname or a.name).split(".")[0] for a in node.names)
+    stale = sorted(
+        f"{doc}: {mod}.{name}"
+        for doc in ("README.md", "COVERAGE.md")
+        for line in (root / doc).read_text(encoding="utf-8").splitlines()
+        if line.startswith("|")
+        for mod, name in re.findall(r"(?<![\w.])(\w+)\.(\w+)", line)
+        if mod in bound and name != "py" and name not in bound[mod]
+    )
+    assert stale == []
 
 
 def test_profile_query_table_reads_only_profiled_jobs(tmp_path, monkeypatch, capsys):

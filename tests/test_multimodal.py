@@ -563,18 +563,26 @@ def test_audio_fingerprint_short_clip_pads_as_silence(spark):
 
 
 def test_audio_near_dup_capped_buckets_reports_drops(spark):
-    """The family's third cap-report twin (no-silent-caps symmetry,
-    r14 verdict polish item): clips sharing a fingerprint band land in
-    the report when oversized, and the capped pairs call indeed
-    suppresses pairs the uncapped call emits."""
+    """No silent caps for audio: ``dedup.banded_hamming_capped_buckets``
+    over the same fingerprints reports the oversized band buckets, and
+    the capped pairs call indeed suppresses pairs the uncapped call
+    emits."""
     from yet_another_map_reduce_spark.operators import multimodal
+    from yet_another_map_reduce_spark.operators.dedup import (
+        banded_hamming_capped_buckets,
+    )
 
     # six clips with the same zero-crossing period -> identical afp:
     # one oversized band bucket in every band at cap 4
     ids = spark.createDataFrame([(3 + 8 * i,) for i in range(6)], "doc_id long")
     media = multimodal.synthetic_wav_media(ids, "doc_id", n_samples=800)
-    report = multimodal.audio_near_dup_capped_buckets(
-        media, bands=4, max_bucket_size=4
+    report = banded_hamming_capped_buckets(
+        multimodal.audio_fingerprint(media),
+        hash_col="afp",
+        id_col="media_id",
+        bits=60,
+        bands=4,
+        max_bucket_size=4,
     ).collect()
     assert report and max(r["n_ids"] for r in report) == 6
     capped = multimodal.audio_near_dup_pairs(media, max_bucket_size=4).count()

@@ -9,7 +9,7 @@ from pyspark.sql import functions as F
 
 from yet_another_map_reduce_spark.sources import Catalog, write_parquet, write_text
 from yet_another_map_reduce_spark.sources.catalog import DatasetNotFound
-from yet_another_map_reduce_spark.sources.readers import read_csv, read_orc, read_table, read_text
+from yet_another_map_reduce_spark.sources.readers import read_csv, read_table
 from yet_another_map_reduce_spark.sources.writers import compact_parquet, overwrite_partitions, write_orc
 
 
@@ -38,7 +38,7 @@ def test_text_roundtrip_with_part_files(spark, tmp_path):
     write_text(df, out, num_partitions=3)
     parts = [f for f in os.listdir(out) if f.startswith("part-")]
     assert len(parts) == 3
-    back = read_text(spark, out)
+    back = spark.read.text(out)
     assert sorted(r["value"] for r in back.collect()) == sorted(f"line{i}" for i in range(10))
 
 
@@ -48,7 +48,7 @@ def test_empty_partitions_are_legal(spark, tmp_path):
     df = spark.createDataFrame([("only",)], "value string")
     out = str(tmp_path / "pad")
     write_text(df, out, num_partitions=4)
-    assert read_text(spark, out).count() == 1
+    assert spark.read.text(out).count() == 1
 
 
 def test_tsv_read_types_the_reference_schema(spark, tmp_path):
@@ -76,7 +76,7 @@ def test_orc_roundtrip_with_partitioning(spark, tmp_path):
     out = str(tmp_path / "orc")
     write_orc(df, out, partition_by=["g"])
     assert sorted(d for d in os.listdir(out) if d.startswith("g=")) == ["g=0", "g=1", "g=2"]
-    back = read_orc(spark, out)
+    back = spark.read.orc(out)
     assert back.count() == 30
     assert back.where(F.col("g") == 2).count() == 10
 
@@ -202,23 +202,6 @@ def test_json_failfast_raises_on_corrupt(spark, tmp_path):
     df = spark.read.schema("id long").option("mode", "FAILFAST").json(str(p))
     with pytest.raises(Exception, match="(?i)malformed|failfast"):
         df.collect()
-
-
-def test_parquet_schema_evolution_merges_and_nulls(spark, tmp_path):
-    from yet_another_map_reduce_spark.sources.readers import read_parquet_evolving
-
-    path = str(tmp_path / "evolving")
-    spark.createDataFrame([(1, "a")], "id long, s string").write.mode(
-        "overwrite"
-    ).parquet(path)
-    # a later producer adds a column
-    spark.createDataFrame([(2, "b", 9.5)], "id long, s string, score double").write.mode(
-        "append"
-    ).parquet(path)
-    df = read_parquet_evolving(spark, path)
-    assert set(df.columns) == {"id", "s", "score"}
-    got = {r["id"]: r["score"] for r in df.collect()}
-    assert got == {1: None, 2: 9.5}
 
 
 def test_read_table_normalizes_events_ts_layouts(spark, sf_dir, tmp_path):
@@ -531,23 +514,6 @@ def test_yamr_chunk_stats_prune_partitions_on_pushed_filters(spark, tmp_path):
     pre = r().load().where(F.col("value").startswith("00"))
     assert pre.rdd.getNumPartitions() < 3
     assert pre.count() == 10
-
-
-def test_xml_roundtrip(spark, tmp_path):
-    """Spark 4 built-in XML source: schema'd write → read roundtrip with
-    nested elements typed back."""
-    from yet_another_map_reduce_spark.sources.readers import read_xml
-    from yet_another_map_reduce_spark.sources.writers import write_xml
-
-    df = spark.createDataFrame(
-        [(1, "alpha", 1.5), (2, "beta", 2.5)], "id long, name string, score double"
-    )
-    out = str(tmp_path / "xml")
-    write_xml(df, out, row_tag="item", root_tag="items", num_partitions=1)
-    back = read_xml(spark, out, row_tag="item")
-    rows = sorted(back.collect(), key=lambda r: r["id"])
-    assert [(r["id"], r["name"], r["score"]) for r in rows] == [
-        (1, "alpha", 1.5), (2, "beta", 2.5)]
 
 
 def test_yamr_concurrent_writer_conflict_aborts_cleanly(spark, tmp_path):

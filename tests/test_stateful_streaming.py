@@ -6,13 +6,9 @@ from __future__ import annotations
 import os
 import time
 
-import pytest
 from pyspark.sql import functions as F
 
-from yet_another_map_reduce_spark.streaming.stateful import (
-    sessionize_with_state,
-    sessionize_with_tws,
-)
+from yet_another_map_reduce_spark.streaming.stateful import sessionize_with_state
 from yet_another_map_reduce_spark.streaming.sources import file_stream
 
 
@@ -47,80 +43,6 @@ def test_sessionize_with_state_accumulates(spark, tmp_path):
     rows = {r["user_id"]: r for r in spark.sql("SELECT * FROM sess_out").collect()}
     assert rows[1]["n_events"] == 2 and rows[1]["total_value"] == 15.0
     assert rows[2]["n_events"] == 1 and rows[2]["total_value"] == 7.0
-
-
-def _has_protobuf() -> bool:
-    # transformWithStateInPandas runs a Python state-server driver that
-    # needs google.protobuf; this container doesn't ship it (and installs
-    # are off-limits), so execution is env-gated like the Kafka connector
-    try:
-        import google.protobuf  # noqa: F401
-
-        return True
-    except ImportError:
-        return False
-
-
-def test_tws_plan_builds_without_execution(spark):
-    """Even without protobuf the Spark 4 API must resolve: the stateful
-    processor plan builds and carries the declared output schema."""
-    schema = "user_id long, value double, ts timestamp"
-    stream = (
-        spark.readStream.format("rate").option("rowsPerSecond", 1).load()
-        .selectExpr("value AS user_id", "CAST(value AS DOUBLE) AS value", "timestamp AS ts")
-    )
-    out = sessionize_with_tws(stream, ttl_ms=1000)
-    assert out.isStreaming
-    assert [f.name for f in out.schema.fields] == [
-        "user_id", "n_events", "total_value", "last_ts",
-    ]
-
-
-@pytest.mark.skipif(not _has_protobuf(), reason="transformWithStateInPandas needs google.protobuf (not in container)")
-def test_tws_sessionize_accumulates_and_carries_state(spark, tmp_path):
-    """transformWithStateInPandas (Spark 4 API): same session contract as
-    applyInPandasWithState, verified across TWO availableNow passes so
-    the named ValueState provably survives a checkpoint restart."""
-    src = os.path.join(str(tmp_path), "tws_src")
-    ckpt = os.path.join(str(tmp_path), "tws_ckpt")
-    out_rows = []
-    schema = "user_id long, value double, ts timestamp"
-
-    def write_batch(rows):
-        (
-            spark.createDataFrame(rows, "user_id long, ts_str string, value double")
-            .withColumn("ts", F.col("ts_str").cast("timestamp"))
-            .drop("ts_str")
-            .select("user_id", "value", "ts")
-            .coalesce(1)
-            .write.mode("append")
-            .parquet(src)
-        )
-
-    def run():
-        stream = file_stream(spark, src, spark.createDataFrame([], schema).schema, fmt="parquet")
-        out = sessionize_with_tws(stream, ttl_ms=600_000)
-        q = (
-            out.writeStream.foreachBatch(lambda bdf, _bid: out_rows.extend(bdf.collect()))
-            .outputMode("update")
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination(120)
-        q.stop()
-
-    write_batch([(1, "2024-01-01 00:00:00", 10.0), (1, "2024-01-01 00:01:00", 5.0),
-                 (2, "2024-01-01 00:02:00", 7.0)])
-    run()
-    rows = {r["user_id"]: r for r in out_rows}
-    assert rows[1]["n_events"] == 2 and rows[1]["total_value"] == 15.0
-    assert rows[2]["n_events"] == 1 and rows[2]["total_value"] == 7.0
-
-    write_batch([(1, "2024-01-01 00:05:00", 2.5)])
-    run()
-    last = max((r for r in out_rows if r["user_id"] == 1), key=lambda r: r["n_events"])
-    assert last["n_events"] == 3 and last["total_value"] == 17.5
 
 
 def test_sessionize_state_carries_across_batches(spark, tmp_path):

@@ -17,7 +17,6 @@ from yet_another_map_reduce_spark.streaming import (
     file_stream,
     streaming_dedup_fuzzy,
     tumbling_windowed,
-    with_watermark,
 )
 
 
@@ -35,7 +34,7 @@ def test_tumbling_window_stream_equals_batch(spark, sf_dir, tmp_path):
     aggs = [F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sum_value")]
 
     windowed = tumbling_windowed(
-        with_watermark(stream, "ts", "1 hour"), "ts", "1 hour", ["event_type"], aggs
+        stream.withWatermark("ts", "1 hour"), "ts", "1 hour", ["event_type"], aggs
     )
     q = (
         windowed.writeStream.format("memory")
@@ -106,7 +105,7 @@ def test_late_data_dropped_by_watermark(spark, tmp_path):
     def run_pass() -> None:
         stream = file_stream(spark, base, fresh.schema, fmt="parquet")
         windowed = tumbling_windowed(
-            with_watermark(stream, "ts", "10 minutes"),
+            stream.withWatermark("ts", "10 minutes"),
             "ts", "1 hour", [], [F.count(F.lit(1)).alias("n")],
         )
         q = (
@@ -145,7 +144,7 @@ def test_session_window_stream_equals_batch(spark, sf_dir, tmp_path):
 
     aggs = [F.count(F.lit(1)).alias("n"), F.round(F.sum("value"), 4).alias("sv")]
     windowed = session_windowed(
-        with_watermark(stream, "ts", "1 hour"), "ts", "2 hours", ["user_id"], aggs
+        stream.withWatermark("ts", "1 hour"), "ts", "2 hours", ["user_id"], aggs
     )
     # session-window streaming aggs reject update mode; complete works
     # (and with a single availableNow batch its emissions are final)

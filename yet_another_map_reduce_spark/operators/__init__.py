@@ -6,7 +6,6 @@ from yet_another_map_reduce_spark.operators import (
     joins,
     mapreduce,
     multimodal,
-    setops,
     similarity,
     sorts,
     text,
@@ -19,7 +18,6 @@ __all__ = [
     "joins",
     "mapreduce",
     "multimodal",
-    "setops",
     "similarity",
     "sorts",
     "text",

@@ -21,16 +21,6 @@ from pyspark.sql import functions as F
 from yet_another_map_reduce_spark.localrel import local_relation
 
 
-def group_agg(df: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
-    """groupBy().agg() — hash agg with automatic partial/final split."""
-    return df.groupBy(*keys).agg(*aggs)
-
-
-def distinct_count(df: DataFrame, keys: list[str], col: str, alias: str) -> DataFrame:
-    """Exact COUNT(DISTINCT col) per group (two-phase shuffle)."""
-    return df.groupBy(*keys).agg(F.countDistinct(col).alias(alias))
-
-
 def approx_distinct_count(df: DataFrame, keys: list[str], col: str, alias: str, rsd: float = 0.05) -> DataFrame:
     """HyperLogLog++ COUNT(DISTINCT) — the 100 TB path: fixed-size sketch
     per group instead of shuffling every distinct value."""
@@ -342,56 +332,6 @@ def profile_columns(
     return row.select(
         F.explode(F.array(*per)).alias("__p")
     ).select("__p.col_name", "__p.n_rows", "__p.n_nulls", "__p.n_distinct")
-
-
-def frequent_items(
-    df: DataFrame,
-    col: str,
-    k: int = 20,
-    top: int | None = None,
-    exact_recount: bool = True,
-) -> DataFrame:
-    """Heavy hitters via mergeable Misra-Gries summaries.
-
-    Stage 1 (``mapInPandas``): each partition keeps at most ``k``
-    counters — per Arrow batch the values are counted vectorized
-    (``value_counts``), folded into the running summary, then pruned by
-    subtracting the (k+1)-th largest counter (the mergeable-summaries
-    prune).  Stage 2: the per-partition summaries (≤ k rows each — tiny)
-    are summed per item, keeping the classic guarantee: every item with
-    true frequency > n/(k+1) survives as a candidate, no matter how the
-    rows were partitioned.  Stage 3 (optional): one more scan recounts
-    ONLY the candidate set via a broadcast semi-join, turning lower
-    bounds into exact counts — candidate pruning still isn't exact
-    top-k, which is why the registered query is rows-only-checked.
-
-    Scale shape: one linear scan + a ≤(partitions·k)-row merge + an
-    optional broadcast-filtered recount.  No full-data groupBy on the
-    raw column, which is the point when the column is long-tailed text.
-    """
-    out_top = top if top is not None else k
-    cands = (
-        _mg_summaries(df, col, k)
-        .where(~F.col("is_total"))
-        .groupBy("item")
-        .agg(F.sum("weight").alias("est_count"))
-        .orderBy(F.col("est_count").desc(), F.col("item"))
-        .limit(out_top)
-    )
-    if not exact_recount:
-        return cands
-    # internal name namespaced: with df[col] itself (or any df column)
-    # named 'item', the bare F.col('item') join/groupBy would resolve
-    # against BOTH sides and fail with an ambiguous reference
-    probe = cands.select(F.col("item").alias("__item"))
-    exact = (
-        df.join(F.broadcast(probe), df[col] == F.col("__item"), "inner")
-        .groupBy("__item")
-        .agg(F.count(F.lit(1)).alias("count"))
-        .select(F.col("__item").alias("item"), "count")
-        .orderBy(F.col("count").desc(), F.col("item"))
-    )
-    return exact
 
 
 def _mg_summaries(df: DataFrame, col: str, k: int) -> DataFrame:

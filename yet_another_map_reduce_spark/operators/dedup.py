@@ -548,18 +548,6 @@ def simhash(df: DataFrame, text_col: str, id_col: str, bits: int = 64) -> DataFr
     return fp
 
 
-def simhash_dup_groups(df: DataFrame, text_col: str, id_col: str, bits: int = 32) -> DataFrame:
-    """Documents sharing an identical SimHash fingerprint (cheap
-    exact-collision variant; :func:`simhash_near_dup_pairs` is the
-    genuine near-dup operator — banded for hamming distance)."""
-    fp = simhash(df, text_col, id_col, bits)
-    return (
-        fp.groupBy("simhash")
-        .agg(F.count(F.lit(1)).alias("n_docs"), F.min(id_col).alias("keep_id"))
-        .where(F.col("n_docs") > 1)
-    )
-
-
 def simhash_near_dup_pairs(
     df: DataFrame,
     text_col: str,

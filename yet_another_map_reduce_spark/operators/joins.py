@@ -8,8 +8,9 @@ switch strategy and split skewed partitions at runtime.
 
 Scale notes (100 TB posture):
 - Dimension tables (region/nation/supplier at any realistic scale) must
-  broadcast — ``broadcast_join`` forces it; the plain ``join`` leaves the
-  choice to Catalyst + ``spark.sql.autoBroadcastJoinThreshold``.
+  broadcast — ``F.broadcast`` on the small side forces it; a plain
+  ``df.join`` leaves the choice to Catalyst +
+  ``spark.sql.autoBroadcastJoinThreshold``.
 - ``asof_join`` is implemented as union + single sort-shuffle (one wide
   exchange, no per-row subquery) — the only scalable shape for as-of at
   billions of rows.
@@ -19,41 +20,8 @@ Scale notes (100 TB posture):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
-
-#: join types supported verbatim by df.join
-JOIN_TYPES = (
-    "inner",
-    "left",
-    "right",
-    "full",
-    "left_semi",
-    "left_anti",
-    "cross",
-)
-
-
-def join(left: DataFrame, right: DataFrame, on: list[str] | Column, how: str = "inner") -> DataFrame:
-    """Equi/theta join; ``how`` ∈ JOIN_TYPES.  Declarative so Catalyst
-    reorders and pushes predicates through it."""
-    return left.join(right, on=on, how=how)
-
-
-def broadcast_join(left: DataFrame, small_right: DataFrame, on: list[str] | Column, how: str = "inner") -> DataFrame:
-    """Map-side join: ships the small side to every executor, eliminating
-    the shuffle of the big side entirely."""
-    return left.join(F.broadcast(small_right), on=on, how=how)
-
-
-def semi_join(left: DataFrame, right: DataFrame, on: list[str] | Column) -> DataFrame:
-    """EXISTS — left rows with at least one match; never duplicates."""
-    return left.join(right, on=on, how="left_semi")
-
-
-def anti_join(left: DataFrame, right: DataFrame, on: list[str] | Column) -> DataFrame:
-    """NOT EXISTS — left rows with no match."""
-    return left.join(right, on=on, how="left_anti")
 
 
 def range_join(

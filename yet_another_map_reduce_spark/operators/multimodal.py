@@ -1204,36 +1204,3 @@ def audio_near_dup_pairs(
         max_bucket_size=max_bucket_size,
     )
 
-
-def audio_near_dup_capped_buckets(
-    df: DataFrame,
-    bands: int = 4,
-    n_bits: int = 60,
-    stride: int = 13,
-    max_bucket_size: int = 1000,
-    kind: str = "sign",
-) -> DataFrame:
-    """The no-silent-caps companion to :func:`audio_near_dup_pairs` —
-    the family twin of :func:`image_near_dup_capped_buckets` and
-    :func:`video_near_dup_capped_buckets`, completing the discipline
-    across all three media modalities: the fingerprint band buckets
-    the ``max_bucket_size`` cap would drop, same hashes, same
-    banding.  An oversized bucket on an audio corpus usually means
-    degenerate recordings (digital silence, test tones — the
-    sign-pattern fingerprint of pure silence is all-ones) that exact
-    content-hash dedup should absorb before near-dup runs."""
-    from yet_another_map_reduce_spark.operators.dedup import (
-        banded_hamming_capped_buckets,
-    )
-
-    fp = audio_fingerprint(df, n_bits=n_bits, stride=stride, kind=kind).where(
-        F.col("afp").isNotNull()
-    )
-    return banded_hamming_capped_buckets(
-        fp,
-        hash_col="afp",
-        id_col="media_id",
-        bits=n_bits,
-        bands=bands,
-        max_bucket_size=max_bucket_size,
-    )

@@ -372,8 +372,12 @@ def _nearest_centroids(
             "rides a 'centroid_id long' schema end to end); hash string "
             "ids to int64 first (functions.md5_hash64)"
         ) from exc
-    C = np.stack(
-        [np.asarray(r["__centv"], dtype=np.float64) for r in rows]
+    # an empty corpus trains no centroids, and then no row has a nearest
+    # one: the kernel emits nothing
+    C = (
+        np.stack([np.asarray(r["__centv"], dtype=np.float64) for r in rows])
+        if rows
+        else np.empty((0, 0))
     )
     order = np.argsort(cids)  # cid-ascending so argmax/stable-sort
     cids, C = cids[order], C[order]  # ties resolve to the LOWER cid
@@ -387,6 +391,8 @@ def _nearest_centroids(
     )
 
     def _probe(batches):
+        if not len(C):
+            return
         nan_row = np.full(C.shape[1], np.nan)
         for pdf in batches:
             if not len(pdf):
@@ -573,10 +579,13 @@ def _ivf_lloyd(
     """The Lloyd's loop of :func:`train_ivf_centroids` and
     :func:`kmeans_assign`; entry ``i`` of the returned list is cell ``i``.
     NULL vectors take no part in seeding or assignment, as in
-    :func:`train_pq_codebooks`."""
+    :func:`train_pq_codebooks`.  A corpus with no non-NULL vector trains
+    no model: the list is empty."""
     corpus = corpus.where(F.col(vec_col).isNotNull())
     seeds = ivf_centroids(corpus, id_col, vec_col, nlist).collect()
     cents: list[list[float]] = [list(r["__centv"]) for r in seeds]
+    if not cents:
+        return cents
     vecs = corpus.select(_dcast(vec_col).alias("__v"))
 
     def assign_in_pandas(cents: list[list[float]]):
@@ -725,7 +734,12 @@ def kmeans_assign(
         f"(a, b) -> a * b), 0.0D, (acc, x) -> acc + x), {_LLOYD_DIGITS}), 'ni', {-cid})"
         for cid, unit in units
     )
-    best = f"array_max(array({cands}))"
+    # with no model (no non-NULL vector to train on) no row has a centroid
+    best = (
+        f"array_max(array({cands}))"
+        if units
+        else "cast(null as struct<d:double, ni:int>)"
+    )
     # every d of a NULL vector is NULL, and array_max would still pick
     # the struct with the lowest id
     return corpus.select(

@@ -1,41 +1,19 @@
-"""Sort / limit / top-k operators.
+"""Global and grouped rank operators.
 
 The reference sorts twice, both lexicographically on raw lines: the
 pre-reduce partition sort (``/root/reference/Worker/worker.py:179-183``)
 and the client-side global sort at READ (``Client/client.py:105-108``).
 Spark equivalents are typed and distributed: ``sortWithinPartitions`` is
 the exact analog of the former; ``orderBy`` does a range-partitioned
-global sort (sampled bounds, no single-node merge) for the latter.
-
-Scale note: global top-k must NOT be ``orderBy().limit()`` materialized
-naively — Spark already optimizes limit-after-sort into TakeOrdered
-(per-partition top-k then merge of k·P rows), which is why ``top_k`` is
-expressed exactly that way.
+global sort (sampled bounds, no single-node merge) for the latter, and
+``orderBy().limit(k)`` plans as TakeOrderedAndProject (per-partition
+top-k, then a merge of k·P rows).  Queries call those directly; this
+module holds the exact global rank that Spark has no single call for.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
-
-
-def order_by(df: DataFrame, cols: list[Column | str]) -> DataFrame:
-    """Global sort (range partition + local sort)."""
-    return df.orderBy(*cols)
-
-
-def sort_within_partitions(df: DataFrame, cols: list[Column | str]) -> DataFrame:
-    """Partition-local sort, no exchange — the reference's F5."""
-    return df.sortWithinPartitions(*cols)
-
-
-def limit(df: DataFrame, n: int) -> DataFrame:
-    return df.limit(n)
-
-
-def top_k(df: DataFrame, order_cols: list[Column | str], k: int) -> DataFrame:
-    """Global top-k: Catalyst plans this as TakeOrderedAndProject —
-    each partition keeps k rows, the driver merges k·P rows."""
-    return df.orderBy(*order_cols).limit(k)
 
 
 def global_ranked(

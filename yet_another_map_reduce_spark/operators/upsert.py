@@ -8,7 +8,7 @@ relational rewrite: updates win on matched keys, unmatched update keys
 are inserted, unmatched base keys pass through.
 
 Scale notes: one shuffle per side on the key (or zero for the base side
-if it is already bucketed on the key — see sources/bucketing.py), and
+if it is a table written with ``bucketBy`` on the key), and
 ``broadcast_updates=True`` turns the whole merge into a map-only
 broadcast outer join when the delta is small relative to the base, which
 is the common CDC shape at 100 TB (small daily delta into a huge

@@ -3,8 +3,8 @@
 All pure DataFrame: one shuffle on the partition key, sort within
 partitions, then a single streaming pass.  Scale note: a window with no
 ``partitionBy`` forces ALL rows into one partition — every helper here
-requires partition keys for that reason; global rankings should go
-through ``sorts.top_k`` instead.
+requires partition keys for that reason; a global top-k is
+``orderBy().limit(k)`` and a global rank is ``sorts.global_ranked``.
 """
 
 from __future__ import annotations
@@ -49,19 +49,9 @@ def lagged(df: DataFrame, partition_by: list[str], order_by: list[Column | str],
     return df.withColumn(alias or f"{col}_lag{offset}", F.lag(col, offset).over(_window(partition_by, order_by)))
 
 
-def lead_col(df: DataFrame, partition_by: list[str], order_by: list[Column | str], col: str, offset: int = 1, alias: str | None = None) -> DataFrame:
-    return df.withColumn(alias or f"{col}_lead{offset}", F.lead(col, offset).over(_window(partition_by, order_by)))
-
-
 def running(df: DataFrame, partition_by: list[str], order_by: list[Column | str], agg_col: Column, alias: str) -> DataFrame:
     """Cumulative aggregate (rows UNBOUNDED PRECEDING → CURRENT ROW)."""
     w = _window(partition_by, order_by).rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    return df.withColumn(alias, agg_col.over(w))
-
-
-def sliding(df: DataFrame, partition_by: list[str], order_by: list[Column | str], agg_col: Column, before: int, after: int, alias: str) -> DataFrame:
-    """Row-frame moving aggregate, e.g. before=6, after=0 → trailing 7."""
-    w = _window(partition_by, order_by).rowsBetween(-before, after)
     return df.withColumn(alias, agg_col.over(w))
 
 

@@ -34,7 +34,6 @@ from yet_another_map_reduce_spark.operators import (
     classify,
     dedup,
     joins,
-    setops,
     similarity,
     sorts,
     text,
@@ -252,11 +251,8 @@ def q_flagship_max_price(spark: SparkSession, sf_dir: str) -> DataFrame:
     max extended price per return flag."""
     li = read_table(spark, sf_dir, "lineitem")
     return (
-        aggregates.group_agg(
-            li,
-            ["l_returnflag"],
-            [F.round(F.max("l_extendedprice"), 2).alias("max_price")],
-        )
+        li.groupBy("l_returnflag")
+        .agg(F.round(F.max("l_extendedprice"), 2).alias("max_price"))
         .orderBy("l_returnflag")
     )
 
@@ -313,12 +309,13 @@ def q_scalar_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def q_sort_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Global top-k — planned as TakeOrderedAndProject, not a full sort."""
+    """Global top-k — planned as TakeOrderedAndProject, not a full sort:
+    each partition keeps k rows, the driver merges k·P rows."""
     o = read_table(spark, sf_dir, "orders")
-    return sorts.top_k(
-        o.select("o_orderkey", "o_custkey", "o_totalprice"),
-        [F.col("o_totalprice").desc(), F.col("o_orderkey").asc()],
-        10,
+    return (
+        o.select("o_orderkey", "o_custkey", "o_totalprice")
+        .orderBy(F.col("o_totalprice").desc(), F.col("o_orderkey").asc())
+        .limit(10)
     )
 
 
@@ -329,7 +326,7 @@ def q_join_customer_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Broadcast equi-join (dim side forced map-side) + agg."""
     o = read_table(spark, sf_dir, "orders")
     c = read_table(spark, sf_dir, "customer")
-    joined = joins.broadcast_join(o, c, on=[F.col("o_custkey") == F.col("c_custkey")])
+    joined = o.join(F.broadcast(c), on=[F.col("o_custkey") == F.col("c_custkey")])
     return (
         joined.groupBy("c_mktsegment")
         .agg(
@@ -364,7 +361,7 @@ def q_join_left_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     c = read_table(spark, sf_dir, "customer")
     o = read_table(spark, sf_dir, "orders")
     return (
-        joins.join(c, o, on=[F.col("c_custkey") == F.col("o_custkey")], how="left")
+        c.join(o, on=[F.col("c_custkey") == F.col("o_custkey")], how="left")
         .groupBy("c_custkey", "c_name")
         .agg(
             F.count("o_orderkey").alias("n_orders"),
@@ -377,7 +374,7 @@ def q_join_semi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with at least one finished order (EXISTS)."""
     c = read_table(spark, sf_dir, "customer")
     o = read_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "F")
-    return joins.semi_join(c, o, on=[F.col("c_custkey") == F.col("o_custkey")]).select(
+    return c.join(o, on=[F.col("c_custkey") == F.col("o_custkey")], how="left_semi").select(
         "c_custkey", "c_name", "c_acctbal"
     )
 
@@ -386,7 +383,7 @@ def q_join_anti(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Customers with no pending orders (NOT EXISTS)."""
     c = read_table(spark, sf_dir, "customer")
     o = read_table(spark, sf_dir, "orders").where(F.col("o_orderstatus") == "P")
-    return joins.anti_join(c, o, on=[F.col("c_custkey") == F.col("o_custkey")]).select(
+    return c.join(o, on=[F.col("c_custkey") == F.col("o_custkey")], how="left_anti").select(
         "c_custkey", "c_name", "c_acctbal"
     )
 
@@ -619,20 +616,22 @@ def _status_custkeys(spark: SparkSession, sf_dir: str, status: str) -> DataFrame
 
 
 def q_set_union(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return setops.union_distinct(
-        _status_custkeys(spark, sf_dir, "O"), _status_custkeys(spark, sf_dir, "F")
+    return (
+        _status_custkeys(spark, sf_dir, "O")
+        .unionByName(_status_custkeys(spark, sf_dir, "F"))
+        .distinct()
     )
 
 
 def q_set_intersect(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return setops.intersect(
-        _status_custkeys(spark, sf_dir, "O"), _status_custkeys(spark, sf_dir, "F")
+    return _status_custkeys(spark, sf_dir, "O").intersect(
+        _status_custkeys(spark, sf_dir, "F")
     )
 
 
 def q_set_except(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return setops.except_(
-        _status_custkeys(spark, sf_dir, "O"), _status_custkeys(spark, sf_dir, "F")
+    return _status_custkeys(spark, sf_dir, "O").subtract(
+        _status_custkeys(spark, sf_dir, "F")
     )
 
 
@@ -1983,8 +1982,8 @@ def q_dedup_simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q_dedup_simhash_banded(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hamming-banded SimHash near-dup: band collisions generate
     candidates (lossless for hamming ≤ bands-1 by pigeonhole), exact
-    bit_count(XOR) verifies — catches the hamming-1..3 near-dups the
-    exact-collision variant misses."""
+    bit_count(XOR) verifies — catches the hamming-1..3 near-dups that an
+    exact fingerprint match misses."""
     d = read_table(spark, sf_dir, "documents").where(F.col("doc_id") < 200)
     return dedup.simhash_near_dup_pairs(
         d, "text", "doc_id", bits=32, bands=4, max_hamming=3

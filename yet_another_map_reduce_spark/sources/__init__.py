@@ -7,10 +7,7 @@ from yet_another_map_reduce_spark.sources.readers import (
     load_tables,
     read_csv,
     read_json,
-    read_orc,
-    read_parquet,
     read_table,
-    read_text,
 )
 from yet_another_map_reduce_spark.sources.writers import (
     overwrite_partitions,
@@ -28,10 +25,7 @@ __all__ = [
     "read_avro",
     "read_csv",
     "read_json",
-    "read_orc",
-    "read_parquet",
     "read_table",
-    "read_text",
     "overwrite_partitions",
     "write_avro",
     "write_csv",

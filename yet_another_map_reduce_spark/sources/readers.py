@@ -38,19 +38,6 @@ TABLES = (
 )
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar scan. Predicate/projection pushdown and partition pruning
-    are free as long as callers keep filters declarative (no UDF in the
-    WHERE clause)."""
-    return spark.read.parquet(path)
-
-
-def read_text(spark: SparkSession, path: str) -> DataFrame:
-    """Line-text scan: one ``value: string`` row per line — the exact
-    model of a reference partition file (``Worker/worker.py:85``)."""
-    return spark.read.text(path)
-
-
 def read_csv(
     spark: SparkSession,
     path: str,
@@ -149,28 +136,6 @@ def read_jsonl_quarantine(
         F.col("__raw").alias("raw_line"),
     )
     return good, quarantined
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    """Columnar ORC scan — same pushdown/pruning properties as parquet
-    (stripe-level predicate pushdown via ORC statistics)."""
-    return spark.read.orc(path)
-
-
-def read_xml(
-    spark: SparkSession,
-    path: str,
-    row_tag: str = "row",
-    schema: StructType | str | None = None,
-) -> DataFrame:
-    """XML scan via Spark 4's built-in xml source (one row per
-    ``row_tag`` element; schema inferred unless given).  Row-level
-    parallelism like any file source — the split unit is the file, so
-    many medium files beat one giant document at scale."""
-    r = spark.read.format("xml").option("rowTag", row_tag)
-    if schema is not None:
-        r = r.schema(schema)
-    return r.load(path)
 
 
 _NANOS_CONF_LOCK = __import__("threading").Lock()
@@ -287,14 +252,3 @@ def load_tables(spark: SparkSession, sf_dir: str, names: tuple[str, ...] = TABLE
     """Load several test tables at once; keys are table names."""
     return {name: read_table(spark, sf_dir, name) for name in names}
 
-
-def read_parquet_evolving(spark: SparkSession, path: str) -> DataFrame:
-    """Parquet read with schema evolution: files written under older
-    schemas surface added columns as NULL (``mergeSchema``).
-
-    Scale note: schema merging lists footers across files — cheap next to
-    the scan, but on multi-million-file datasets prefer a declared schema
-    (``spark.read.schema(...)``) and keep ``mergeSchema`` for ingestion
-    boundaries where producers actually evolve.
-    """
-    return spark.read.option("mergeSchema", "true").parquet(path)

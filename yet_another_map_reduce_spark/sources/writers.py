@@ -102,26 +102,6 @@ def write_orc(
     writer.orc(path)
 
 
-def write_xml(
-    df: DataFrame,
-    path: str,
-    row_tag: str = "row",
-    root_tag: str = "rows",
-    mode: str = "overwrite",
-    num_partitions: int | None = None,
-) -> None:
-    """XML sink (Spark 4 built-in xml source): one ``row_tag`` element
-    per row, one file per partition under ``root_tag``."""
-    out = _prep(df, num_partitions, None)
-    (
-        out.write.mode(mode)
-        .format("xml")
-        .option("rowTag", row_tag)
-        .option("rootTag", root_tag)
-        .save(path)
-    )
-
-
 def compact_parquet(
     spark,
     src: str,

@@ -12,7 +12,6 @@ from yet_another_map_reduce_spark.streaming.windows import (
     session_windowed,
     sliding_windowed,
     tumbling_windowed,
-    with_watermark,
 )
 from yet_another_map_reduce_spark.streaming.stateful import (
     stream_stream_interval_join,
@@ -52,5 +51,4 @@ __all__ = [
     "streaming_dedup_fuzzy",
     "streaming_ingest_pipeline",
     "tumbling_windowed",
-    "with_watermark",
 ]

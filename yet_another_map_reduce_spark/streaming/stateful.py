@@ -65,8 +65,8 @@ SESSION_STATE_SCHEMA = StructType(
 
 
 def _fold_batch(pdfs, n: int, total: float, last_ts):
-    """Shared per-batch fold for both sessionize implementations: count,
-    sum, and the max event time — skipping NaT chunk maxima (a chunk
+    """Per-batch fold of :func:`sessionize_with_state`: count, sum, and
+    the max event time — skipping NaT chunk maxima (a chunk
     whose ts values are all NULL yields NaT, and ``max(NaT, m)`` would
     stay NaT forever because NaT comparisons return False)."""
     for pdf in pdfs:
@@ -121,60 +121,6 @@ def sessionize_with_state(events: DataFrame, timeout_ms: int = 30_000) -> DataFr
         stateStructType=SESSION_STATE_SCHEMA,
         outputMode="update",
         timeoutConf=GroupStateTimeout.ProcessingTimeTimeout,
-    )
-
-
-def sessionize_with_tws(events: DataFrame, ttl_ms: int | None = None) -> DataFrame:
-    """Per-user running session aggregate via ``transformWithStateInPandas``
-    — the Spark 4 arbitrary-stateful API that supersedes
-    ``applyInPandasWithState`` (:func:`sessionize_with_state` keeps the
-    older shape for comparison; same output contract).
-
-    Differences that matter at scale: named state variables (value /
-    list / map) instead of one monolithic state tuple, per-state TTL
-    (``ttl_ms`` evicts idle users without a timer round-trip), timers,
-    and initial-state bootstrap.  State lives in the per-key state
-    store exactly as before — each executor holds only its keys.
-    """
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class SessionProcessor(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._state = handle.getValueState(
-                "session", SESSION_STATE_SCHEMA, ttlDurationMs=ttl_ms
-            )
-
-        def handleInputRows(self, key, rows, timerValues) -> Iterator[pd.DataFrame]:
-            n, total, last_ts = (
-                self._state.get() if self._state.exists() else (0, 0.0, None)
-            )
-            n, total, last_ts = _fold_batch(rows, n, total, last_ts)
-            stored = (
-                last_ts.to_pydatetime()
-                if isinstance(last_ts, pd.Timestamp)
-                else last_ts
-            )
-            self._state.update((n, total, stored))
-            yield pd.DataFrame(
-                {
-                    "user_id": [key[0]],
-                    "n_events": [n],
-                    "total_value": [total],
-                    "last_ts": [last_ts],
-                }
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        SessionProcessor(),
-        outputStructType=SESSION_OUTPUT_SCHEMA,
-        outputMode="update",
-        timeMode="ProcessingTime",
     )
 
 

@@ -1,20 +1,15 @@
 """Event-time windowing — identical code path for batch and stream.
 
 Watermarks bound state: without one, a streaming window agg keeps every
-window open forever.  ``with_watermark`` is separated out so batch
-callers (and the SQL oracle) can use the very same windowing functions.
+window open forever.  The helpers here take the watermark from the
+caller (``df.withWatermark`` on a stream), so batch callers (and the SQL
+oracle) use the very same windowing functions.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
-
-
-def with_watermark(df: DataFrame, ts_col: str, delay: str) -> DataFrame:
-    """Late-data bound, e.g. delay='10 minutes': events older than
-    max(event time) - delay are dropped and their windows finalized."""
-    return df.withWatermark(ts_col, delay)
 
 
 def _windowed(
