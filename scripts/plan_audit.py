@@ -5,10 +5,22 @@ parquet scans carry pushed filters, and Python-eval nodes in the plan
 (ArrowEvalPython = vectorized OK; BatchEvalPython = row-at-a-time BAD).
 The table is committed as PLANS.md so plan-shape regressions show up in
 diffs, not just in wall-clock.
+
+Plan identity between two checkouts:
+
+    PYTHONHASHSEED=0 python scripts/plan_audit.py SF_DIR --dump A   # checkout 1
+    PYTHONHASHSEED=0 python scripts/plan_audit.py SF_DIR --dump B   # checkout 2
+    python scripts/plan_audit.py --diff A B
+
+``--dump`` writes each query's formatted physical plan to
+``DIR/<query>.txt`` with the ids that differ from run to run normalized
+(``normalize_plan``); ``--diff`` lists the queries whose files differ
+and exits nonzero if any do.
 """
 
 from __future__ import annotations
 
+import os
 import re
 
 import _measure  # noqa: F401  (repo root on sys.path)
@@ -16,6 +28,59 @@ import _measure  # noqa: F401  (repo root on sys.path)
 from yet_another_map_reduce_spark import plans
 from yet_another_map_reduce_spark.queries import QUERIES
 from yet_another_map_reduce_spark.session import build_session
+
+
+#: run-to-run ids in a formatted plan, each with its stable stand-in:
+#: expression ids (``#12``, ``#12L``), Spark Connect plan ids, codegen
+#: stage ids, AQE query-stage ids (the bare ``Arguments: N`` line of a
+#: ShuffleQueryStage/BroadcastQueryStage) and the paths under the
+#: per-process scratch directories that temp-dir queries write to (index
+#: version and segment names in them are random)
+_PLAN_IDS = [
+    (re.compile(r"#\d+L?"), "#N"),
+    (re.compile(r"plan_id=\d+"), "plan_id=N"),
+    (re.compile(r"\[codegen id : \d+\]"), "[codegen id : N]"),
+    (re.compile(r"^Arguments: \d+$", re.M), "Arguments: N"),
+    (re.compile(r"/(?:tmp|dev/shm)/[^\s,\]]*"), "/SCRATCH"),
+]
+
+
+def normalize_plan(text: str) -> str:
+    """``text`` with every run-to-run id replaced by its stand-in."""
+    for pat, repl in _PLAN_IDS:
+        text = pat.sub(repl, text)
+    return text
+
+
+def dump(sf_dir: str, out_dir: str) -> None:
+    """Write each query's normalized formatted plan to
+    ``out_dir/<query>.txt`` (a construction error is written in its
+    place, so it diffs like a plan)."""
+    os.makedirs(out_dir, exist_ok=True)
+    spark = build_session(app_name="plan-dump")
+    for name, fn in QUERIES.items():
+        try:
+            text = normalize_plan(plans.formatted_plan(fn(spark, sf_dir)))
+        except Exception as exc:  # noqa: BLE001
+            text = f"ERR {type(exc).__name__}: {exc}\n"
+        with open(os.path.join(out_dir, f"{name}.txt"), "w") as fh:
+            fh.write(text)
+    spark.stop()
+
+
+def diff(a: str, b: str) -> list[str]:
+    """Names of the queries whose dumps differ between directories ``a``
+    and ``b``, or exist in only one of them."""
+
+    def read(d: str, f: str) -> str | None:
+        p = os.path.join(d, f)
+        if not os.path.exists(p):
+            return None
+        with open(p) as fh:
+            return fh.read()
+
+    files = sorted(set(os.listdir(a)) | set(os.listdir(b)))
+    return [f[: -len(".txt")] for f in files if read(a, f) != read(b, f)]
 
 
 def audit(sf_dir: str) -> str:
@@ -70,9 +135,11 @@ if __name__ == "__main__":
     # PLANS.md was clobbered with 190 ERR rows.  PLANS.md is written
     # only after a successful audit, and only without --dry-run.
     import argparse
-    import os
+    import sys
 
-    ap = argparse.ArgumentParser(description=__doc__)
+    ap = argparse.ArgumentParser(
+        description=__doc__, formatter_class=argparse.RawDescriptionHelpFormatter
+    )
     ap.add_argument(
         "sf_dir",
         nargs="?",
@@ -84,9 +151,29 @@ if __name__ == "__main__":
         action="store_true",
         help="print the table without rewriting PLANS.md",
     )
+    ap.add_argument(
+        "--dump",
+        metavar="DIR",
+        help="write each query's normalized plan to DIR/<query>.txt instead",
+    )
+    ap.add_argument(
+        "--diff",
+        nargs=2,
+        metavar=("A", "B"),
+        help="list the queries whose dumps differ between A and B",
+    )
     args = ap.parse_args()
+    if args.diff:
+        changed = diff(*args.diff)
+        for name in changed:
+            print(name)
+        print(f"{len(changed)} queries differ", file=sys.stderr)
+        sys.exit(1 if changed else 0)
     if not os.path.isdir(args.sf_dir):
         ap.error(f"scale dir does not exist: {args.sf_dir}")
+    if args.dump:
+        dump(args.sf_dir, args.dump)
+        sys.exit(0)
     out = audit(args.sf_dir)
     if not args.dry_run:
         with open("PLANS.md", "w") as fh:

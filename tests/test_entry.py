@@ -272,6 +272,91 @@ def test_no_zero_coverage_operator_functions():
     )
 
 
+def test_plan_audit_normalizer_ignores_run_ids_only(monkeypatch):
+    """``scripts/plan_audit.py --dump`` normalizes the ids a plan's text
+    draws fresh on each run (expression, plan, codegen and AQE stage ids,
+    scratch paths): two runs' texts that differ only there compare
+    equal, and a different operator still shows."""
+    import importlib.util
+    import pathlib
+
+    scripts = pathlib.Path(__file__).resolve().parent.parent / "scripts"
+    monkeypatch.syspath_prepend(str(scripts))
+    spec = importlib.util.spec_from_file_location("plan_audit", scripts / "plan_audit.py")
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+
+    def plan(ids: tuple, join: str = "BroadcastHashJoin") -> str:
+        expr, stage, codegen, path = ids
+        return (
+            f"(1) Scan parquet \nLocation: InMemoryFileIndex [file:/tmp/{path}/idx/v_{path}]\n"
+            f"(2) {join} [codegen id : {codegen}]\n"
+            f"Left keys [1]: [k#{expr}L]\nRight keys [1]: [k#{expr + 7}]\n"
+            f"(3) ShuffleQueryStage\nOutput [1]: [k#{expr}L]\nArguments: {stage}\n"
+            f"Project [plan_id={expr + 1}]\n"
+        )
+
+    first, second = plan((12, 3, 1, "tmpab12")), plan((40, 9, 4, "tmpzz90"))
+    assert first != second
+    assert mod.normalize_plan(first) == mod.normalize_plan(second)
+    shuffled = plan((12, 3, 1, "tmpab12"), join="SortMergeJoin")
+    assert mod.normalize_plan(first) != mod.normalize_plan(shuffled)
+
+
+#: parameters that Spark's callback protocols pass but the package's
+#: implementation does not need: (function name, parameter name)
+SPARK_CALLBACK_PARAMS = {
+    ("eval", "doc_id"),  # UDTF eval takes every input column
+    ("reader", "schema"),  # DataSource.reader
+    ("writer", "schema"),  # DataSource.writer
+    ("streamReader", "schema"),  # DataSource.streamReader
+    ("streamWriter", "schema"),  # DataSource.streamWriter
+    ("streamWriter", "overwrite"),
+    ("commit", "end"),  # DataSourceStreamReader.commit
+    ("abort", "batchId"),  # DataSourceStreamWriter.abort
+    ("apply_batch", "batch_id"),  # foreachBatch sink
+}
+
+
+def test_every_package_function_parameter_is_read():
+    """A parameter the body never reads is a switch no value can flip:
+    every parameter of every package function (nested ones included) is
+    read in its body, except those Spark's callback signatures impose
+    (``SPARK_CALLBACK_PARAMS``)."""
+    import ast
+    import os
+
+    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    pkg = os.path.join(root, "yet_another_map_reduce_spark")
+    unread = []
+    for dirpath, _dirs, files in os.walk(pkg):
+        for f in sorted(files):
+            if not f.endswith(".py"):
+                continue
+            path = os.path.join(dirpath, f)
+            for node in ast.walk(ast.parse(open(path).read())):
+                if not isinstance(node, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                    continue
+                a = node.args
+                params = [
+                    p.arg
+                    for p in a.posonlyargs + a.args + a.kwonlyargs + [a.vararg, a.kwarg]
+                    if p is not None and p.arg not in ("self", "cls")
+                ]
+                read = {
+                    n.id
+                    for stmt in node.body
+                    for n in ast.walk(stmt)
+                    if isinstance(n, ast.Name)
+                }
+                unread += [
+                    f"{os.path.relpath(path, root)}:{node.lineno} {node.name}({p})"
+                    for p in params
+                    if p not in read and (node.name, p) not in SPARK_CALLBACK_PARAMS
+                ]
+    assert unread == [], f"parameters never read in their function: {unread}"
+
+
 def test_fingerprint_follows_function_local_imports():
     """A dependency reached ONLY through a function-local
     `from pkg.mod import fn` must appear in the transitive closure —

@@ -436,17 +436,21 @@ def test_video_near_dup_pairs_shared_frames(spark):
 
 
 def test_image_near_dup_capped_buckets_reports_drops(spark):
-    """The exclusion report names exactly the buckets the pairs call
-    drops: with 12 images sharing a band key and cap 8, the oversized
-    bucket appears in the report (size 12), and a suppressed pair is
-    indeed absent from the capped pairs output but present uncapped."""
-    from yet_another_map_reduce_spark.operators import multimodal
+    """The exclusion report over the same perceptual hashes and banding
+    names the buckets the pairs call drops: with 12 images sharing a
+    band key and cap 8, the oversized bucket appears in the report
+    (size 12), and a suppressed pair is indeed absent from the capped
+    pairs output but present uncapped."""
+    from pyspark.sql import functions as F
+
+    from yet_another_map_reduce_spark.operators import dedup
 
     mask = (1 << 15) | (1 << 3)  # same upper band (bits 12-15) for all
     rows = [(i, _ppm_from_mask(mask | (1 << (i % 3)))) for i in range(12)]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    report = multimodal.image_near_dup_capped_buckets(
-        df, bands=4, hash_size=4, max_bucket_size=8
+    report = dedup.banded_hamming_capped_buckets(
+        multimodal.image_phash(df, hash_size=4).where(F.col("phash").isNotNull()),
+        hash_col="phash", id_col="media_id", bits=16, bands=4, max_bucket_size=8,
     ).collect()
     assert any(r["n_ids"] == 12 for r in report)  # the shared band bucket
     capped = multimodal.image_near_dup_pairs(
@@ -458,15 +462,11 @@ def test_image_near_dup_capped_buckets_reports_drops(spark):
     assert uncapped > capped  # the report's buckets are real suppressions
 
 
-def test_video_near_dup_capped_buckets_decomposes_exemplar(spark):
+def test_video_near_dup_pairs_cap_suppresses_degenerate_frames(spark):
     """Degenerate repeated frames across many clips land in oversized
-    buckets; the report decomposes the exemplar back to (clip, frame)
-    and the capped pairs call indeed suppresses those collisions."""
+    buckets: the capped pairs call suppresses those collisions, which
+    the uncapped call reports as clip pairs."""
     import struct
-
-    import numpy as np
-
-    from yet_another_map_reduce_spark.operators import multimodal
 
     black = multimodal.encode_ppm(np.zeros((8, 8, 3), dtype=np.uint8))
 
@@ -483,19 +483,14 @@ def test_video_near_dup_capped_buckets_decomposes_exemplar(spark):
     # then a distinct stripe frame
     rows = [(i, clip([black, stripe(i)])) for i in range(6)]
     df = spark.createDataFrame(rows, "media_id long, content binary")
-    report = multimodal.video_near_dup_capped_buckets(
-        df, every_ms=40, max_bucket_size=4
-    ).collect()
-    assert report
-    r = max(report, key=lambda r: r["n_ids"])
-    # all six black frames collide (hash 0), joined by stripe frames
-    # whose stripe lies outside the band — >= 6 either way
-    assert r["n_ids"] >= 6
-    assert r["example_clip"] == 0 and r["example_frame"] == 0
-    pairs = multimodal.video_near_dup_pairs(
-        df, every_ms=40, max_hamming=3, max_bucket_size=4
-    ).count()
-    assert pairs == 0  # with the cap, the black-frame pairs are suppressed
+
+    def pairs(cap):
+        return multimodal.video_near_dup_pairs(
+            df, every_ms=40, max_hamming=3, max_bucket_size=cap
+        ).count()
+
+    assert pairs(None) >= 15  # all six black frames pair up uncapped
+    assert pairs(4) == 0  # with the cap, the black-frame pairs are suppressed
 
 
 def test_video_near_dup_rejects_out_of_domain_media_id(spark):

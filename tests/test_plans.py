@@ -213,29 +213,6 @@ def test_pagerank_checkpoint_keeps_plan_constant_size(spark, sf_dir):
     )
 
 
-def test_pagerank_non_broadcast_path(spark, sf_dir):
-    # broadcast_ranks=False must produce NO BroadcastExchange (the 100×
-    # node-set escape hatch) yet reach the identical fixpoint
-    from yet_another_map_reduce_spark.operators import graph
-
-    edges = _pagerank_edges(spark, sf_dir)
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        shuffled = graph.pagerank(
-            edges, iterations=2, assume_distinct=True, broadcast_ranks=False,
-            checkpoint_ranks=False,
-        )
-        assert not plans.uses_broadcast_join(shuffled), "broadcast_ranks=False must not broadcast"
-        got = {r["node"]: r["rank"] for r in shuffled.collect()}
-    finally:
-        spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
-    want = {
-        r["node"]: r["rank"]
-        for r in graph.pagerank(edges, iterations=2, assume_distinct=True).collect()
-    }
-    assert got == want, "fixpoint must be identical with and without broadcast"
-
-
 def test_duplicated_spans_shuffles_hashes_not_shingle_text(spark, sf_dir):
     """Substring dedup's scale contract: every exchange carries the
     60-bit shingle hash or the doc id — the assembled shingle string

@@ -1150,8 +1150,8 @@ def test_compact_seen_range_layout_and_probe_pruning(spark, sf_dir, tmp_path):
 
 
 def test_maintain_ingest_auto_compaction_policy(spark, sf_dir, tmp_path):
-    """major_seen='auto' is the LSM trigger: minor folds while the
-    sorted-level count stays under max_seen_levels, then one major fold
+    """maintain_ingest runs the LSM trigger: minor folds while the
+    sorted-level count stays under four levels, then one major fold
     collapses the levels.  Five maintenance rounds with one new raw
     batch each: levels grow 1,2,3,4 then fold back to 1."""
     from yet_another_map_reduce_spark.operators import dedup, similarity, text
@@ -1182,10 +1182,7 @@ def test_maintain_ingest_auto_compaction_policy(spark, sf_dir, tmp_path):
         dedup.batch_fingerprints(
             docs.where(F.col("doc_id") % 5 == b), "text"
         ).write.parquet(os.path.join(seen_dir, f"batch={b}"))
-        maintain_ingest(
-            spark, index_dir, seen_dir, major_seen="auto",
-            retention_seconds=3600,
-        )
+        maintain_ingest(spark, index_dir, seen_dir, retention_seconds=3600)
         seen_levels.append(len(levels()))
     assert seen_levels == [1, 2, 3, 4, 1], seen_levels
     # the major fold deduplicated across levels: exact distinct count

@@ -21,12 +21,6 @@ from pyspark.sql import functions as F
 from yet_another_map_reduce_spark.localrel import local_relation
 
 
-def approx_distinct_count(df: DataFrame, keys: list[str], col: str, alias: str, rsd: float = 0.05) -> DataFrame:
-    """HyperLogLog++ COUNT(DISTINCT) — the 100 TB path: fixed-size sketch
-    per group instead of shuffling every distinct value."""
-    return df.groupBy(*keys).agg(F.approx_count_distinct(col, rsd).alias(alias))
-
-
 def rollup_agg(df: DataFrame, keys: list[str], aggs: list[Column], fill: str = "(all)") -> DataFrame:
     """GROUP BY ROLLUP with SUBTOTAL key levels set to ``fill``, decided
     by ``GROUPING(k)`` — not a blind COALESCE, which would also rewrite
@@ -296,29 +290,21 @@ def histogram_fixed(
     )
 
 
-def profile_columns(
-    df: DataFrame, cols: list[str], exact_distinct: bool = True
-) -> DataFrame:
+def profile_columns(df: DataFrame, cols: list[str]) -> DataFrame:
     """Data-quality profile: one output row per column with row count,
     null count, and distinct count.
 
-    One aggregate JOB either way, but the distinct tier matters at
-    scale: ``exact_distinct=True`` uses ``countDistinct`` per column,
-    which Spark plans with an Expand node replicating every input row
+    One aggregate JOB with an exact ``countDistinct`` per column, which
+    Spark plans with an Expand node replicating every input row
     ``len(cols)+1`` times before partial aggregation — exact answers,
-    ~(k+1)× map-side volume, the small/medium-data default.
-    ``exact_distinct=False`` swaps in ``approx_count_distinct`` (HLL,
-    default 5% rsd): NO Expand, fixed-size sketches, the 100 TB path —
-    profiling 10 columns of a 100 TB table with the exact tier would
-    expand ~1.1 PB of rows.  Columns are addressed positionally (no
+    ~(k+1)× map-side volume.  Columns are addressed positionally (no
     name interpolation into SQL text), so names with quotes, spaces, or
     hyphens profile fine.
     """
-    dcount = F.countDistinct if exact_distinct else F.approx_count_distinct
     aggs = [F.count(F.lit(1)).alias("__n")]
     for i, c in enumerate(cols):
         aggs.append(F.sum(F.col(c).isNull().cast("bigint")).alias(f"__null_{i}"))
-        aggs.append(dcount(F.col(c)).alias(f"__dist_{i}"))
+        aggs.append(F.countDistinct(F.col(c)).alias(f"__dist_{i}"))
     row = df.agg(*aggs)
     per = [
         F.struct(

@@ -790,7 +790,6 @@ def connected_components(
     src: str = "src",
     dst: str = "dst",
     max_iterations: int = 25,
-    broadcast_labels: bool = False,
 ) -> DataFrame:
     """Connected components over an undirected edge list → (id, component),
     where ``component`` is the minimum node id in each component.
@@ -838,17 +837,13 @@ def connected_components(
     labels = (
         sym.select(F.col("a").alias("id")).distinct().withColumn("component", F.col("id"))
     ).localCheckpoint()
-    # broadcast_labels: for dup-cluster-sized graphs (labels = node set
-    # fits in memory) every per-round join goes map-only; leave False
-    # when the node set itself is at data scale
-    maybe_bc = F.broadcast if broadcast_labels else (lambda df: df)
     for _ in range(max_iterations):
         nbr_min = (
-            sym.join(maybe_bc(labels), sym["b"] == labels["id"])
+            sym.join(labels, sym["b"] == labels["id"])
             .groupBy(F.col("a").alias("id2"))
             .agg(F.min("component").alias("nbr_component"))
         )
-        merged = labels.join(maybe_bc(nbr_min), labels["id"] == nbr_min["id2"], "left").select(
+        merged = labels.join(nbr_min, labels["id"] == nbr_min["id2"], "left").select(
             "id",
             "component",
             F.least(

@@ -10,11 +10,8 @@ iteration is a declarative join+agg and Catalyst/AQE plans every step.
 Scale notes: the rank and degree relations are |nodes|-sized — tiny next
 to |edges| — so both sides broadcast and an iteration costs ONE shuffle
 (the groupBy(dst)).  Cache the edge list; it is reused every iteration.
-For node sets too big to broadcast, drop the explicit ``broadcast`` and
-pre-partition edges and ranks on the join key so iterations reuse one
-co-partitioning.  Lineage stays shallow (a few iterations); for deep
-iteration counts add ``localCheckpoint`` every ~10 rounds as
-connected_components does.
+Lineage stays shallow (a few iterations); for deep iteration counts add
+``localCheckpoint`` every ~10 rounds as connected_components does.
 """
 
 from __future__ import annotations
@@ -31,7 +28,6 @@ def pagerank(
     damping: float = 0.85,
     round_digits: int = 6,
     assume_distinct: bool = False,
-    broadcast_ranks: bool = True,
     checkpoint_ranks: bool = True,
     checkpoint_interval: int = 10,
 ) -> DataFrame:
@@ -46,14 +42,10 @@ def pagerank(
     fixpoint is bit-stable under double accumulation-order differences —
     required for the chained-CTE SQL oracle to match exactly.
 
-    ``broadcast_ranks=True`` (default) broadcasts the |nodes|-sized rank
-    and degree relations so an iteration costs ONE shuffle (the
-    groupBy(dst)).  That is the right plan while |nodes| fits the
-    broadcast limit — dup-cluster graphs, entity graphs — but a 100×
-    node set would blow the driver/executor broadcast ceiling, so
-    ``False`` switches every per-iteration join to a plain (shuffled or
-    AQE-chosen) join with edges pre-partitioned on the probe key; same
-    fixpoint, two exchanges per iteration instead of one.
+    The |nodes|-sized rank and degree relations are broadcast (a
+    map-side join) so an iteration costs ONE shuffle (the groupBy(dst)).
+    That is the right plan while |nodes| fits the broadcast limit —
+    dup-cluster graphs, entity graphs.
 
     ``checkpoint_ranks=True`` truncates the evolving rank lineage with
     ``localCheckpoint`` every ``checkpoint_interval`` iterations: the
@@ -74,9 +66,8 @@ def pagerank(
     if not assume_distinct:
         edges = edges.distinct()
     # hash-partition once on the key every iteration reuses: the
-    # groupBy(dst) under broadcast joins (which preserve partitioning),
-    # or the rank-join probe key src in non-broadcast mode
-    edges = edges.repartition("dst" if broadcast_ranks else "src").transform(tracked_cache)
+    # groupBy(dst) under broadcast joins (which preserve partitioning)
+    edges = edges.repartition("dst").transform(tracked_cache)
     # deg and nodes are static across iterations AND appear in every
     # iteration's lineage — materialize both or each re-nests per
     # iteration (the 1-shuffle distinct would re-plan 3x per round)
@@ -87,19 +78,18 @@ def pagerank(
         .distinct()
         .transform(tracked_cache)
     )
-    maybe_bc = F.broadcast if broadcast_ranks else (lambda df: df)
     ranks = nodes.withColumn("rank", F.lit(1.0))
     for i in range(iterations):
         contribs = (
-            edges.join(maybe_bc(ranks), edges.src == ranks.node)
-            .join(maybe_bc(deg), "src")
+            edges.join(F.broadcast(ranks), edges.src == ranks.node)
+            .join(F.broadcast(deg), "src")
             .groupBy("dst")
             .agg(F.sum(F.col("rank") / F.col("out_deg")).alias("inbound"))
         )
-        # contribs is |nodes|-sized — broadcast it (when allowed) so the
-        # rank refresh is map-only instead of a both-sides shuffle
+        # contribs is |nodes|-sized — broadcast it so the rank refresh
+        # is map-only instead of a both-sides shuffle
         ranks = (
-            nodes.join(maybe_bc(contribs), nodes.node == contribs.dst, "left")
+            nodes.join(F.broadcast(contribs), nodes.node == contribs.dst, "left")
             .select(
                 "node",
                 F.round(

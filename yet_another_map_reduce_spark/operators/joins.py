@@ -31,44 +31,39 @@ def range_join(
     right_lo: str,
     right_hi: str,
     bucket_width: float,
-    extra_on: list[str] | None = None,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Point-in-interval join: left.point ∈ [right.lo, right.hi].
 
     Naive theta-join is O(|L|·|R|).  Instead each right interval is
     exploded onto the coarse buckets it covers and the join becomes an
-    equi-join on bucket (+ optional keys) with a residual range filter —
+    equi-join on bucket with a residual range filter —
     the standard trick behind Databricks' range-join hints, expressed in
     plain DataFrame ops.  Choose ``bucket_width`` ≈ typical interval
     length so intervals explode into O(1) buckets.
 
-    ``broadcast_right=True`` (default) broadcasts the exploded interval
-    side: bucket keys are inherently low-cardinality, so a shuffled join
-    on them is pathologically skewed — statistics after the explode are
-    unknown to Catalyst, which otherwise picks exactly that plan.  Set
-    it False only when the interval side is itself huge (then also pass
-    ``extra_on`` keys to give the shuffle real cardinality).
+    The exploded interval side is always broadcast (a map-side join):
+    bucket keys are inherently low-cardinality, so a shuffled join on
+    them is pathologically skewed — statistics after the explode are
+    unknown to Catalyst, which otherwise picks exactly that plan.
     """
     lb = F.floor(F.col(left_point) / F.lit(bucket_width))
     l2 = left.withColumn("__bucket", lb)
-    r2 = right.withColumn(
-        "__bucket",
-        F.explode(
-            F.sequence(
-                F.floor(F.col(right_lo) / F.lit(bucket_width)),
-                F.floor(F.col(right_hi) / F.lit(bucket_width)),
-            )
-        ),
+    r2 = F.broadcast(
+        right.withColumn(
+            "__bucket",
+            F.explode(
+                F.sequence(
+                    F.floor(F.col(right_lo) / F.lit(bucket_width)),
+                    F.floor(F.col(right_hi) / F.lit(bucket_width)),
+                )
+            ),
+        )
     )
-    if broadcast_right:
-        r2 = F.broadcast(r2)
-    on = ["__bucket"] + (extra_on or [])
     # per-side attribute references in the residual: bare F.col() is an
     # AMBIGUOUS_REFERENCE whenever the two inputs share column names —
     # the normal case for same-schema interval data
     return (
-        l2.join(r2, on=on, how="inner")
+        l2.join(r2, on=["__bucket"], how="inner")
         .where((l2[left_point] >= r2[right_lo]) & (l2[left_point] <= r2[right_hi]))
         .drop("__bucket")
     )
@@ -82,8 +77,6 @@ def interval_overlap_join(
     right_lo: str,
     right_hi: str,
     bucket_width: float,
-    extra_on: list[str] | None = None,
-    broadcast_right: bool = True,
 ) -> DataFrame:
     """Interval-interval overlap join: [l_lo,l_hi] ∩ [r_lo,r_hi] ≠ ∅.
 
@@ -92,12 +85,8 @@ def interval_overlap_join(
     would match multiple times — instead of a dedup shuffle, a match is
     only accepted in the single bucket containing the overlap's start
     (``bucket == floor(max(lo_l, lo_r)/width)``), so the output is
-    duplicate-free by construction.
-
-    ``extra_on`` mirrors :func:`range_join` (same mechanism, same
-    hazard): with ``broadcast_right=False`` a shuffle on the
-    low-cardinality bucket keys alone is pathologically skewed — pass
-    real join keys to give the shuffle cardinality.
+    duplicate-free by construction.  The right side is broadcast, as in
+    :func:`range_join` and for the same reason.
     """
 
     def exploded(df: DataFrame, lo: str, hi: str) -> DataFrame:
@@ -112,14 +101,11 @@ def interval_overlap_join(
         )
 
     l2 = exploded(left, left_lo, left_hi)
-    r2 = exploded(right, right_lo, right_hi)
-    if broadcast_right:
-        r2 = F.broadcast(r2)
-    on = ["__bucket"] + (extra_on or [])
+    r2 = F.broadcast(exploded(right, right_lo, right_hi))
     # per-side refs: bare F.col() is ambiguous for same-schema sides
     overlap_start = F.greatest(l2[left_lo], r2[right_lo])
     return (
-        l2.join(r2, on=on, how="inner")
+        l2.join(r2, on=["__bucket"], how="inner")
         .where(
             (l2[left_lo] <= r2[right_hi])
             & (r2[right_lo] <= l2[left_hi])
@@ -136,19 +122,15 @@ def asof_join(
     left_time: str,
     right_time: str,
     right_values: list[str],
-    direction: str = "backward",
 ) -> DataFrame:
     """As-of join: for each left row, the most recent right row with
-    ``right_time <= left_time`` (direction='backward'; 'forward' gives the
-    earliest right row at-or-after), matched on key ``on``.
+    ``right_time <= left_time``, matched on key ``on``.
 
     Implementation: tag and union both sides, then one window pass
     ordered by (time, side) carrying the last non-null right values
     forward within each key.  Exactly one shuffle (partition by key),
     no per-row probe — survives arbitrarily large sides.
     """
-    if direction not in ("backward", "forward"):
-        raise ValueError(f"direction must be backward|forward, got {direction}")
     clash = sorted(set(right_values) & set(left.columns))
     if clash:
         raise ValueError(
@@ -195,19 +177,12 @@ def asof_join(
     # (partitioning-dependent — breaking the repo's bit-for-bit oracle
     # contract); struct ordering makes "the greatest value row wins"
     # deterministic.  Requires orderable value types (maps excluded).
-    if direction == "backward":
-        # right rows sort before left rows at equal time => <= semantics
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__t").asc(), F.col("__side").desc(), F.col("__r").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
-    else:
-        w = (
-            Window.partitionBy("__k")
-            .orderBy(F.col("__t").desc(), F.col("__side").desc(), F.col("__r").asc())
-            .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-        )
+    # right rows sort before left rows at equal time => <= semantics
+    w = (
+        Window.partitionBy("__k")
+        .orderBy(F.col("__t").asc(), F.col("__side").desc(), F.col("__r").asc())
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
 
     filled = both.select(
         "__side",

@@ -119,14 +119,14 @@ FEATURES_SCHEMA = StructType(
 _FEATURE_CODECS: list[tuple[str, object]] = []
 
 
-def register_feature_codec(name: str, decode, *, prepend: bool = False) -> None:
+def register_feature_codec(name: str, decode) -> None:
     """Plug a real decoder (Pillow JPEG, ffmpeg MP4, an ONNX encoder...)
     into :func:`extract_features` without touching operator code.
 
     ``decode(blob)`` must return a ``_FEATURE_DIM``-float list for blobs
     it recognizes and ``None`` otherwise (sniff-by-magic-bytes, the way
-    the built-in PPM/WAV codecs do).  ``prepend=True`` puts the codec
-    ahead of the built-ins, letting a deployment override them.
+    the built-in PPM/WAV codecs do).  Codecs are tried in registration
+    order, after the built-ins.
 
     Cluster note: :func:`extract_features` snapshots the registry into
     its ``mapInPandas`` closure, so cloudpickle ships the registered
@@ -135,17 +135,14 @@ def register_feature_codec(name: str, decode, *, prepend: bool = False) -> None:
     workers (its imports must still resolve there if the callable
     imports lazily, which real codec bindings do).
     """
-    if prepend:
-        _FEATURE_CODECS.insert(0, (name, decode))
-    else:
-        _FEATURE_CODECS.append((name, decode))
+    _FEATURE_CODECS.append((name, decode))
 
 
 def unregister_feature_codec(name: str) -> None:
     _FEATURE_CODECS[:] = [(n, d) for n, d in _FEATURE_CODECS if n != name]
 
 
-def extract_features(df: DataFrame, batch_size_hint: int = 256) -> DataFrame:
+def extract_features(df: DataFrame) -> DataFrame:
     """Feature extraction over Arrow batches via ``mapInPandas``.
 
     The iterator-of-batches signature is the real production shape:
@@ -789,34 +786,29 @@ def image_near_dup_pairs(
     Scale shape: one mapInPandas pass for hashes, then the SHARED
     banded-Hamming pipeline (``dedup.banded_hamming_pairs`` — one
     fixed-width-key shuffle, capped in-bucket expansion); image BYTES
-    never shuffle, only 8-byte hashes do.
+    never shuffle, only 8-byte hashes do.  ``max_bucket_size`` caps
+    degenerate buckets — run ``dedup.banded_hamming_capped_buckets``
+    over the same :func:`image_phash` hashes and banding to see exactly
+    what a cap dropped (no-silent-caps discipline).
+
+    Banding note: :func:`image_phash` populates ``min(60,
+    hash_size**2)`` bits — banding a hardcoded 60 at ``hash_size < 8``
+    would make the upper bands identically zero (every image collides
+    there → capped mega-buckets silently drop), hence
+    ``bits=min(60, hash_size**2)``.
     """
     from yet_another_map_reduce_spark.operators.dedup import banded_hamming_pairs
 
     return banded_hamming_pairs(
-        _image_fingerprints(df, hash_size, kind),
+        image_phash(df, hash_size=hash_size, kind=kind).where(
+            F.col("phash").isNotNull()
+        ),
         hash_col="phash",
         id_col="media_id",
         bits=min(60, hash_size * hash_size),
         bands=bands,
         max_hamming=max_hamming,
         max_bucket_size=max_bucket_size,
-    )
-
-
-def _image_fingerprints(df: DataFrame, hash_size: int, kind: str) -> DataFrame:
-    """Shared hash stage for :func:`image_near_dup_pairs` and its cap
-    report — ONE definition, so the report always describes the same
-    hashing/banding whose buckets the pairs call actually dropped.
-    Undecodable blobs (NULL phash) never reach the banding.
-
-    Banding note: :func:`image_phash` populates ``min(60,
-    hash_size**2)`` bits — banding a hardcoded 60 at ``hash_size < 8``
-    would make the upper bands identically zero (every image collides
-    there → capped mega-buckets silently drop), so both consumers pass
-    ``bits=min(60, hash_size**2)``."""
-    return image_phash(df, hash_size=hash_size, kind=kind).where(
-        F.col("phash").isNotNull()
     )
 
 
@@ -832,10 +824,8 @@ _MAX_CLIP_ID = 1 << 43
 def _video_frame_fingerprints(
     df: DataFrame, every_ms: int, hash_size: int, kind: str
 ) -> DataFrame:
-    """Shared frame-hash stage for :func:`video_near_dup_pairs` and its
-    cap report — ONE definition, so the report always describes the
-    same sampling/hashing/banding whose buckets the pairs call actually
-    dropped: sample frames, pack the composite frame key, hash.
+    """Frame-hash stage of :func:`video_near_dup_pairs`: sample
+    frames, pack the composite frame key, hash.
 
     The composite key is only sound inside its documented domain
     (``media_id < 2^43``, ``frame_idx < 2^20``); out-of-range rows
@@ -950,74 +940,6 @@ def video_near_dup_pairs(
             F.min("hamming").alias("min_hamming"),
         )
         .where(F.col("n_frame_pairs") >= min_frame_pairs)
-    )
-
-
-def image_near_dup_capped_buckets(
-    df: DataFrame,
-    bands: int = 4,
-    hash_size: int = 8,
-    max_bucket_size: int = 1000,
-    kind: str = "ahash",
-) -> DataFrame:
-    """The no-silent-caps companion to :func:`image_near_dup_pairs`:
-    the perceptual-hash band buckets the ``max_bucket_size`` cap would
-    drop (``dedup.banded_hamming_capped_buckets`` over the same
-    hashes, same banding).  Feed the result to ``skew.skew_stats`` or
-    alert on non-emptiness — an oversized bucket on an image corpus
-    usually means degenerate media (solid frames, test cards) that
-    exact content-hash dedup should absorb before near-dup runs."""
-    from yet_another_map_reduce_spark.operators.dedup import (
-        banded_hamming_capped_buckets,
-    )
-
-    return banded_hamming_capped_buckets(
-        _image_fingerprints(df, hash_size, kind),
-        hash_col="phash",
-        id_col="media_id",
-        bits=min(60, hash_size * hash_size),
-        bands=bands,
-        max_bucket_size=max_bucket_size,
-    )
-
-
-def video_near_dup_capped_buckets(
-    df: DataFrame,
-    every_ms: int = 1000,
-    bands: int = 4,
-    hash_size: int = 8,
-    max_bucket_size: int = 1000,
-    kind: str = "ahash",
-) -> DataFrame:
-    """The no-silent-caps companion to :func:`video_near_dup_pairs`:
-    the frame-hash band buckets its cap would drop, with the exemplar
-    decomposed back into ``(example_clip, example_frame)`` so the
-    offending media is directly inspectable.  An oversized bucket on a
-    video corpus usually means degenerate frames across many clips
-    (black frames, title cards, station idents) — sample those clips,
-    confirm, and either exact-dedup the frames first or raise the cap
-    knowingly."""
-    from yet_another_map_reduce_spark.operators.dedup import (
-        banded_hamming_capped_buckets,
-    )
-
-    report = banded_hamming_capped_buckets(
-        _video_frame_fingerprints(df, every_ms, hash_size, kind),
-        hash_col="phash",
-        id_col="media_id",
-        bits=min(60, hash_size * hash_size),
-        bands=bands,
-        max_bucket_size=max_bucket_size,
-    )
-    return report.select(
-        "band",
-        "band_key",
-        "n_ids",
-        _clip_of("example_id").alias("example_clip"),
-        F.col("example_id")
-        .bitwiseAND(F.lit(FRAME_KEY_SPACE - 1))
-        .cast("bigint")
-        .alias("example_frame"),
     )
 
 

@@ -933,14 +933,15 @@ def train_pq_codebooks(
     SAME pass, assigned by :func:`_pq_codes_expr` and averaged by
     :func:`_member_means` keyed on (subspace, code).  ``1 +
     2·iterations`` Spark jobs under AQE: the seed collect, then a
-    shuffle-map and a result job per iteration.
+    shuffle-map and a result job per iteration.  A corpus whose ``k``
+    lowest-id rows hold no non-NULL vector (an empty corpus, say) trains
+    no model: the list is empty, as :func:`_ivf_lloyd` returns no
+    centroids.
     """
     rows = corpus.orderBy(F.col(id_col).asc()).limit(k).select(vec_col).collect()
     vecs = [[float(x) for x in r[vec_col]] for r in rows if r[vec_col] is not None]
     if not vecs:
-        raise ValueError(
-            "train_pq_codebooks: corpus has no non-NULL vectors to seed from"
-        )
+        return []
     dim = len(vecs[0])
     if dim % m:
         # FAISS raises on d % M too: silently training on dim//m-sized
@@ -1028,8 +1029,11 @@ def _pq_codes_expr(vec_col: str, books: list[list[list[float]]]) -> Column:
     driver constructs it per job).  ``F.expr`` parses the same
     expression tree JVM-side in ~3 ms; semantics are identical
     (same zip_with/aggregate folds, same 6-digit round, same
-    struct-min argmin with ties to the lower code id).
+    struct-min argmin with ties to the lower code id).  No codebooks (an
+    empty training corpus) give an empty code array.
     """
+    if not books:
+        return F.expr("cast(array() as array<int>)")
     m = len(books)
     sub = len(books[0][0])
     v = f"transform(`{vec_col}`, x -> cast(x as double))"
@@ -1125,7 +1129,10 @@ def _adc_lut(books: list[list[list[float]]]) -> Column:
 
     Generated as ONE SQL string (r15, same rationale as
     :func:`_pq_codes_expr`): the Column-API form cost ~0.85 s of py4j
-    round trips per plan construction."""
+    round trips per plan construction.  No codebooks give an empty
+    table."""
+    if not books:
+        return F.expr("cast(array() as array<array<double>>)")
     m = len(books)
     sub = len(books[0][0])
 
@@ -1147,7 +1154,10 @@ def _adc_dist_from_lut(m: int) -> Column:
     corpus row's ``pq_codes``: the 6-rounded sum of the ``m`` table
     entries the codes select.  Identical values to deriving the table
     in-row (same per-entry rounding, same left-to-right summation) —
-    the split is purely an evaluation-count optimization."""
+    the split is purely an evaluation-count optimization.  With no
+    subspaces (no codebooks) the distance is NULL."""
+    if not m:
+        return F.lit(None).cast("double")
     terms = [
         F.element_at(
             F.element_at(F.col("__lut"), s + 1),

@@ -570,7 +570,6 @@ def decontaminate(
     threshold: float = 0.01,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_holdout: bool = True,
 ) -> DataFrame:
     """Benchmark decontamination: flag training documents sharing word
     n-grams with a holdout/eval set — the overlap check every serious
@@ -586,7 +585,7 @@ def decontaminate(
     a report that omits short docs drops them from the corpus).
 
     Scale shape: a benchmark-eval-sized holdout's distinct-gram relation
-    is broadcast (default) — the 100 TB train side is scanned once, and
+    is broadcast — the 100 TB train side is scanned once, and
     each doc's distinct gram md5 keys come map-only out of
     ``explode(array_distinct(transform(shingles(toks, n), md5)))`` in
     codegen (per-document distinct grams are local by definition, so no
@@ -595,10 +594,7 @@ def decontaminate(
     (``text_decontaminate`` 1.65 → 1.31 s median, won 10/10 interleaved
     pairs, sf0.1, local[4] on 4 shared vCPUs) and needs no Python
     worker, so no executor needs the package.  The per-doc rollup aggregates with
-    map-side partials.  ``broadcast_holdout=False`` switches the
-    overlap probe to a plain equi-join on the md5 key for holdouts past
-    the broadcast ceiling (e.g. decontaminating one corpus against
-    another corpus) — same result, one extra shuffle.
+    map-side partials.
     """
     hold_grams = (
         _gram_keys(holdout, text_col, id_col, n).select("g").distinct()
@@ -608,13 +604,12 @@ def decontaminate(
     # count("g") never counts it, so it folds to the zero-count row with
     # no extra scan or join over the train relation
     doc_grams = _gram_keys(train, text_col, id_col, n)
-    probe = F.broadcast(hold_grams) if broadcast_holdout else hold_grams
     # ONE pass over the train grams: a flagged LEFT join against the
     # holdout set lets a single aggregate produce both the total and
     # the matched count — the r6 scale run caught the previous
     # two-branch form (separate matched/totals aggregates) re-running
     # the whole scan→explode→distinct pipeline twice
-    flagged = doc_grams.join(probe.withColumn("__hit", F.lit(1)), "g", "left")
+    flagged = doc_grams.join(F.broadcast(hold_grams).withColumn("__hit", F.lit(1)), "g", "left")
     ratio = F.col("matched_ngrams") / F.greatest(F.col("total_ngrams"), F.lit(1))
     return (
         flagged.groupBy(id_col)

@@ -19,15 +19,6 @@ def _window(partition_by: list[str], order_by: list[Column | str]):
     return Window.partitionBy(*partition_by).orderBy(*order_by)
 
 
-def row_numbered(df: DataFrame, partition_by: list[str], order_by: list[Column | str], alias: str = "rn") -> DataFrame:
-    return df.withColumn(alias, F.row_number().over(_window(partition_by, order_by)))
-
-
-def ranked(df: DataFrame, partition_by: list[str], order_by: list[Column | str], alias: str = "rnk", dense: bool = False) -> DataFrame:
-    fn = F.dense_rank() if dense else F.rank()
-    return df.withColumn(alias, fn.over(_window(partition_by, order_by)))
-
-
 def top_k_per_group(df: DataFrame, partition_by: list[str], order_by: list[Column | str], k: int) -> DataFrame:
     """Top-k rows per group via row_number filter — the distributed
     replacement for any per-group ORDER BY ... LIMIT k."""
@@ -39,14 +30,10 @@ def top_k_per_group(df: DataFrame, partition_by: list[str], order_by: list[Colum
             "operator's internal temp name) — rename it first"
         )
     return (
-        row_numbered(df, partition_by, order_by, alias="__rn")
+        df.withColumn("__rn", F.row_number().over(_window(partition_by, order_by)))
         .where(F.col("__rn") <= k)
         .drop("__rn")
     )
-
-
-def lagged(df: DataFrame, partition_by: list[str], order_by: list[Column | str], col: str, offset: int = 1, alias: str | None = None) -> DataFrame:
-    return df.withColumn(alias or f"{col}_lag{offset}", F.lag(col, offset).over(_window(partition_by, order_by)))
 
 
 def running(df: DataFrame, partition_by: list[str], order_by: list[Column | str], agg_col: Column, alias: str) -> DataFrame:

@@ -565,11 +565,9 @@ def q_window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     li = read_table(spark, sf_dir, "lineitem")
-    ranked = windows.ranked(
-        li.select("l_orderkey", "l_linenumber", "l_extendedprice"),
-        partition_by=["l_orderkey"],
-        order_by=[F.col("l_extendedprice").desc()],
-        alias="price_rank",
+    w = Window.partitionBy("l_orderkey").orderBy(F.col("l_extendedprice").desc())
+    ranked = li.select("l_orderkey", "l_linenumber", "l_extendedprice").withColumn(
+        "price_rank", F.rank().over(w)
     )
     return ranked.withColumn("price_rank", F.col("price_rank").cast("bigint"))
 
@@ -598,12 +596,11 @@ def q_window_running_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_window_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     o = read_table(spark, sf_dir, "orders")
-    return windows.lagged(
-        o.select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice"),
-        partition_by=["o_custkey"],
-        order_by=[F.col("o_orderdate").asc(), F.col("o_orderkey").asc()],
-        col="o_totalprice",
-        alias="prev_totalprice",
+    w = Window.partitionBy("o_custkey").orderBy(
+        F.col("o_orderdate").asc(), F.col("o_orderkey").asc()
+    )
+    return o.select("o_custkey", "o_orderkey", "o_orderdate", "o_totalprice").withColumn(
+        "prev_totalprice", F.lag("o_totalprice", 1).over(w)
     )
 
 
@@ -983,8 +980,8 @@ def q_agg_approx_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal TRUE — a green hash certifies the sketch's error bound
     (upgraded from rows-only)."""
     li = read_table(spark, sf_dir, "lineitem")
-    est = aggregates.approx_distinct_count(
-        li, ["l_returnflag"], "l_partkey", "approx_parts"
+    est = li.groupBy("l_returnflag").agg(
+        F.approx_count_distinct("l_partkey", 0.05).alias("approx_parts")
     )
     exact = li.groupBy("l_returnflag").agg(
         F.countDistinct("l_partkey").alias("n_parts")
@@ -7029,9 +7026,9 @@ ORACLES["pipeline_curation_v2"] = f"""
 """
 
 
-def _pq_train_cte(m: int, k: int, sub: int, iterations: int) -> str:
+def _pq_train_cte(k: int, sub: int, iterations: int) -> str:
     """Chained-CTE replay of ``similarity.train_pq_codebooks``: the
-    vector splits into ``m`` subspaces of ``sub`` dims; per subspace,
+    vector splits into subspaces of ``sub`` dims; per subspace,
     ``k`` L2 centroids seed from the lowest-id vectors and iterate with
     6-rounded distances (ties to the lower cid) and 6-rounded member
     means (empty cells keep the prior centroid) — the same rounded
@@ -7089,7 +7086,7 @@ def _pq_train_cte(m: int, k: int, sub: int, iterations: int) -> str:
 # encodes every vector; the same distance relation doubles as each
 # query's LUT, so the approximate distance is a (s,cid)-join + sum
 ORACLES["ann_pq_topk"] = f"""
-    WITH {_pq_train_cte(4, 8, 16, 2)},
+    WITH {_pq_train_cte(8, 16, 2)},
     pdistf AS (
         SELECT c.vec_id, c.s, kk.cid,
                round(sum((c.x - kk.val) * (c.x - kk.val)), 6) AS d
@@ -7146,7 +7143,7 @@ ORACLES["dedup_canonicalize"] = f"""
 # ann_ivf_topk shape) x PQ CTEs (the ann_pq_topk shape); candidates are
 # cell-mates only, ranked by the same (s,cid)-join ADC sum
 ORACLES["ann_ivfpq_topk"] = f"""
-    WITH {_pq_train_cte(4, 8, 16, 2)},
+    WITH {_pq_train_cte(8, 16, 2)},
     pdistf AS (
         SELECT c.vec_id, c.s, kk.cid,
                round(sum((c.x - kk.val) * (c.x - kk.val)), 6) AS d

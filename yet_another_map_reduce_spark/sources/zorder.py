@@ -79,32 +79,23 @@ def zorder_sql(cols: list[str], bounds: dict[str, tuple[str, str]], bits: int = 
     return "(" + " + ".join(terms) + ")"
 
 
-def zorder_value(
-    df: DataFrame, cols: list[str], bounds: dict[str, tuple[float, float]] | None = None, bits: int = 8
-):
-    """The z-value as a Spark Column over ``df``.  ``bounds`` defaults
-    to the columns' global min/max via one narrow aggregate (driver
-    fetches 2 scalars per column — model-sized, the documented collect
-    bound); pass known bounds to skip that pass."""
-    if bounds is None:
-        row = df.agg(
-            *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
-            *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
-        ).collect()[0]
+def zorder_value(df: DataFrame, cols: list[str], bits: int = 8):
+    """The z-value as a Spark Column over ``df``, bucketed on the
+    columns' global min/max from one narrow aggregate (driver fetches 2
+    scalars per column — model-sized, the documented collect bound)."""
+    row = df.agg(
+        *[F.min(c).cast("double").alias(f"mn_{c}") for c in cols],
+        *[F.max(c).cast("double").alias(f"mx_{c}") for c in cols],
+    ).collect()[0]
+
+    def bound(v: float | None) -> str:
         # an all-NULL column (or empty df) aggregates to None: substitute
         # a degenerate (0, 0) range so zorder_sql's span<=0 branch sends
         # every row to bucket 0 — the NULL-first semantics it already
-        # defines — instead of an opaque TypeError below (r11 ADVICE)
-        bounds = {
-            c: (
-                row[f"mn_{c}"] if row[f"mn_{c}"] is not None else 0.0,
-                row[f"mx_{c}"] if row[f"mx_{c}"] is not None else 0.0,
-            )
-            for c in cols
-        }
-    sql_bounds = {
-        c: (repr(float(mn)), repr(float(mx))) for c, (mn, mx) in bounds.items()
-    }
+        # defines — instead of an opaque TypeError (r11 ADVICE)
+        return repr(float(v if v is not None else 0.0))
+
+    sql_bounds = {c: (bound(row[f"mn_{c}"]), bound(row[f"mx_{c}"])) for c in cols}
     return F.expr(zorder_sql(cols, sql_bounds, bits))
 
 

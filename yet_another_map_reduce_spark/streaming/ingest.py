@@ -273,6 +273,8 @@ def compact_seen(
 
 
 _FP_RANGES_FILE = "_fp_ranges.json"  # _-prefixed: invisible to parquet readers
+#: sorted seen-relation levels at which maintain_ingest runs a major fold
+_MAX_SEEN_LEVELS = 4
 
 
 def _write_fp_ranges(spark, gen_dir: str) -> int:
@@ -457,16 +459,13 @@ def maintain_ingest(
     seen_dir: str,
     keep_versions: int = 2,
     retention_seconds: float = 3600.0,
-    major_seen: bool | str = "auto",
-    max_seen_levels: int = 4,
 ) -> dict:
     """The periodic maintenance job for a running ingest deployment,
     run while the stream is STOPPED (both halves document why): fold
     the per-batch fingerprint directories (:func:`compact_seen` —
-    ``major_seen="auto"``, the default, minors nightly and majors only
-    when the sorted-level count hits ``max_seen_levels``), fold the
-    index's accumulated append segments into one
-    (:func:`compact_ivfpq_index` — search results bit-identical by
+    minors nightly and majors only when the sorted-level count hits
+    ``_MAX_SEEN_LEVELS``), fold the index's accumulated append segments
+    into one (:func:`compact_ivfpq_index` — search results bit-identical by
     that function's contract), then vacuum index versions/segments
     past the retention window (:func:`vacuum_ivfpq_index`).
 
@@ -480,29 +479,25 @@ def maintain_ingest(
     Returns a summary dict: ``seen_fps`` (compacted fingerprint
     count), ``index_version`` (the compacted live version dir), and
     the vacuum stats."""
-    # major_seen=False keeps nightly maintenance O(new data): the raw
-    # batch dirs fold into one new sorted level and existing sorted
-    # generations stay untouched (LSM minor); major_seen=True folds
-    # everything; "auto" (the DEFAULT) is the LSM trigger policy —
-    # minor until the sorted-level count reaches max_seen_levels, then
-    # one major fold.  Auto is the measured right default: probe cost
-    # is level-independent (flat through 8 levels at 200M fps,
-    # BASELINE.md §r13) while a major fold costs 214× a minor at 200M
-    # fps (447.8 s vs 2.09 s, BASELINE.md §r14), so majors should only
-    # fire on the bookkeeping trigger, never every night
-    if major_seen == "auto":
-        levels = (
-            sum(
-                1
-                for d in os.listdir(seen_dir)
-                if d.startswith("batch=")
-                and _load_fp_ranges(os.path.join(seen_dir, d)) is not None
-            )
-            if os.path.isdir(seen_dir)
-            else 0
+    # the LSM trigger policy: a minor fold keeps nightly maintenance
+    # O(new data) — the raw batch dirs fold into one new sorted level
+    # and existing sorted generations stay untouched — until the
+    # sorted-level count reaches _MAX_SEEN_LEVELS, then one major fold.
+    # Probe cost is level-independent (flat through 8 levels at 200M
+    # fps, BASELINE.md §r13) while a major fold costs 214× a minor at
+    # 200M fps (447.8 s vs 2.09 s, BASELINE.md §r14), so majors fire
+    # only on the bookkeeping trigger, never every night
+    levels = (
+        sum(
+            1
+            for d in os.listdir(seen_dir)
+            if d.startswith("batch=")
+            and _load_fp_ranges(os.path.join(seen_dir, d)) is not None
         )
-        major_seen = levels >= max_seen_levels
-    seen_fps = compact_seen(spark, seen_dir, major=major_seen)
+        if os.path.isdir(seen_dir)
+        else 0
+    )
+    seen_fps = compact_seen(spark, seen_dir, major=levels >= _MAX_SEEN_LEVELS)
     live = similarity._resolve_index_dir(index_dir)
     if len(similarity._segment_names(live, index_dir)) > 1:
         version = similarity.compact_ivfpq_index(spark, index_dir)
