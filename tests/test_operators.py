@@ -899,6 +899,33 @@ def test_pq_training_on_empty_corpus_gives_no_rows(spark):
     assert hits.collect() == []
 
 
+def test_persisted_ivfpq_index_built_from_zero_rows_reads_back(spark, tmp_path):
+    """An index built from a zero-row corpus has segments with no data
+    files.  Search, append and compaction read each segment with the
+    schema the build recorded, and give zero rows instead of failing to
+    infer a schema."""
+    empty = spark.createDataFrame([], "vec_id long, embedding array<float>")
+    cents = similarity.train_ivf_centroids(empty, "vec_id", "embedding", 4)
+    books = similarity.train_pq_codebooks(empty, "vec_id", "embedding")
+    index_dir = str(tmp_path / "idx")
+    similarity.build_ivfpq_index(empty, "vec_id", "embedding", index_dir, cents, books)
+
+    def search():
+        return similarity.search_ivfpq_index(
+            spark, index_dir, empty, "vec_id", "embedding", k=2
+        ).collect()
+
+    assert search() == []
+    similarity.append_to_ivfpq_index(spark, index_dir, empty, "vec_id", "embedding")
+    assert search() == []
+    similarity.compact_ivfpq_index(spark, index_dir)
+    assert search() == []
+    (seg,) = similarity._index_segments(spark, index_dir)
+    assert seg.schema.simpleString() == (
+        "struct<neighbor_id:bigint,pq_codes:array<int>,centroid_id:int>"
+    )
+
+
 def test_pq_training_matches_python_lloyd(spark):
     """``train_pq_codebooks`` against a pure-Python per-subspace Lloyd's:
     the lowest-id vectors' subvectors seed each codebook, a subvector

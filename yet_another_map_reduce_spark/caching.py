@@ -41,9 +41,11 @@ from __future__ import annotations
 import os
 import threading
 from collections.abc import Callable, Iterable
+from typing import TYPE_CHECKING
 
-from pyspark.sql import DataFrame
-from pyspark.storagelevel import StorageLevel
+if TYPE_CHECKING:  # stdlib-only at run time: worker.py imports data_version
+    from pyspark.sql import DataFrame
+    from pyspark.storagelevel import StorageLevel
 
 _LOCK = threading.Lock()
 _TRACKED: list[DataFrame] = []

@@ -1437,10 +1437,17 @@ def build_ivfpq_index(
         (int(r["centroid_id"]), [float(x) for x in r["__centv"]])
         for r in centroids.collect()
     )
+    # the schema every segment reads back with (the partition column
+    # comes back as int), kept for segments written from zero rows,
+    # which hold no data file to infer it from
+    id_type = encoded.schema["neighbor_id"].dataType.simpleString()
+    segment_schema = f"neighbor_id {id_type}, pq_codes array<int>, centroid_id int"
     with open(
         os.path.join(build_dir, "_model.json"), "w", encoding="utf-8"
     ) as fh:
-        json.dump({"centroids": cent_rows, "books": books}, fh)
+        json.dump(
+            {"centroids": cent_rows, "books": books, "segment_schema": segment_schema}, fh
+        )
     # same locked OCC check-and-swap as append/compaction: a bare
     # os.replace here could clobber a CURRENT that a concurrent append
     # advanced after this build snapshotted its corpus — silently
@@ -1815,12 +1822,9 @@ def compact_ivfpq_index(spark, index_dir: str) -> str:
 
     live = _resolve_index_dir(index_dir)
     consumed = _consumed_tokens(live, index_dir)
-    parts = _index_data_paths(index_dir)
     from functools import reduce
 
-    union = reduce(
-        DataFrame.unionByName, [spark.read.parquet(p) for p in parts]
-    )
+    union = reduce(DataFrame.unionByName, _index_segments(spark, index_dir))
     seg_name = f"seg_{uuid.uuid4().hex[:12]}"
     (
         union.write.mode("overwrite")
@@ -1961,6 +1965,25 @@ def _index_data_paths(index_dir: str) -> list[str]:
     return [os.path.join(root, s) for s in names]
 
 
+def _index_segments(spark, index_dir: str) -> list[DataFrame]:
+    """Each data segment of an index's live version, read with the
+    segment schema its build recorded in ``_model.json``: a segment
+    written from zero rows holds no data files, and Spark cannot infer
+    a schema from none.  An index without the record (no sidecar, or
+    written before the record) is read with inference."""
+    import json
+    import os
+
+    path = os.path.join(_resolve_index_dir(index_dir), "_model.json")
+    try:
+        with open(path, encoding="utf-8") as fh:
+            schema = json.load(fh).get("segment_schema")
+    except FileNotFoundError:
+        schema = None
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return [reader.parquet(p) for p in _index_data_paths(index_dir)]
+
+
 def load_ivfpq_model(spark, index_dir: str):
     """Load the persisted model halves of a committed IVF-PQ index:
     ``(centroids DataFrame, books)`` reconstructed from the versioned
@@ -2094,8 +2117,8 @@ def search_ivfpq_index(
     from functools import reduce
 
     segs = [
-        spark.read.parquet(p).where(F.col("centroid_id").isin(cells))
-        for p in _index_data_paths(index_dir)
+        seg.where(F.col("centroid_id").isin(cells))
+        for seg in _index_segments(spark, index_dir)
     ]
     idx = reduce(DataFrame.unionByName, segs)
     scored = (

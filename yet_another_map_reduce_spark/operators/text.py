@@ -963,6 +963,80 @@ def _remove_lines_antijoin(
     )
 
 
+def _bigram_rows(batches):
+    """``bigram_lm_score``'s Arrow kernel: per document, its bigram
+    counts plus one marker row per distinct token (``cur`` NULL).  At
+    module level, so a worker that unpickles it imports the package and
+    installs the zip guard (``worker.py``)."""
+    # Vectorized bigram/vocabulary fold (r16, guide §4.2: the former
+    # per-position tuple-dict fold was interpreted Python per
+    # token).  One hash-based pd.factorize per BATCH; per document
+    # the codes are densified (np.unique, C) so each bigram packs
+    # into one int64 (local vocab ≤ doc length keeps Vd² far from
+    # 2^63), np.unique(return_counts) yields the multiplicities,
+    # and the distinct-token markers fall out of the same densify.
+    # Exact-string equality throughout — identical rows to the dict
+    # fold, in sorted rather than first-seen order (order never
+    # survives the downstream aggregates).
+    import numpy as np
+    import pandas as pd
+
+    for pdf in batches:
+        docs = [
+            (did, np.asarray(t, dtype=object))
+            for did, t in zip(pdf["__id"], pdf["__toks"])
+            if t is not None  # NULL text never produced token rows
+        ]
+        ids, prevs, curs, ms = [], [], [], []
+        if docs:
+            flat = np.concatenate([t for _, t in docs])
+            if flat.size:
+                codes, uniq = pd.factorize(flat, use_na_sentinel=False)
+            else:
+                codes = np.empty(0, dtype=np.int64)
+                uniq = np.empty(0, dtype=object)
+            uniq = np.asarray(uniq, dtype=object)
+            pos = 0
+            for did, t in docs:
+                c = np.asarray(codes[pos : pos + t.size], dtype=np.int64)
+                pos += t.size
+                if c.size == 0:
+                    continue
+                du, dinv = np.unique(c, return_inverse=True)
+                vd = np.int64(du.size + 1)
+                b = dinv[:-1] * vd + dinv[1:]
+                if b.size:
+                    ub, m = np.unique(b, return_counts=True)
+                    gprev = du[(ub // vd).astype(np.int64)]
+                    gcur = du[(ub % vd).astype(np.int64)]
+                    ids.append(np.full(ub.size, did, dtype=object))
+                    prevs.append(uniq[gprev])
+                    curs.append(uniq[gcur])
+                    ms.append(np.asarray(m, dtype=np.int64))
+                # vocabulary marker rows (cur=NULL); -1 marks NULL
+                # multiplicity (real counts are always >= 1)
+                ids.append(np.full(du.size, did, dtype=object))
+                prevs.append(uniq[du])
+                curs.append(np.full(du.size, None, dtype=object))
+                ms.append(np.full(du.size, -1, dtype=np.int64))
+        if ids:
+            flat_m = np.concatenate(ms)
+            out = {
+                "__id": pd.Series(np.concatenate(ids), dtype=object),
+                "prev": pd.Series(np.concatenate(prevs), dtype=object),
+                "cur": pd.Series(np.concatenate(curs), dtype=object),
+                "__m": pd.arrays.IntegerArray(flat_m, mask=flat_m < 0),
+            }
+        else:
+            out = {
+                "__id": [],
+                "prev": [],
+                "cur": [],
+                "__m": pd.array([], dtype="Int64"),
+            }
+        yield pd.DataFrame(out)
+
+
 def bigram_lm_score(
     df: DataFrame,
     text_col: str,
@@ -1022,81 +1096,10 @@ def bigram_lm_score(
     # relation (plus the id-only column-pruned scan for empties below).
     from yet_another_map_reduce_spark.operators.dedup import _tokenized
 
-    import pandas as pd
-
     id_t = df.schema[id_col].dataType.simpleString()
-
-    def gen(batches):
-        # Vectorized bigram/vocabulary fold (r16, guide §4.2: the former
-        # per-position tuple-dict fold was interpreted Python per
-        # token).  One hash-based pd.factorize per BATCH; per document
-        # the codes are densified (np.unique, C) so each bigram packs
-        # into one int64 (local vocab ≤ doc length keeps Vd² far from
-        # 2^63), np.unique(return_counts) yields the multiplicities,
-        # and the distinct-token markers fall out of the same densify.
-        # Exact-string equality throughout — identical rows to the dict
-        # fold, in sorted rather than first-seen order (order never
-        # survives the downstream aggregates).
-        import numpy as np
-
-        for pdf in batches:
-            docs = [
-                (did, np.asarray(t, dtype=object))
-                for did, t in zip(pdf["__id"], pdf["__toks"])
-                if t is not None  # NULL text never produced token rows
-            ]
-            ids, prevs, curs, ms = [], [], [], []
-            if docs:
-                flat = np.concatenate([t for _, t in docs])
-                if flat.size:
-                    codes, uniq = pd.factorize(flat, use_na_sentinel=False)
-                else:
-                    codes = np.empty(0, dtype=np.int64)
-                    uniq = np.empty(0, dtype=object)
-                uniq = np.asarray(uniq, dtype=object)
-                pos = 0
-                for did, t in docs:
-                    c = np.asarray(codes[pos : pos + t.size], dtype=np.int64)
-                    pos += t.size
-                    if c.size == 0:
-                        continue
-                    du, dinv = np.unique(c, return_inverse=True)
-                    vd = np.int64(du.size + 1)
-                    b = dinv[:-1] * vd + dinv[1:]
-                    if b.size:
-                        ub, m = np.unique(b, return_counts=True)
-                        gprev = du[(ub // vd).astype(np.int64)]
-                        gcur = du[(ub % vd).astype(np.int64)]
-                        ids.append(np.full(ub.size, did, dtype=object))
-                        prevs.append(uniq[gprev])
-                        curs.append(uniq[gcur])
-                        ms.append(np.asarray(m, dtype=np.int64))
-                    # vocabulary marker rows (cur=NULL); -1 marks NULL
-                    # multiplicity (real counts are always >= 1)
-                    ids.append(np.full(du.size, did, dtype=object))
-                    prevs.append(uniq[du])
-                    curs.append(np.full(du.size, None, dtype=object))
-                    ms.append(np.full(du.size, -1, dtype=np.int64))
-            if ids:
-                flat_m = np.concatenate(ms)
-                out = {
-                    "__id": pd.Series(np.concatenate(ids), dtype=object),
-                    "prev": pd.Series(np.concatenate(prevs), dtype=object),
-                    "cur": pd.Series(np.concatenate(curs), dtype=object),
-                    "__m": pd.arrays.IntegerArray(flat_m, mask=flat_m < 0),
-                }
-            else:
-                out = {
-                    "__id": [],
-                    "prev": [],
-                    "cur": [],
-                    "__m": pd.array([], dtype="Int64"),
-                }
-            yield pd.DataFrame(out)
-
     rows = (
         _tokenized(df, text_col, id_col)
-        .mapInPandas(gen, f"__id {id_t}, prev string, cur string, __m bigint")
+        .mapInPandas(_bigram_rows, f"__id {id_t}, prev string, cur string, __m bigint")
         .withColumnRenamed("__id", id_col)
         .transform(tracked_cache)
     )

@@ -8107,8 +8107,8 @@ def q_ingest_pipeline_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     idx_rows = _reduce(
         DataFrame.unionByName,
         [
-            spark.read.parquet(p).select(F.col("neighbor_id").alias("doc_id"))
-            for p in similarity._index_data_paths(index_dir)
+            seg.select(F.col("neighbor_id").alias("doc_id"))
+            for seg in similarity._index_segments(spark, index_dir)
         ],
     )
     idx = (
@@ -8317,7 +8317,12 @@ ORACLES["ingest_pipeline_stats"] = f"""
                                  t -> t IN {_STOPLIST}))
             - len(string_split({_TEXT_NORM}, ' ')) > 0
     )
-    SELECT CAST((SELECT count(*) FROM base) + 30 AS BIGINT) AS n_docs_in,
+    -- the planted clones copy doc_ids 0-19 and 150-159: 30 of them when
+    -- those ids exist, none on an empty corpus
+    SELECT CAST((SELECT count(*) FROM base)
+                + (SELECT count(*) FROM base
+                   WHERE doc_id < 20 OR (doc_id >= 150 AND doc_id < 160)) AS BIGINT)
+             AS n_docs_in,
            CAST((SELECT count(DISTINCT fp) FROM base) AS BIGINT) AS n_seen_fps,
            CAST(count(*) AS BIGINT) AS n_indexed,
            CAST(bit_xor({_sql_hash64("CAST(doc_id AS VARCHAR)")}) AS BIGINT) AS indexed_hash_xor
